@@ -90,12 +90,12 @@ def main() -> None:
     # "No such file or directory" task failures killing the streaming leg).
     own_scratch = None
     if os.path.isdir("/dev/shm"):
-        if "SPARK_GRAFT_LOCAL_DIR" not in os.environ:
+        if "SPARK_LOCAL_DIRS" not in os.environ:
             import tempfile as _tfmod
 
             own_scratch = _tfmod.mkdtemp(prefix="spark-bench-", dir="/dev/shm")
-            os.environ["SPARK_GRAFT_LOCAL_DIR"] = own_scratch
-        os.environ["TMPDIR"] = os.environ["SPARK_GRAFT_LOCAL_DIR"]
+            os.environ["SPARK_LOCAL_DIRS"] = own_scratch
+        os.environ["TMPDIR"] = os.environ["SPARK_LOCAL_DIRS"]
 
     # host-speed calibration: a fixed single-core Python spin, measured
     # before any Spark work.  This box is shared — steal time varies 0-30%

@@ -37,13 +37,13 @@ def main() -> None:
     from liatrio_otel_collector_spark.entry_queries import QUERIES
     from liatrio_otel_collector_spark.session import get_spark
 
-    if os.path.isdir("/dev/shm") and "SPARK_GRAFT_LOCAL_DIR" not in os.environ:
+    if os.path.isdir("/dev/shm") and "SPARK_LOCAL_DIRS" not in os.environ:
         import tempfile
 
-        os.environ["SPARK_GRAFT_LOCAL_DIR"] = tempfile.mkdtemp(
+        os.environ["SPARK_LOCAL_DIRS"] = tempfile.mkdtemp(
             prefix="bench-extra-", dir="/dev/shm"
         )
-        os.environ["TMPDIR"] = os.environ["SPARK_GRAFT_LOCAL_DIR"]
+        os.environ["TMPDIR"] = os.environ["SPARK_LOCAL_DIRS"]
 
     spark = get_spark(app_name="bench_extra")
     spark.sparkContext.setLogLevel("ERROR")

@@ -11,9 +11,9 @@ for typed marker tokens and promotes them to attribute columns:
 
 Two implementations with identical semantics ("first marker in stream wins"):
 
-- :func:`parse_tokens_udf` — a pandas UDF over Arrow batches (the north-rule
+- :func:`parse_tokens_udf` — an Arrow UDF over Arrow batches (the north-rule
   input_hint mandates vectorized pandas/Arrow UDFs, no per-row Python).  The
-  inner loop is pure NumPy over the flattened token buffer: concatenate +
+  inner loop is pure NumPy over the flat token buffer and its offsets:
   segment-reduceat, no Python-level per-row work.
 - :func:`parse_tokens_expr` — pure Catalyst higher-order functions
   (filter/element_at), used for the oracle-parity queries and available as a
@@ -26,11 +26,9 @@ physical-plan decision, not a semantic one.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 SEVERITIES = np.array(["debug", "info", "warn", "error", "fatal"], dtype=object)
@@ -45,84 +43,10 @@ _PARSE_SCHEMA = StructType(
 )
 
 
-def _make_parse_tokens_udf():
-    """Factory returning the parse pandas UDF.
-
-    Everything the worker-side function touches is defined INSIDE this
-    factory so cloudpickle serializes it **by value**: the UDF works on
-    executors that cannot import this package (driver harnesses running from
-    another cwd, clusters without --py-files).  Module-level functions would
-    pickle by reference and raise ModuleNotFoundError on such workers.
-    """
-    import numpy as _np
-    import pandas as _pd
-
-    severities = _np.array(["debug", "info", "warn", "error", "fatal"], dtype=object)
-
-    # annotations reference module-level pd: type-hint inference runs on the
-    # driver against module globals; the body uses factory-local _np/_pd so
-    # the pickled closure stays self-contained.
-    def parse(tokens: pd.Series) -> pd.DataFrame:
-        n = len(tokens)
-        if n == 0:
-            return _pd.DataFrame({"severity": [], "resource": [], "scope": []})
-        arrs = tokens.to_numpy()
-        # null token lists behave like empty ones (parse -> all-null attrs)
-        lens = _np.fromiter(
-            (0 if a is None else len(a) for a in arrs), dtype=_np.int64, count=n
-        )
-        nonempty = [a for a in arrs if a is not None and len(a)]
-        flat = (
-            _np.concatenate(nonempty).astype(_np.int64)
-            if nonempty
-            else _np.empty(0, dtype=_np.int64)
-        )
-        offsets = _np.zeros(n + 1, dtype=_np.int64)
-        _np.cumsum(lens, out=offsets[1:])
-
-        def first_in_range(lo: int, hi: int) -> _np.ndarray:
-            # Per-segment index of the first flat value in [lo, hi); -1 if
-            # none.  minimum.reduceat over a sentinel-masked index vector —
-            # pure NumPy, no per-row Python.  A sentinel element is appended
-            # so segment starts at flat.size (trailing empty rows) stay valid
-            # reduceat indices without clamping into the PREVIOUS segment.
-            sentinel = flat.size
-            idx = _np.where(
-                (flat >= lo) & (flat < hi),
-                _np.arange(flat.size, dtype=_np.int64),
-                sentinel,
-            )
-            idx = _np.append(idx, _np.int64(sentinel))
-            firsts = _np.minimum.reduceat(idx, offsets[:-1])
-            # empty segments reduce over foreign/sentinel elements — mask
-            # them, and mask "no match" sentinels
-            valid = (offsets[1:] > offsets[:-1]) & (firsts < offsets[1:])
-            return _np.where(valid, firsts, -1)
-
-        def pick(lo: int, hi: int, fmt) -> _np.ndarray:
-            first = first_in_range(lo, hi)
-            out = _np.full(n, None, dtype=object)
-            hit = first >= 0
-            if hit.any():
-                out[hit] = fmt(flat[first[hit]])
-            return out
-
-        sev = pick(10, 15, lambda v: severities[v - 10])
-        res = pick(
-            100, 120, lambda v: _np.char.add("svc-", (v - 100).astype(str)).astype(object)
-        )
-        scp = pick(
-            200, 208, lambda v: _np.char.add("scope-", (v - 200).astype(str)).astype(object)
-        )
-        return _pd.DataFrame({"severity": sev, "resource": res, "scope": scp})
-
-    return pandas_udf(_PARSE_SCHEMA)(parse)
-
-
 def _make_parse_tokens_arrow_udf():
     """Arrow-native parse (pyspark 4.1 arrow_udf): the ListArray's flat
     values buffer and offsets go STRAIGHT into NumPy — zero per-row object
-    creation (the pandas variant materializes one small ndarray per row,
+    creation (a pandas UDF materializes one small ndarray per row,
     which dominates its cost at high parallelism; measured ~5-10x slower).
     Self-contained closure: pickles by value, no package import on workers.
     """
@@ -182,7 +106,6 @@ def _make_parse_tokens_arrow_udf():
     return arrow_udf(_PARSE_SCHEMA)(parse)
 
 
-parse_tokens_pandas_udf = _make_parse_tokens_udf()
 parse_tokens_udf = _make_parse_tokens_arrow_udf()
 
 

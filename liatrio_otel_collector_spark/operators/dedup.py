@@ -575,11 +575,23 @@ def duplicate_clusters(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     # Change detection WITHOUT a per-round join (guide §2.4): labels only ever
     # decrease (every update is a least(...) against the current label), so
     # the exact sum of all labels strictly decreases iff ANY label changed.
-    # Summed as decimal(38,0) — exact at any scale, no overflow, no collision
-    # risk — and read as one scalar per round off the freshly checkpointed
-    # frame, replacing the prev-label equi-join + filter + count of r5.
+    # Summed as decimal(38,0) — exact, no collision risk — and read as one
+    # scalar per round off the freshly checkpointed frame, replacing the
+    # prev-label equi-join + filter + count of r5.  The sum is only a valid
+    # change detector over integral labels that fit it: a non-integral
+    # doc_id (try_cast -> NULL) or a decimal overflow (try_sum -> NULL)
+    # would make NULL == NULL declare convergence after one round, so a
+    # NULL sum over non-empty labels raises instead.
     def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("cluster_id").cast("decimal(38,0)"))).first()[0]
+        total, n = df.agg(
+            F.try_sum(F.col("cluster_id").try_cast("decimal(38,0)")), F.count(F.lit(1))
+        ).first()
+        if total is None and n:
+            raise ValueError(
+                "duplicate_clusters: label sum is NULL (doc_ids must be integral "
+                "and their sum must fit decimal(38,0)); cannot detect convergence"
+            )
+        return total
 
     changed = 1
     prev_round_id: int | None = None

@@ -21,8 +21,10 @@ Scale notes (the part that matters at 10^12 rows):
   handling; AQE skew-join is also on as the runtime backstop).
 - the enrich dim is tiny (20 rows) ⇒ explicit broadcast() hint: no shuffle
   on the fact side for the join.
-- the fan-out persists the enriched frame once and feeds all three sinks
-  (the reference's multi-exporter fan-out K3, config.yaml:124).
+- the fan-out stages the enriched frame once and feeds every sink from the
+  read-back (the reference's multi-exporter fan-out K3, config.yaml:124);
+  batch mode and every streaming micro-batch run the same body,
+  :func:`write_batch`.
 - aggregates are plain groupBy — Spark's partial (map-side) aggregation is
   the analog of the reference's mutex-merged per-goroutine maps
   (github_scraper.go:105-155) and makes the skewed count safe; the salted
@@ -32,6 +34,10 @@ Scale notes (the part that matters at 10^12 rows):
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -39,23 +45,33 @@ from pyspark.sql import functions as F
 
 from ..functions.tokens import parse_tokens_expr, parse_tokens_udf
 from ..functions.ids import span_id, trace_id
-from ..sources.sequences import _SOURCE_EXPR, enrich_dim, sequences
-from .lineage import lineage_manifest
+from ..sources.sequences import enrich_dim, sequences
+from .lineage import combined_row_manifests, lineage_manifest
 
 SALT_BUCKETS = 16
 
+# Parquet settings for the EPHEMERAL staging table only (r6, guide §6): the
+# stage lives on fast node-local scratch and is read back exactly once, so
+# encode CPU is on the critical path while its byte savings buy little —
+# measured at 10M rows: zstd stage write 3.3 s vs snappy 2.3 s (317 MB vs
+# 827 MB), and dictionary encoding off 6.4 s → 5.9 s (the token arrays draw
+# from a 50k-value space; 871 MB → 1.6 GB).  Durable sinks keep the
+# session-wide zstd default and parquet defaults.
+STAGE_COMPRESSION = "snappy"
+STAGE_DICTIONARY = "false"
 
-def resolve_salt_buckets(spark: "SparkSession", cfg: "PipelineConfig") -> int:
-    """Bucket count for the skew salt: explicit config wins; otherwise 16x
-    the cluster's slots (floor SALT_BUCKETS).  The multiple matters twice:
+
+def resolve_salt_buckets(spark: "SparkSession") -> int:
+    """Bucket count for the skew salt: 16x the cluster's slots (floor
+    SALT_BUCKETS).  A fixed count under-spreads once one key dominates —
+    with B=16 a 90%-hot source occupies at most 16 of 32 slots (measured
+    2.07x e2e slowdown at 10M rows).  The multiple matters twice:
     a 90%-hot key lands on at most B partitions, so B must exceed the slot
     count — AND bucket->partition placement is a hash, so per-partition load
     is ~Poisson(B/slots); B = 16x slots keeps that quantization under ~25%
     while staying tiny relative to data (buckets are a shuffle KEY, not
     state).  Scales with the cluster instead of freezing at a local[32]-era
     constant."""
-    if cfg.salt_buckets:
-        return cfg.salt_buckets
     return max(SALT_BUCKETS, 16 * spark.sparkContext.defaultParallelism)
 
 
@@ -67,39 +83,14 @@ class PipelineConfig:
 
     use_udf_parse: bool = True
     sinks: tuple[str, ...] = ("logs", "traces", "metrics")
-    # None = adaptive (resolve_salt_buckets): scaled to cluster slots.  A
-    # FIXED bucket count under-spreads once one key dominates — with B=16 a
-    # 90%-hot source occupies at most 16 of 32 slots (measured 2.07x e2e
-    # slowdown at 10M rows); buckets >= 4x slots keeps every core fed at any
-    # skew ratio, and on a 1000-executor cluster scales to 16x its slots
-    # instead of freezing at a local[32]-era constant.
-    salt_buckets: int | None = None
     output_dir: str | None = None
     sink_format: str = field(default_factory=lambda: os.environ.get("SPARK_GRAFT_SINK_FORMAT", "parquet"))
-    # ephemeral staging location (count-only mode). Order matters (VERDICT r2
-    # item: an inherited disk TMPDIR silently displacing tmpfs caused the r1
-    # bench gap): explicit config > tmpfs when present > TMPDIR > system tmp.
+    # ephemeral staging location. Order matters (VERDICT r2 item: an
+    # inherited disk TMPDIR silently displacing tmpfs caused the r1 bench
+    # gap): explicit config > tmpfs when present > TMPDIR > system tmp.
     scratch_dir: str | None = field(
         default_factory=lambda: os.environ.get("SPARK_GRAFT_SCRATCH")
         or ("/dev/shm" if os.path.isdir("/dev/shm") else os.environ.get("TMPDIR"))
-    )
-    # Codec for the EPHEMERAL staging table only (r6, guide §6): the stage
-    # lives on fast node-local scratch and is read back exactly once, so
-    # compression CPU is on the critical path while its byte savings buy
-    # little — measured at 10M rows: zstd stage write 3.3 s vs snappy 2.3 s
-    # (317 MB vs 827 MB, both trivial for tmpfs/NVMe scratch).  Durable
-    # sinks keep the session-wide zstd default.
-    stage_compression: str = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_STAGE_CODEC", "snappy")
-    )
-    # Parquet dictionary encoding for the staging table (r6, guide §6): the
-    # token arrays draw from a 50k-value space, so the dict build is pure
-    # encode CPU on the critical path (measured at 10M rows: stage write
-    # 6.4 s → 5.9 s with it off) while the size cost (871 MB → 1.6 GB)
-    # lands on ephemeral node-local scratch that is read back once.
-    # Durable sinks keep parquet defaults.
-    stage_dictionary: str = field(
-        default_factory=lambda: os.environ.get("SPARK_GRAFT_STAGE_DICT", "false")
     )
 
 
@@ -139,7 +130,7 @@ def enrich_stage(df: DataFrame, dim: DataFrame) -> DataFrame:
 
 def route_predicates(cfg: PipelineConfig) -> "dict[str, Column]":
     """The row-sink membership predicates, exposed so a single combined
-    manifest pass (streaming/job.py) can compute every row sink's lineage in
+    manifest pass (:func:`write_batch`) can compute every row sink's lineage in
     ONE scan of the enriched frame instead of one re-scan per sink."""
     preds: dict[str, Column] = {}
     if "logs" in cfg.sinks:
@@ -203,35 +194,16 @@ def build_enriched(
     cfg: PipelineConfig | None = None,
     source_df: DataFrame | None = None,
 ) -> DataFrame:
-    """The shared upstream: salted repartition → parse → broadcast enrich."""
+    """The shared upstream: salted repartition → parse → broadcast enrich.
+    ``n_rows`` sizes the generated source and is unused with ``source_df``."""
     cfg = cfg or PipelineConfig()
-    buckets = resolve_salt_buckets(spark, cfg)
     if source_df is None:
-        # Generated-source fast path (guide §2.3 "shuffle fewer bytes" /
-        # §8 "move heavy bytes once"): every sequence column is a pure
-        # function of `id`, so the mandated salted repartition exchanges
-        # ONLY the 8-byte ids (~80 MB at 10M rows) and the wide token
-        # arrays (~1.5 GB) are generated AFTER the exchange — identical
-        # rows, identical salt keys (xxhash64 of the same doc_id string),
-        # one order of magnitude fewer shuffle bytes.  numPartitions is
-        # pinned to the session's shuffle width: the id stream is so small
-        # that AQE would otherwise coalesce the exchange to 1-2 partitions
-        # and serialize the downstream token generation + parse.
-        from ..sources.sequences import sequence_columns
-
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        salted_ids = spark.range(n_rows).repartition(
-            n_part,
-            F.expr(_SOURCE_EXPR),
-            F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(buckets)),
-        )
-        salted = sequence_columns(salted_ids)
-    else:
-        # explicit salted repartition on the skewed source key
-        salted = source_df.repartition(
-            F.col("source"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(buckets)),
-        )
+        source_df = sequences(spark, n_rows)
+    # explicit salted repartition on the skewed source key
+    salted = source_df.repartition(
+        F.col("source"),
+        F.pmod(F.xxhash64("doc_id"), F.lit(resolve_salt_buckets(spark))),
+    )
     parsed = parse_stage(salted, use_udf=cfg.use_udf_parse)
     return enrich_stage(parsed, enrich_dim(spark))
 
@@ -252,6 +224,127 @@ def build_pipeline(
     return {**routed, **aggs}
 
 
+def write_batch(
+    spark: SparkSession,
+    source_df: DataFrame,
+    cfg: PipelineConfig,
+    output_dir: str,
+    batch_id: int,
+    timings: dict[str, float] | None = None,
+) -> dict[str, int]:
+    """The one fan-out body: batch mode is a single call of it, and a stream
+    calls it once per micro-batch.  Writes every sink (multi-exporter fan-out
+    K3) to ``<output_dir>/<sink>/batch_id=K/``, each sink's lineage manifest
+    to ``_lineage/<sink>/batch_id=K/`` and appends one ``_metrics`` row (the
+    obsreport analog K4).  Returns row counts per sink.
+
+    Every batch directory is written with mode "overwrite", so a replayed
+    micro-batch (a crash after the writes but before the checkpoint commit)
+    replaces its sinks and lineage instead of appending duplicates.
+
+    Fan-out strategy: the enriched frame is WRITTEN ONCE to a columnar
+    staging table on scratch and every sink derives from the read-back.  This
+    beats .persist() for wide token rows (measured 3x at 10M rows: the
+    in-memory cache build is GC-bound and anti-scales with cores, while the
+    staged write is pure columnar IO), gives every sink predicate pushdown +
+    column pruning on the staged scan, and its memory does not grow with the
+    batch size — the pattern that works at 100 TB and for catch-up batches
+    of unbounded size."""
+    t0 = time.time()
+    fmt = cfg.sink_format
+    stage_dir = tempfile.mkdtemp(prefix=f"liatrio_stage_b{batch_id}_", dir=cfg.scratch_dir)
+    manifests = None
+    try:
+        build_enriched(spark, 0, cfg, source_df).write.mode("overwrite").option(
+            "compression", STAGE_COMPRESSION
+        ).option("parquet.enable.dictionary", STAGE_DICTIONARY).parquet(stage_dir)
+        t_sinks = time.time()
+        if timings is not None:
+            timings["parse_enrich_stage_write_sec"] = round(t_sinks - t0, 3)
+        enriched = spark.read.parquet(stage_dir)
+        routed = route_stage(enriched, cfg)
+        aggs = aggregate_stage(enriched, routed, cfg)
+        # Row-sink lineage is NOT recomputed per sink: one pass over the
+        # staged frame (a conditional aggregate per membership predicate)
+        # yields every row sink's manifest plus the _input manifest — a
+        # per-sink recompute is one extra scan of the wide token column per
+        # sink.  Persisted so the per-sink slices below run the pass once.
+        manifests = combined_row_manifests(enriched, route_predicates(cfg), batch_id).persist()
+
+        def batch_dir(*parts: str) -> str:
+            # each batch lands in its own batch_id=K hive subdir: readers see
+            # batch_id as a partition column (pruned per-batch access), no
+            # constant column is serialized into every row, and a per-batch
+            # read-back touches ONE batch's files instead of O(batches)
+            return os.path.join(output_dir, *parts, f"batch_id={batch_id}")
+
+        def write_manifest(df: DataFrame, name: str) -> None:
+            # the hive-partitioned batch_id drops out of the file payload; the
+            # `sink` column stays so all _lineage files are union-compatible
+            df.drop("batch_id").coalesce(1).write.mode("overwrite").format(fmt).save(
+                batch_dir("_lineage", name)
+            )
+
+        def write_row_sink(name: str, df: DataFrame) -> None:
+            df.write.mode("overwrite").format(fmt).save(batch_dir(name))
+
+        def write_agg_sink(name: str, df: DataFrame) -> int:
+            # agg sinks are tiny; their manifest comes from the WRITTEN batch
+            # (re-deriving it from the staged frame would re-run the whole
+            # aggregation scan per sink)
+            df.write.mode("overwrite").format(fmt).save(batch_dir(name))
+            written = spark.read.format(fmt).load(batch_dir(name))
+            manifest = lineage_manifest(written, name, batch_id)
+            rows = manifest.collect()
+            write_manifest(spark.createDataFrame(rows, manifest.schema), name)
+            return sum(r["row_count"] for r in rows)
+
+        def write_row_manifests() -> dict[str, int]:
+            for name in ["_input", *routed]:
+                write_manifest(manifests.filter(F.col("sink") == name), name)
+            rows = manifests.groupBy("sink").agg(F.sum("row_count").alias("rc")).collect()
+            return {r["sink"]: r["rc"] for r in rows}
+
+        # sinks write CONCURRENTLY (one driver thread each — Spark's scheduler
+        # interleaves the jobs across the executor pool): per-sink job
+        # scheduling latency is otherwise serial dead time, and every sink
+        # reads the same staged table so there is no recompute between them
+        with ThreadPoolExecutor(max_workers=len(routed) + len(aggs) + 1) as pool:
+            row_futs = [pool.submit(write_row_sink, n, df) for n, df in routed.items()]
+            agg_futs = {n: pool.submit(write_agg_sink, n, df) for n, df in aggs.items()}
+            row_counts = pool.submit(write_row_manifests).result()
+            for f in row_futs:
+                f.result()
+            agg_counts = {n: f.result() for n, f in agg_futs.items()}
+        input_rows = int(row_counts.get("_input", 0))
+        counts = {n: int(row_counts.get(n, 0)) for n in routed} | agg_counts
+        elapsed = time.time() - t0
+        spark.createDataFrame(
+            [
+                (
+                    int(batch_id),
+                    input_rows,
+                    counts.get("logs", 0),
+                    counts.get("traces", 0),
+                    float(elapsed),
+                    float(input_rows / elapsed) if elapsed > 0 else 0.0,
+                )
+            ],
+            "batch_id long, input_rows long, logs_rows long, traces_rows long, "
+            "process_sec double, rows_per_sec double",
+        ).withColumn("processed_at", F.current_timestamp()).write.mode("append").format(
+            fmt
+        ).save(os.path.join(output_dir, "_metrics"))
+        if timings is not None:
+            # route fan-out + per-sink aggregates + lineage off the staged scan
+            timings["route_aggregate_sinks_sec"] = round(time.time() - t_sinks, 3)
+        return counts
+    finally:
+        if manifests is not None:
+            manifests.unpersist()
+        shutil.rmtree(stage_dir, ignore_errors=True)
+
+
 def run_pipeline(
     spark: SparkSession,
     n_rows: int,
@@ -260,98 +353,17 @@ def run_pipeline(
     source_df: DataFrame | None = None,
     timings: dict[str, float] | None = None,
 ) -> dict[str, int]:
-    """Materialize all sinks (multi-exporter fan-out K3) and write
-    per-partition lineage manifests.  Returns row counts per sink.
-
-    Fan-out strategy: the enrich output is WRITTEN ONCE to a columnar staging
-    table and every sink derives from the read-back.  This beats .persist()
-    decisively for wide token rows (measured 3x at 10M rows: the in-memory
-    cache build is GC-bound and anti-scales with cores, while the staged
-    write is pure columnar IO), gives every sink predicate pushdown + column
-    pruning on the staged scan, and is the pattern that actually works at
-    100 TB where no cache tier holds the working set."""
-    import shutil
-    import tempfile
-
+    """Batch mode: one :func:`write_batch` over ``source_df`` (or ``n_rows``
+    generated sequences) into ``cfg.output_dir``.  Without an output
+    directory the sinks go to a scratch directory that is removed
+    afterwards.  Returns row counts per sink."""
     cfg = cfg or PipelineConfig()
-    # ephemeral staging (count-only mode): scratch IO that a cluster puts on
-    # fast node-local storage — cfg.scratch_dir resolves tmpfs-first
-    out_dir = cfg.output_dir or tempfile.mkdtemp(prefix="liatrio_stage_", dir=cfg.scratch_dir)
-    stage_path = os.path.join(out_dir, "_stage")
+    if source_df is None:
+        source_df = sequences(spark, n_rows)
+    if cfg.output_dir:
+        return write_batch(spark, source_df, cfg, cfg.output_dir, batch_id, timings)
+    out_dir = tempfile.mkdtemp(prefix="liatrio_sinks_", dir=cfg.scratch_dir)
     try:
-        import time as _t
-
-        _t0 = _t.time()
-        stage_writer = build_enriched(spark, n_rows, cfg, source_df).write.mode(
-            "overwrite"
-        ).format(cfg.sink_format)
-        if cfg.sink_format == "parquet":
-            stage_writer = stage_writer.option(
-                "compression", cfg.stage_compression
-            ).option("parquet.enable.dictionary", cfg.stage_dictionary)
-        stage_writer.save(stage_path)
-        if timings is not None:
-            # parse + salted repartition + broadcast enrich + staged write
-            timings["parse_enrich_stage_write_sec"] = round(_t.time() - _t0, 3)
-        _t0 = _t.time()
-        enriched = spark.read.format(cfg.sink_format).load(stage_path)
-        sinks = build_pipeline(spark, n_rows, cfg, enriched=enriched)
-        counts: dict[str, int] = {}
-        if cfg.output_dir:
-            import time as _time
-
-            t0 = _time.time()
-            for name, df in sinks.items():
-                path = os.path.join(cfg.output_dir, name)
-                writer = df.write.mode("overwrite").format(cfg.sink_format)
-                if "source" in df.columns and name in ("logs", "traces"):
-                    writer = writer.partitionBy("source")
-                writer.save(path)
-                written = spark.read.format(cfg.sink_format).load(path)
-                counts[name] = written.count()
-                lineage_manifest(df, name, batch_id).write.mode("overwrite").format(
-                    cfg.sink_format
-                ).save(os.path.join(cfg.output_dir, "_lineage", name))
-            # K4 self-observability for batch runs (mirrors streaming _metrics)
-            elapsed = _time.time() - t0
-            input_rows = enriched.count()
-            spark.createDataFrame(
-                [
-                    (
-                        int(batch_id),
-                        int(input_rows),
-                        int(counts.get("logs", 0)),
-                        int(counts.get("traces", 0)),
-                        float(elapsed),
-                        float(input_rows / elapsed) if elapsed > 0 else 0.0,
-                    )
-                ],
-                "batch_id long, input_rows long, logs_rows long, traces_rows long, "
-                "process_sec double, rows_per_sec double",
-            ).withColumn("processed_at", F.current_timestamp()).write.mode("append").format(
-                cfg.sink_format
-            ).save(os.path.join(cfg.output_dir, "_metrics"))
-        else:
-            # count-only mode (bench): ONE action for all sinks — a union of
-            # per-sink counts — instead of one job per sink; per-job
-            # scheduling latency is a fixed serial term that would otherwise
-            # dominate small/low-parallelism runs
-            union = None
-            for name, df in sinks.items():
-                one = df.select(F.lit(name).alias("sink")).groupBy("sink").agg(
-                    F.count(F.lit(1)).alias("n")
-                )
-                union = one if union is None else union.unionByName(one)
-            counts = {r["sink"]: r["n"] for r in union.collect()}
-            for name in sinks:
-                counts.setdefault(name, 0)
-        if timings is not None:
-            # route fan-out + per-sink aggregates off the staged scan
-            timings["route_aggregate_sinks_sec"] = round(_t.time() - _t0, 3)
-        return counts
+        return write_batch(spark, source_df, cfg, out_dir, batch_id, timings)
     finally:
-        # the staging table is scratch either way: remove the whole tempdir
-        # in count-only mode, and just the _stage subdir when real sinks were
-        # written (it's redundant with them and would otherwise double the
-        # storage footprint / pollute output_dir globs)
-        shutil.rmtree(out_dir if not cfg.output_dir else stage_path, ignore_errors=True)
+        shutil.rmtree(out_dir, ignore_errors=True)

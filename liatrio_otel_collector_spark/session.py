@@ -79,12 +79,6 @@ def get_spark(
             "spark.sql.extensions",
             "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
         )
-    # On one box, shuffle + staging IO share a single disk — a serial term a
-    # real cluster doesn't have (per-executor local disks). Benchmarks set
-    # this to a tmpfs path to model per-node IO scaling.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir:
-        b = b.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -78,15 +78,9 @@ END
 """
 
 
-def sequence_columns(df: DataFrame) -> DataFrame:
-    """Attach the deterministic sequence columns to any frame carrying `id`.
-
-    Exposed separately from :func:`sequences` so a consumer that must
-    shuffle the table (the pipeline's mandated salted repartition) can move
-    ONLY the 8-byte ids through the exchange and generate the wide token
-    arrays after it — every column is a pure function of ``id``, so the
-    rows are identical wherever this projection runs (guide §2.3 "project
-    before the exchange", §8 "shuffle a lightweight proxy")."""
+def sequences(spark: SparkSession, n_rows: int, partitions: int | None = None) -> DataFrame:
+    """Materialize the sequences table as a lazy DataFrame of `n_rows` rows."""
+    df = spark.range(0, n_rows, numPartitions=partitions) if partitions else spark.range(n_rows)
     return (
         df.withColumn("n_tok", F.expr("CAST(8 + id % 57 AS INT)"))
         .withColumn("tokens", F.expr(_TOKENS_EXPR))
@@ -94,12 +88,6 @@ def sequence_columns(df: DataFrame) -> DataFrame:
         .withColumn("doc_id", F.col("id").cast("string"))
         .select("doc_id", "tokens", "n_tok", "source", "id")
     )
-
-
-def sequences(spark: SparkSession, n_rows: int, partitions: int | None = None) -> DataFrame:
-    """Materialize the sequences table as a lazy DataFrame of `n_rows` rows."""
-    df = spark.range(0, n_rows, numPartitions=partitions) if partitions else spark.range(n_rows)
-    return sequence_columns(df)
 
 
 def duckdb_sequences_cte(n_rows: int, name: str = "sequences") -> str:

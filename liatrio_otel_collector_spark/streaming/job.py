@@ -7,35 +7,26 @@ execution here:
 
 - the source is a replayable stream (file stream over the sequences table;
   maxFilesPerTrigger is the collection-interval analog);
-- each micro-batch runs the SAME parse → enrich → route → aggregate DAG as
-  batch mode (one code path, two execution modes);
-- ``foreachBatch`` fans the persisted batch out to all sinks (multi-exporter
-  K3), appends a per-partition lineage manifest, and emits a
-  self-observability row (throughput/lag — the obsreport analog K4);
-- the checkpoint directory makes the job resumable: a restart processes only
-  unseen input, and deterministic ids (X4) keep any replayed batch
-  idempotent at the sink.
+- each micro-batch is one call of the batch fan-out body
+  (:func:`~liatrio_otel_collector_spark.plans.pipeline.write_batch`): the
+  SAME parse → enrich → route → aggregate DAG, staging, sink layout,
+  lineage and ``_metrics`` row as batch mode (one code path, two execution
+  modes);
+- micro-batch K writes every sink to ``<sink>/batch_id=K/`` and every
+  lineage manifest to ``_lineage/<sink>/batch_id=K/`` with mode
+  "overwrite": the checkpoint directory makes the job resumable (a restart
+  processes only unseen input), and a micro-batch replayed after a crash
+  before its checkpoint commit replaces its sinks and lineage instead of
+  appending duplicates (its ``_metrics`` row is appended again).
 """
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from ..plans.lineage import combined_row_manifests, lineage_manifest
-from ..plans.pipeline import (
-    PipelineConfig,
-    aggregate_stage,
-    enrich_stage,
-    parse_stage,
-    route_predicates,
-    route_stage,
-)
-from ..sources.sequences import enrich_dim
+from ..plans.pipeline import PipelineConfig, write_batch
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, id bigint"
 
@@ -47,178 +38,6 @@ class StreamingConfig:
     checkpoint_dir: str
     max_files_per_trigger: int = 1
     pipeline: PipelineConfig = field(default_factory=PipelineConfig)
-    # None (default): AUTO-select the fan-out strategy per batch from its
-    # row count — persist below stage_threshold_rows, staged write at or
-    # above it.  Persist measured ~20% faster at 2.5M-row batches (the cache
-    # fits and the write round-trip is pure overhead); the staged pattern
-    # wins 3x at 10M+ rows (cache build is GC-bound and anti-scales) and is
-    # the only memory-independent choice for catch-up batches of unbounded
-    # size (first batch after long downtime, availableNow over days of
-    # input).  True/False pin the strategy explicitly.
-    stage_batches: bool | None = None
-    stage_threshold_rows: int = 5_000_000
-
-
-def _process_batch(spark: SparkSession, cfg: StreamingConfig):
-    dim = enrich_dim(spark)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-        import tempfile
-
-        t0 = time.time()
-        from ..plans.pipeline import resolve_salt_buckets
-
-        # cheap columnar count (zero-column parquet scan) BEFORE any heavy
-        # work: it sizes the batch for the auto fan-out decision and doubles
-        # as input_rows on the staged path
-        n_raw = batch_df.count()
-        stage = (
-            cfg.stage_batches
-            if cfg.stage_batches is not None
-            else n_raw >= cfg.stage_threshold_rows
-        )
-        salted = batch_df.repartition(
-            F.col("source"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(resolve_salt_buckets(spark, cfg.pipeline))),
-        )
-        # fan-out strategy per `stage` (see StreamingConfig): both paths
-        # produce identical sinks; they differ only in where the enriched
-        # frame lives during the in-batch fan-out
-        stage_dir = None
-        enriched = None
-        built = enrich_stage(parse_stage(salted, use_udf=cfg.pipeline.use_udf_parse), dim)
-        try:
-            if stage:
-                stage_dir = tempfile.mkdtemp(
-                    prefix=f"liatrio_stream_b{batch_id}_", dir=cfg.pipeline.scratch_dir
-                )
-                # ephemeral scratch: cheap codec, same rationale as the batch
-                # staging table (PipelineConfig.stage_compression)
-                built.write.mode("overwrite").option(
-                    "compression", cfg.pipeline.stage_compression
-                ).parquet(stage_dir)
-                enriched = spark.read.parquet(stage_dir)
-            else:
-                enriched = built.persist()
-            routed = route_stage(enriched, cfg.pipeline)
-            aggs = aggregate_stage(enriched, routed, cfg.pipeline)
-            preds = route_predicates(cfg.pipeline)
-
-            def _manifest_dir(name: str) -> str:
-                # each batch lands in its own batch_id=K hive subdir so any
-                # per-batch read touches ONE batch's manifest — reading the
-                # whole dir would grow O(batches) and quietly dominate a
-                # long-running stream
-                return os.path.join(
-                    cfg.output_dir, "_lineage", name, f"batch_id={batch_id}"
-                )
-
-            def write_row_sink(item: tuple[str, DataFrame]) -> None:
-                # same batch_id=K hive layout as the agg sinks: readers see
-                # batch_id as a partition column (pruned per-batch access),
-                # and no constant column is serialized into every row
-                name, df = item
-                df.write.mode("append").parquet(
-                    os.path.join(cfg.output_dir, name, f"batch_id={batch_id}")
-                )
-
-            def write_agg_sink(item: tuple[str, DataFrame]) -> None:
-                # agg sinks are tiny; their manifest comes from the WRITTEN
-                # batch subset (re-deriving it from the enriched frame would
-                # re-run the whole aggregation scan per sink).  The batch
-                # lands in its own batch_id=K hive subdir so the read-back
-                # touches ONE batch's files — a flat append + batch_id
-                # filter would list and scan every prior batch's files,
-                # O(batches) per batch and O(B^2) over a stream's lifetime.
-                name, df = item
-                b_path = os.path.join(cfg.output_dir, name, f"batch_id={batch_id}")
-                df.write.mode("append").parquet(b_path)
-                written = spark.read.parquet(b_path)
-                lineage_manifest(written, name, batch_id).drop("batch_id").coalesce(
-                    1
-                ).write.mode("append").parquet(_manifest_dir(name))
-
-            # materialize the shared frame ONCE before fanning out, so
-            # concurrent sinks never race to compute the same partitions: on
-            # the persist path the count FILLS the cache; on the staged path
-            # the write already materialized and n_raw (rows are 1:1 through
-            # parse + left-join enrich) saves the extra job
-            input_rows = n_raw if stage else enriched.count()
-            # sinks write CONCURRENTLY (one driver thread each — Spark's
-            # scheduler interleaves the jobs across the executor pool): on
-            # micro-batches the per-sink job-scheduling latency is serial
-            # dead time, and the five sinks share the persisted/staged
-            # enriched frame so there is no recompute between them.  Row-sink
-            # lineage is NOT recomputed per sink: one combined pass over the
-            # enriched frame (conditional aggregates per membership
-            # predicate) yields every row sink's manifest plus the _input
-            # manifest — the per-sink recompute was one extra scan of the
-            # wide token column per sink, the dominant fan-out overhead.
-            from concurrent.futures import ThreadPoolExecutor
-
-            sinks = {**routed, **aggs}
-            counts: dict[str, int] = {}
-            manifests = None
-            try:
-                if routed:
-                    manifests = combined_row_manifests(
-                        enriched, preds, batch_id
-                    ).persist()
-
-                def write_manifests() -> dict[str, int]:
-                    if manifests is None:
-                        return {}
-                    # keep the `sink` column: agg-sink manifests (and every
-                    # pre-fold batch) retain it, so all _lineage files stay
-                    # union-compatible; only the hive-partitioned batch_id
-                    # drops out of the file payload
-                    for name in ["_input", *routed]:
-                        manifests.filter(F.col("sink") == name).drop(
-                            "batch_id"
-                        ).coalesce(1).write.mode("append").parquet(_manifest_dir(name))
-                    return {
-                        r["sink"]: r["rc"]
-                        for r in manifests.groupBy("sink")
-                        .agg(F.sum("row_count").alias("rc"))
-                        .collect()
-                    }
-
-                tasks = [(write_row_sink, item) for item in routed.items()]
-                tasks += [(write_agg_sink, item) for item in aggs.items()]
-                if sinks or routed:
-                    with ThreadPoolExecutor(max_workers=len(tasks) + 1) as pool:
-                        futs = [pool.submit(fn, item) for fn, item in tasks]
-                        man_fut = pool.submit(write_manifests)
-                        for f in futs:
-                            f.result()
-                        counts = man_fut.result()
-            finally:
-                if manifests is not None:
-                    manifests.unpersist()
-            elapsed = time.time() - t0
-            metrics = spark.createDataFrame(
-                [
-                    (
-                        int(batch_id),
-                        input_rows,
-                        counts.get("logs", 0),
-                        counts.get("traces", 0),
-                        float(elapsed),
-                        float(input_rows / elapsed) if elapsed > 0 else 0.0,
-                    )
-                ],
-                "batch_id long, input_rows long, logs_rows long, traces_rows long, "
-                "process_sec double, rows_per_sec double",
-            ).withColumn("processed_at", F.current_timestamp())
-            metrics.write.mode("append").parquet(os.path.join(cfg.output_dir, "_metrics"))
-        finally:
-            if stage_dir is not None:
-                shutil.rmtree(stage_dir, ignore_errors=True)
-            elif enriched is not None:
-                enriched.unpersist()
-
-    return process
 
 
 def start_stream(spark: SparkSession, cfg: StreamingConfig, available_now: bool = True):
@@ -233,7 +52,9 @@ def start_stream(spark: SparkSession, cfg: StreamingConfig, available_now: bool 
         .parquet(cfg.input_dir)
     )
     writer = (
-        raw.writeStream.foreachBatch(_process_batch(spark, cfg))
+        raw.writeStream.foreachBatch(
+            lambda df, k: write_batch(spark, df, cfg.pipeline, cfg.output_dir, k)
+        )
         .option("checkpointLocation", cfg.checkpoint_dir)
     )
     if available_now:

@@ -32,7 +32,8 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--rows", type=int, default=1_000_000)
     p.add_argument("--output", default=None,
-                   help="sink dir; omit for count-only mode (throughput measurement)")
+                   help="sink dir; omit to write the sinks to a scratch dir that is "
+                   "removed afterwards (throughput measurement)")
     p.add_argument("--streaming", action="store_true")
     p.add_argument("--input", help="input dir of sequence parquet (streaming mode)")
     p.add_argument("--checkpoint", help="checkpoint dir (streaming mode)")
@@ -62,7 +63,7 @@ def main() -> None:
         q.awaitTermination()
         print(json.dumps({"mode": "streaming", "status": "drained"}))
     else:
-        # count-only (no --output): one warmup + best-of-2 measured runs, the
+        # throughput (no --output): one warmup + best-of-2 measured runs, the
         # same steady-state methodology as bench.py / scaling_bench.py
         if not args.output:
             run_pipeline(spark, args.rows, cfg)
@@ -74,7 +75,7 @@ def main() -> None:
                 runs.append(time.time() - t0)
             dt = min(runs)
             print(json.dumps({
-                "mode": "batch-count-only", "rows": args.rows,
+                "mode": "batch-throughput", "rows": args.rows,
                 "sec": round(dt, 2), "runs_sec": [round(r, 2) for r in runs],
                 "routed_sequences_per_sec": round(args.rows / dt, 1),
                 "sink_counts": counts,

@@ -11,7 +11,7 @@ the measured run is steady-state), and reports BOTH N→4N pairs:
   multiplies with node count but a single box cannot.  Measured and reported
   rather than hidden.
 
-Shuffle/staging go to tmpfs (SPARK_GRAFT_LOCAL_DIR): on a cluster those land
+Shuffle/staging go to tmpfs (SPARK_LOCAL_DIRS): on a cluster those land
 on per-node disks that scale with N; on one box both configs would otherwise
 serialize on the same spindle.
 
@@ -59,7 +59,7 @@ def run_at(cores: int, n_rows: int) -> dict:
     env = dict(os.environ)
     ramdir = "/dev/shm/spark-graft"
     os.makedirs(ramdir, exist_ok=True)
-    env["SPARK_GRAFT_LOCAL_DIR"] = ramdir
+    env["SPARK_LOCAL_DIRS"] = ramdir
     env["TMPDIR"] = ramdir
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=1800, env=env

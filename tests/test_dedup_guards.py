@@ -13,6 +13,8 @@ similar pairs sharing cold shingles still surface with EXACT Jaccard
 
 from __future__ import annotations
 
+import pytest
+
 from liatrio_otel_collector_spark.operators.dedup import (
     minhash_candidates,
     ngram_candidates,
@@ -214,6 +216,27 @@ def test_duplicate_clusters_raises_on_nonconvergence(spark):
     )
     with _pytest.raises(RuntimeError, match="no fixpoint"):
         duplicate_clusters(edges, max_iters=1)
+
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_duplicate_clusters_rejects_non_integral_ids(spark, ansi):
+    """dd7: the label-sum convergence check needs integral doc_ids.  String
+    ids cast to a NULL sum, and NULL == NULL must not read as a fixpoint
+    after round 1 (a partial labelling of the 3-hop chain) — it raises, with
+    or without ANSI casts."""
+    from liatrio_otel_collector_spark.operators.dedup import duplicate_clusters
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "doc_a string, doc_b string"
+    )
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        with pytest.raises(ValueError, match="label sum is NULL"):
+            duplicate_clusters(edges).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
 
 
 def test_contamination_probe_cap_enforced(spark, monkeypatch):

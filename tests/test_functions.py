@@ -125,11 +125,10 @@ def test_age_seconds(spark):
 def test_parse_tokens_edge_rows(spark):
     """Regression: a marker at a row's LAST token must survive when the next
     row is empty/null (the reduceat clamp bug), and empty/null token lists
-    parse to all-null attrs instead of crashing. All three parse
+    parse to all-null attrs instead of crashing. Both parse
     implementations must agree."""
     from liatrio_otel_collector_spark.functions.tokens import (
         parse_tokens_expr,
-        parse_tokens_pandas_udf,
         parse_tokens_udf,
     )
 
@@ -148,7 +147,7 @@ def test_parse_tokens_edge_rows(spark):
         "normal": ("info", "svc-5", "scope-3"),
         "no-markers": (None, None, None),
     }
-    for impl in (parse_tokens_udf(F.col("tokens")), parse_tokens_pandas_udf(F.col("tokens")), parse_tokens_expr("tokens")):
+    for impl in (parse_tokens_udf(F.col("tokens")), parse_tokens_expr("tokens")):
         got = {
             r["doc_id"]: (r["p"]["severity"], r["p"]["resource"], r["p"]["scope"])
             for r in df.select("doc_id", impl.alias("p")).collect()

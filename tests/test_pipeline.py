@@ -90,7 +90,8 @@ def test_run_pipeline_writes_sinks(spark, tmp_path):
     cfg = PipelineConfig(output_dir=str(tmp_path))
     counts = run_pipeline(spark, 1000, cfg)
     assert counts["logs"] == sum(1 for i in range(1000) if i % 5 in (2, 3, 4))
-    assert (tmp_path / "logs").exists()
+    # one batch_id=K directory per sink, no source= layout
+    assert sorted(p.name for p in (tmp_path / "logs").iterdir()) == ["batch_id=0"]
     assert (tmp_path / "_lineage" / "logs").exists()
     lineage = spark.read.parquet(str(tmp_path / "_lineage" / "logs"))
     assert lineage.agg(F.sum("row_count")).collect()[0][0] == counts["logs"]

@@ -54,13 +54,10 @@ def test_adaptive_salt_covers_slots_under_extreme_skew(spark):
     16-bucket salt caps the hot key at 16 partitions — at local[32] half the
     cores idle (measured 2.07x e2e).  The adaptive bucket count (4x slots)
     must land hot-key rows on >= 90% of the shuffle partitions."""
-    from liatrio_otel_collector_spark.plans.pipeline import (
-        PipelineConfig,
-        resolve_salt_buckets,
-    )
+    from liatrio_otel_collector_spark.plans.pipeline import resolve_salt_buckets
 
     slots = spark.sparkContext.defaultParallelism
-    buckets = resolve_salt_buckets(spark, PipelineConfig())
+    buckets = resolve_salt_buckets(spark)
     assert buckets >= 16 * slots
     skewed = sequences(spark, N).withColumn(
         "source",

@@ -93,3 +93,24 @@ def test_stream_matches_batch_semantics(spark, tmp_path):
     a = sorted(map(tuple, stream_metrics.collect()))
     b = sorted(map(tuple, batch_metrics.collect()))
     assert a == b
+
+
+def test_replayed_batch_replaces_its_output(spark, tmp_path):
+    """A micro-batch replayed after a crash before its checkpoint commit runs
+    the per-batch body again with the same batch_id into the same output
+    dir: it must replace that batch's sinks and lineage, not duplicate them."""
+    from liatrio_otel_collector_spark.plans.pipeline import PipelineConfig, write_batch
+
+    out = str(tmp_path / "out")
+    batch = sequences(spark, 1000)
+    for _ in range(2):
+        write_batch(spark, batch, PipelineConfig(), out, 3)
+
+    for sink in ("logs", "traces", "metrics", "logs_agg", "traces_agg"):
+        assert [d for d in os.listdir(os.path.join(out, sink)) if d.startswith("batch_id=")] == [
+            "batch_id=3"
+        ]
+    logs = spark.read.parquet(os.path.join(out, "logs"))
+    assert logs.count() == sum(1 for i in range(1000) if i % 5 in (2, 3, 4))
+    lineage = spark.read.parquet(os.path.join(out, "_lineage", "_input"))
+    assert lineage.agg(F.sum("row_count")).collect()[0][0] == 1000
