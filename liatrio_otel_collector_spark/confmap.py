@@ -16,14 +16,23 @@ This module re-expresses that contract over the Spark engine:
 
     load_config(yaml_text)            -> validated CollectorConfig
     assemble(spark, cfg, ctx)         -> {pipeline_name: DataFrame}  (lazy DAG)
-    run_config_pipelines(spark, ...)  -> {pipeline: {exporter: row_count}}
+    write_config_batch(spark, ...)    -> {pipeline: {exporter: row_count}}
+    run_config_pipelines(spark, ...)  -> one write_config_batch, batch_id 0
+    start_config_stream(spark, ...)   -> one write_config_batch per micro-batch
 
 Receivers map to source DataFrames (scraper receivers run their snapshot
 emit over the domain views; push receivers take an injected frame — the
 batch analog of a listening socket). Processors fold left-to-right in
 declaration order, exactly like the collector chains them. Exporters fan
-the SAME DataFrame out (K3): `debug` counts, `file`/`otlphttp` write
-columnar sinks.
+the SAME DataFrame out (K3) through :func:`write_config_batch`, the one
+config sink writer, on the flagship's sink primitives (plans/pipeline.py):
+each pipeline frame is staged once; its lineage manifest goes to
+``_lineage/<pipeline>/batch_id=K/``; every `file`/`otlphttp` exporter
+writes ``<exporter dir>/batch_id=K/`` with mode "overwrite", where the
+exporter dir is ``<path>/<pipeline>`` when a file exporter sets ``path:``
+and ``<output_dir>/<pipeline>/<exporter id, / -> _>`` otherwise; `debug`
+writes nothing; every exporter reports the manifest's row count; and one
+``_metrics`` row is appended per batch.
 
 OTTL programs compile (r4): transform `log_statements` and filter
 `logs.log_record` conditions go through ottl.py — a real statement compiler
@@ -33,15 +42,20 @@ in plans/logs.py use; consecutive transform/filter processors compile as
 one unit so keep_keys-derived schemas inform earlier ParseJSON calls.  The
 named analogs (`analog: ...`) and generic `where:` / `set:` clauses remain
 as shorthand.  `start_config_stream` runs the declared topology
-continuously (foreachBatch re-assembly per micro-batch, checkpointed).
+continuously (foreachBatch re-assembly per micro-batch, checkpointed); a
+replayed micro-batch replaces its sinks and lineage.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import re
+import shutil
+import tempfile
+import time
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession
@@ -55,10 +69,18 @@ from .plans.logs import (
     ottl_parse_body,
     ottl_promote_attrs,
 )
+from .plans.pipeline import (
+    append_metrics,
+    batch_dir,
+    sink_defaults,
+    staged,
+    write_lineage,
+)
 from .plans.samplers import probabilistic_sample, tail_sample_errors
 from .sources.domain import NOW, VIEW_BUILDERS
 from .sources.sequences import sequences
 from .sources.tables import load_tables
+from .streaming.job import start_query
 
 
 class ConfigError(ValueError):
@@ -246,7 +268,7 @@ class AssembleContext:
     frames: dict[str, DataFrame] = field(default_factory=dict)  # push receivers
     components_dim: DataFrame | None = None  # gitlab processor lookup
     output_dir: str | None = None
-    sink_format: str = "parquet"
+    sink_format: str = field(default_factory=lambda: sink_defaults()[0])
 
 
 def _views(spark: SparkSession, ctx: AssembleContext) -> dict[str, DataFrame]:
@@ -609,39 +631,80 @@ def assemble(
     return out
 
 
+def write_config_batch(
+    spark: SparkSession,
+    cfg: CollectorConfig,
+    ctx: AssembleContext,
+    batch_id: int,
+    pipelines: Iterable[str],
+) -> dict[str, dict[str, int]]:
+    """The one config sink writer: materialize each pipeline in ``pipelines``
+    through its exporters as batch ``batch_id`` under ``ctx.output_dir``, in
+    the layout the module docstring gives.  Staging each frame once means
+    the processor chain runs once however many exporters read it."""
+    t0 = time.time()
+    built = assemble(spark, cfg, ctx)
+    results: dict[str, dict[str, int]] = {}
+    routed: dict[str, int] = {}
+    for name in pipelines:
+        exporters = [e for e in cfg.pipelines[name]["exporters"] if e not in cfg.connectors]
+        with staged(
+            spark, built[name], sink_defaults()[1], f"liatrio_cfg_stage_b{batch_id}_"
+        ) as df:
+            routed[name] = write_lineage(
+                spark, df, ctx.output_dir, name, batch_id, ctx.sink_format
+            )
+            for eid in exporters:
+                if _ctype(eid) == "debug":
+                    continue  # the debug exporter prints; it has no sink
+                ecfg = cfg.exporters.get(eid) or {}
+                # a file exporter's `path:` (the collector's fileexporter
+                # key) holds one dir per pipeline
+                root, leaf = (
+                    (str(ecfg["path"]), name)
+                    if ecfg.get("path") is not None
+                    else (os.path.join(ctx.output_dir, name), eid.replace("/", "_"))
+                )
+                df.write.mode("overwrite").format(ecfg.get("format", ctx.sink_format)).save(
+                    batch_dir(root, leaf, batch_id)
+                )
+        results[name] = {eid: routed[name] for eid in exporters}
+    total = sum(routed.values())
+    elapsed = time.time() - t0
+    append_metrics(
+        spark,
+        ctx.output_dir,
+        ctx.sink_format,
+        (
+            int(batch_id),
+            int(total),
+            float(elapsed),
+            float(total / elapsed) if elapsed > 0 else 0.0,
+            str(sorted(routed.items())),
+        ),
+        "batch_id long, routed_rows long, process_sec double, "
+        "rows_per_sec double, per_pipeline string",
+    )
+    return results
+
+
 def run_config_pipelines(
     spark: SparkSession, cfg: CollectorConfig, ctx: AssembleContext | None = None
 ) -> dict[str, dict[str, int]]:
-    """Materialize every pipeline through each of its exporters.
-    `debug` counts the frame (the debug exporter prints it); `file` /
-    `otlphttp` write a columnar sink under ctx.output_dir/<pipeline>/<id>."""
+    """Batch mode: one :func:`write_config_batch` (batch 0) over every
+    pipeline.  Without ``ctx.output_dir`` the sinks, lineage and ``_metrics``
+    go to a scratch directory that is removed afterwards (a file exporter's
+    ``path:`` still receives its sink)."""
     ctx = ctx or AssembleContext()
-    built = assemble(spark, cfg, ctx)
-    results: dict[str, dict[str, int]] = {}
-    for name, df in built.items():
-        results[name] = {}
-        for eid in cfg.pipelines[name]["exporters"]:
-            if eid in cfg.connectors:
-                continue  # bridges into another pipeline; counted there
-            etype = _ctype(eid)
-            if etype == "debug":
-                results[name][eid] = df.count()
-            else:
-                # file exporter honors its configured path (the collector's
-                # fileexporter `path:` key); otherwise sinks land under
-                # output_dir/<pipeline>/<exporter-id>
-                ecfg = cfg.exporters.get(eid) or {}
-                path = ecfg.get("path")
-                if path is None:
-                    if ctx.output_dir is None:
-                        raise ConfigError(f"exporter {eid!r} needs a path or ctx.output_dir")
-                    path = os.path.join(ctx.output_dir, name, eid.replace("/", "_"))
-                else:
-                    path = os.path.join(path, name)
-                fmt = ecfg.get("format", ctx.sink_format)
-                df.write.mode("overwrite").format(fmt).save(path)
-                results[name][eid] = spark.read.format(fmt).load(path).count()
-    return results
+    if ctx.output_dir:
+        return write_config_batch(spark, cfg, ctx, 0, cfg.pipelines)
+    out_dir = tempfile.mkdtemp(prefix="liatrio_cfg_sinks_", dir=sink_defaults()[1])
+    try:
+        return write_config_batch(
+            spark, cfg, dataclasses.replace(ctx, output_dir=out_dir), 0, cfg.pipelines
+        )
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def start_config_stream(
@@ -656,11 +719,12 @@ def start_config_stream(
     """Run the YAML-declared topology CONTINUOUSLY — the collector's actual
     operating mode (a ticking service, config/config.yaml:24-25), not a
     one-shot batch.  ``stream_df`` is a streaming DataFrame standing in for
-    the push receiver ``receiver_id``; every micro-batch re-assembles the
-    SAME declared pipelines with the batch frame injected as that receiver
-    (one topology definition, two execution modes) and appends each
-    non-connector exporter's sink under ctx.output_dir/<pipeline>/<id>.
-    The checkpoint makes the whole config-driven job resumable."""
+    the push receiver ``receiver_id``; micro-batch K is one
+    :func:`write_config_batch` of the pipelines downstream of that receiver,
+    with the batch frame injected as the receiver (one topology definition,
+    two execution modes).  The checkpoint makes the whole config-driven job
+    resumable; ``available_now`` picks the trigger (streaming/job.py
+    ``start_query``)."""
     if ctx.output_dir is None:
         raise ConfigError("start_config_stream needs ctx.output_dir for sinks")
     if not any(
@@ -684,77 +748,16 @@ def start_config_stream(
             if n not in affected and any(r in conns for r in p["receivers"]):
                 affected.add(n)
                 changed = True
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        from .plans.lineage import lineage_manifest
-
-        t0 = _time.time()
-        bctx = AssembleContext(
-            sf_dir=ctx.sf_dir,
-            frames={**ctx.frames, receiver_id: batch_df},
-            components_dim=ctx.components_dim,
-            output_dir=ctx.output_dir,
-            sink_format=ctx.sink_format,
-        )
-        built = assemble(spark, cfg, bctx)
-        rows_per_pipeline: dict[str, int] = {}
-        for name, df in built.items():
-            if name not in affected:
-                continue
-            # each pipeline frame feeds every exporter write PLUS the
-            # lineage manifest — persist it for the fan-out so the
-            # processor chain runs once per batch, not once per consumer
-            # (review finding r4), mirroring streaming/job.py
-            df = df.persist()
-            try:
-                out = df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                for eid in cfg.pipelines[name]["exporters"]:
-                    if eid in cfg.connectors:
-                        continue  # bridged into another pipeline; written there
-                    path = os.path.join(ctx.output_dir, name, eid.replace("/", "_"))
-                    out.write.mode("append").format(ctx.sink_format).save(path)
-                # per-partition lineage + the per-batch row count off its tiny
-                # manifest — same contract as streaming/job.py (north rule:
-                # lineage manifests + self-observability on EVERY streaming path)
-                b_path = os.path.join(
-                    ctx.output_dir, "_lineage", name, f"batch_id={batch_id}"
-                )
-                lineage_manifest(df, name, batch_id).drop("batch_id").coalesce(
-                    1
-                ).write.mode("append").format(ctx.sink_format).save(b_path)
-                rows_per_pipeline[name] = (
-                    spark.read.format(ctx.sink_format)
-                    .load(b_path)
-                    .agg(F.coalesce(F.sum("row_count"), F.lit(0)))
-                    .first()[0]
-                )
-            finally:
-                df.unpersist()
-        elapsed = _time.time() - t0
-        total = sum(rows_per_pipeline.values())
-        spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(total),
-                    float(elapsed),
-                    float(total / elapsed) if elapsed > 0 else 0.0,
-                    str(sorted(rows_per_pipeline.items())),
-                )
-            ],
-            "batch_id long, routed_rows long, process_sec double, "
-            "rows_per_sec double, per_pipeline string",
-        ).withColumn("processed_at", F.current_timestamp()).write.mode(
-            "append"
-        ).format(ctx.sink_format).save(os.path.join(ctx.output_dir, "_metrics"))
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_query(
+        stream_df.writeStream.foreachBatch(
+            lambda df, k: write_config_batch(
+                spark,
+                cfg,
+                dataclasses.replace(ctx, frames={**ctx.frames, receiver_id: df}),
+                k,
+                affected,
+            )
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()

@@ -276,31 +276,6 @@ def assign_cells_local(v: DataFrame, cents: list[tuple[int, list[int]]]) -> Data
     return v.withColumn("cell", _assign_expr(cents)).select("vec_id", "q", "cell")
 
 
-def _lloyd_update(assigned: DataFrame) -> DataFrame:
-    """One Lloyd mean update — element-wise floor(sum/count) per cell, the
-    exact update rule the DuckDB oracle unrolls (empty cells drop out).
-
-    One groupBy("cell") with 64 per-dimension sums instead of the former
-    posexplode → groupBy(cell, pos) → groupBy(cell) re-assembly: same sums,
-    same floor(sum/count), same dropped empty cells, but ONE map-side-
-    combined exchange of ≤ K×65 longs instead of two chained shuffles over
-    an N×64 exploded stream (guide §2.4; measured 0.70 s → 0.35 s per
-    iteration at sf0.1, and at scale the explode of 64 rows per vector —
-    N×64 Generate output feeding the first partial agg — disappears
-    entirely)."""
-    n = F.count(F.lit(1))
-    sums = [F.sum(F.col("q")[i]).alias(f"_s{i}") for i in range(EMBEDDING_DIM)]
-    return assigned.groupBy("cell").agg(n.alias("_n"), *sums).select(
-        "cell",
-        F.array(
-            *[
-                F.floor(F.col(f"_s{i}") / F.col("_n")).cast("bigint")
-                for i in range(EMBEDDING_DIM)
-            ]
-        ).alias("qc"),
-    )
-
-
 def _lloyd_rows(assigned: DataFrame) -> list[tuple[int, list[int]]]:
     """One Lloyd update collected straight to driver rows: the per-cell
     (count, 64 sums) aggregate is the distributed part; the final
@@ -379,17 +354,6 @@ def ivf_kmeans_centroids(
     spark = embeddings.sparkSession
     rows = ivf_kmeans_centroid_rows(embeddings, k, stride, iters)
     return spark.createDataFrame(rows, _CENTROID_SCHEMA)
-
-
-def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vec_id, q, cell): nearest-centroid assignment, exact squared
-    distance on quantized ints, ties to the smaller cell id.  The centroid
-    side is dim-table sized by contract, so it is collected and the N×K
-    arithmetic runs as a literal-expression projection (no join, no window
-    shuffle — guide §2.4)."""
-    return assign_cells_local(
-        _quantized(embeddings).select("vec_id", "q"), collect_centroids(centroids)
-    )
 
 
 def ivf_topk(

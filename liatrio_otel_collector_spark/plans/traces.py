@@ -278,43 +278,3 @@ def workflow_job_spans(events: DataFrame) -> DataFrame:
     # row_number alone reproduces the observable naming.
     _ = n_same
     return job_span.unionByName(queue_span).unionByName(step_spans)
-
-
-# --- githubactions receiver variants (S27) ---------------------------------
-# Same sha256 id scheme as the github receiver, with two deviations
-# (/root/reference/receiver/githubactionsreceiver/trace_event_handling.go):
-
-
-def actions_step_span_id(
-    run_id: Column,
-    attempt: Column,
-    job_name: Column,
-    step_name: Column,
-    position: Column,
-    name_count: Column,
-) -> Column:
-    """generateStepSpanID (:301-317) + processSteps (:319-328): the step
-    number (position index+1, NOT the API step.number) is appended to the
-    key ONLY when the step name is duplicated within the job."""
-    dup_key = F.concat(
-        run_id.cast("string"),
-        attempt.cast("string"),
-        job_name,
-        step_name,
-        (position + 1).cast("string"),
-    )
-    uniq_key = F.concat(run_id.cast("string"), attempt.cast("string"), job_name, step_name)
-    return F.substring(
-        F.sha2(F.when(name_count > 1, dup_key).otherwise(uniq_key), 256), 17, 16
-    )
-
-
-def actions_service_name(
-    custom: Column, prefix: Column, suffix: Column, repo_name: Column
-) -> Column:
-    """generateServiceName (:292-298): custom override wins verbatim; else
-    prefix + formatString(repo) + suffix."""
-    formatted = F.lower(F.regexp_replace(repo_name, "_", "-"))
-    return F.coalesce(
-        F.nullif(custom, F.lit("")), F.concat(prefix, formatted, suffix)
-    )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..plans.pipeline import PipelineConfig, write_batch
 
@@ -40,25 +41,31 @@ class StreamingConfig:
     pipeline: PipelineConfig = field(default_factory=PipelineConfig)
 
 
-def start_stream(spark: SparkSession, cfg: StreamingConfig, available_now: bool = True):
-    """Start (or resume, if the checkpoint exists) the streaming pipeline.
+def start_query(
+    writer: DataStreamWriter, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start ``writer`` checkpointed at ``checkpoint_dir`` (a restart resumes
+    from it).  ``available_now=True`` drains everything currently in the
+    source then stops — the deterministic test/bench mode.  ``False`` runs a
+    continuous micro-batch trigger (the production mode)."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime="10 seconds").start()
 
-    ``available_now=True`` drains everything currently in input_dir then
-    stops — the deterministic test/bench mode.  ``False`` runs a continuous
-    micro-batch trigger (the production mode)."""
+
+def start_stream(spark: SparkSession, cfg: StreamingConfig, available_now: bool = True):
+    """Start (or resume, if the checkpoint exists) the streaming pipeline;
+    ``available_now`` picks the trigger as in :func:`start_query`."""
     raw = (
         spark.readStream.schema(SEQ_SCHEMA)
         .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
         .parquet(cfg.input_dir)
     )
-    writer = (
+    return start_query(
         raw.writeStream.foreachBatch(
             lambda df, k: write_batch(spark, df, cfg.pipeline, cfg.output_dir, k)
-        )
-        .option("checkpointLocation", cfg.checkpoint_dir)
+        ),
+        cfg.checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()

@@ -535,6 +535,79 @@ service:
     assert metrics.agg(F.sum("routed_rows")).first()[0] >= n2
 
 
+def test_config_stream_replay_replaces_its_batch(spark, tmp_path):
+    """A micro-batch replayed after a crash before its checkpoint commit
+    (commits/0 gone, sinks already written) must replace its output, not
+    append a second copy: one batch_id=0 dir per exporter, one batch's rows
+    in it and in the pipeline's lineage.  The stream also honours a file
+    exporter's configured ``path:``."""
+    import os as _os
+
+    from pyspark.sql import functions as F
+
+    from liatrio_otel_collector_spark.confmap import start_config_stream
+    from liatrio_otel_collector_spark.plans.pipeline import parse_stage
+    from liatrio_otel_collector_spark.sources.sequences import sequences
+
+    explicit = tmp_path / "explicit"
+    cfg = load_config(
+        f"""
+receivers:
+  webhookevent: {{}}
+processors:
+  parse_tokens: {{}}
+  filter/logs:
+    where: "severity IN ('warn','error','fatal')"
+exporters:
+  file: {{}}
+  file/explicit:
+    path: {explicit}
+service:
+  pipelines:
+    logs:
+      receivers: [webhookevent]
+      processors: [parse_tokens, filter/logs]
+      exporters: [file]
+    raw:
+      receivers: [webhookevent]
+      processors: []
+      exporters: [file/explicit]
+"""
+    )
+    indir, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    seq_schema = "doc_id string, tokens array<int>, n_tok int, source string, id bigint"
+    sequences(spark, 1000).coalesce(1).write.parquet(_os.path.join(indir, "b0"))
+    ctx = AssembleContext(output_dir=out)
+
+    def run_once():
+        stream = spark.readStream.schema(seq_schema).parquet(indir + "/*")
+        start_config_stream(spark, cfg, ctx, "webhookevent", stream, ckpt).awaitTermination(120)
+
+    run_once()
+    # crash after the sink writes, before the commit: batch 0 replays
+    for f in ("0", ".0.crc"):
+        _os.remove(_os.path.join(ckpt, "commits", f))
+    run_once()
+
+    want_logs = (
+        parse_stage(sequences(spark, 1000))
+        .filter(F.expr("severity IN ('warn','error','fatal')"))
+        .count()
+    )
+    for sink, lineage, want in (
+        (_os.path.join(out, "logs", "file"), "logs", want_logs),
+        (str(explicit / "raw"), "raw", 1000),
+    ):
+        assert spark.read.parquet(sink).count() == want
+        manifest = spark.read.parquet(_os.path.join(out, "_lineage", lineage))
+        assert manifest.agg(F.sum("row_count")).first()[0] == want
+        assert sorted(d for d in _os.listdir(sink) if d.startswith("batch_id=")) == [
+            "batch_id=0"
+        ]
+    # the configured path replaces the default <output_dir>/<pipeline>/<id> dir
+    assert not _os.path.exists(_os.path.join(out, "raw"))
+
+
 def test_duplicate_pipeline_refs_rejected():
     """A duplicated connector exporter would feed the connector the same
     frame twice and silently double every downstream count (review finding

@@ -9,6 +9,7 @@ fixtures as rows and its expected YAMLs as assertions:
 
 from __future__ import annotations
 
+import json
 from datetime import datetime
 
 from pyspark.sql import Row
@@ -220,48 +221,75 @@ def test_duplicate_step_names_dedup(spark):
     assert names == ["build", "build-1", "build-2", "deploy", "test"]
 
 
+def _actions_job_payload(steps, repo="My_Repo", custom_properties=None):
+    """A completed githubactions workflow_job webhook payload (run 7,
+    attempt 1, job "job") with one successful step per name in ``steps``."""
+    step = {
+        "status": "completed",
+        "conclusion": "success",
+        "started_at": "2025-04-16T21:09:02Z",
+        "completed_at": "2025-04-16T21:09:04Z",
+    }
+    return json.dumps(
+        {
+            "action": "completed",
+            "workflow_job": {
+                "id": 1,
+                "run_id": 7,
+                "run_attempt": 1,
+                "status": "completed",
+                "conclusion": "success",
+                "name": "job",
+                "labels": [],
+                "steps": [{**step, "name": n, "number": i + 1} for i, n in enumerate(steps)],
+            },
+            "repository": {
+                "name": repo,
+                "custom_properties": custom_properties or {},
+                "owner": {"login": "o"},
+            },
+            "sender": {"login": "s"},
+        }
+    )
+
+
 def test_actions_step_span_id_variants(spark):
     """githubactionsreceiver: duplicated step names include position index+1
     in the span-id key; unique names omit the number entirely
     (trace_event_handling.go:301-328)."""
     import hashlib
 
-    from pyspark.sql import Window
+    from liatrio_otel_collector_spark.plans.actions_traces import actions_job_spans
 
-    from liatrio_otel_collector_spark.plans.traces import actions_step_span_id
-
-    rows = [(7, 1, "job", n, i) for i, n in enumerate(["build", "test", "build"])]
-    df = spark.createDataFrame(
-        rows, "run_id long, attempt int, job string, step string, pos int"
+    raw = spark.createDataFrame(
+        [(_actions_job_payload(["build", "test", "build"]),)], "payload string"
     )
-    cnt = F.count(F.lit(1)).over(Window.partitionBy("run_id", "attempt", "job", "step"))
+    steps = actions_job_spans(raw).filter(F.col("name") != "job").collect()
     out = {
-        (r["step"], r["pos"]): r["sid"]
-        for r in df.select(
-            "step",
-            "pos",
-            actions_step_span_id(
-                F.col("run_id"), F.col("attempt"), F.col("job"), F.col("step"), F.col("pos"), cnt
-            ).alias("sid"),
-        ).collect()
+        (r["name"], r["attrs"]["ci.github.workflow.job.step.number"]): r["span_id"]
+        for r in steps
     }
-    assert out[("test", 1)] == hashlib.sha256(b"71jobtest").hexdigest()[16:32]
-    assert out[("build", 0)] == hashlib.sha256(b"71jobbuild1").hexdigest()[16:32]
-    assert out[("build", 2)] == hashlib.sha256(b"71jobbuild3").hexdigest()[16:32]
+    assert len(out) == 3
+    assert out[("test", "2")] == hashlib.sha256(b"71jobtest").hexdigest()[16:32]
+    assert out[("build", "1")] == hashlib.sha256(b"71jobbuild1").hexdigest()[16:32]
+    assert out[("build", "3")] == hashlib.sha256(b"71jobbuild3").hexdigest()[16:32]
 
 
 def test_actions_service_name(spark):
-    from liatrio_otel_collector_spark.plans.traces import actions_service_name
+    from liatrio_otel_collector_spark.plans.actions_traces import actions_job_spans
 
-    df = spark.range(1)
-    got = df.select(
-        actions_service_name(
-            F.lit(""), F.lit("ci-"), F.lit("-prod"), F.lit("My_Repo")
-        ).alias("a"),
-        actions_service_name(
-            F.lit("Override_Name"), F.lit("ci-"), F.lit("-prod"), F.lit("My_Repo")
-        ).alias("b"),
-    ).collect()[0]
-    assert got["a"] == "ci-my-repo-prod"
+    raw = spark.createDataFrame([(_actions_job_payload(["build"]),)], "payload string")
+
+    def service_names(**cfg):
+        spans = actions_job_spans(raw, **cfg).collect()
+        return {r["resource"]["service.name"] for r in spans}
+
+    assert service_names(service_name_prefix="ci-", service_name_suffix="-prod") == {
+        "ci-my-repo-prod"
+    }
     # custom override is used VERBATIM (no formatString, :293-295)
-    assert got["b"] == "Override_Name"
+    assert service_names(
+        custom_service_name="Override_Name",
+        service_name_prefix="ci-",
+        service_name_suffix="-prod",
+    ) == {"Override_Name"}
