@@ -25,14 +25,15 @@ emit over the domain views; push receivers take an injected frame — the
 batch analog of a listening socket). Processors fold left-to-right in
 declaration order, exactly like the collector chains them. Exporters fan
 the SAME DataFrame out (K3) through :func:`write_config_batch`, the one
-config sink writer, on the flagship's sink primitives (plans/pipeline.py):
-each pipeline frame is staged once; its lineage manifest goes to
-``_lineage/<pipeline>/batch_id=K/``; every `file`/`otlphttp` exporter
-writes ``<exporter dir>/batch_id=K/`` with mode "overwrite", where the
-exporter dir is ``<path>/<pipeline>`` when a file exporter sets ``path:``
-and ``<output_dir>/<pipeline>/<exporter id, / -> _>`` otherwise; `debug`
-writes nothing; every exporter reports the manifest's row count; and one
-``_metrics`` row is appended per batch.
+config sink writer, on the flagship's fan-out body (plans/pipeline.py
+``fan_out``): each pipeline frame is staged once; its lineage manifest
+goes to ``_lineage/<pipeline>/batch_id=K/``; every `file`/`otlphttp`
+exporter writes ``<exporter dir>/batch_id=K/`` with mode "overwrite",
+concurrently, where the exporter dir is ``<path>/<pipeline>`` when a file
+exporter sets ``path:`` and ``<output_dir>/<pipeline>/<exporter id, / ->
+_>`` otherwise; `debug` writes nothing; every exporter reports the
+manifest's row count; and one ``_metrics`` row per batch goes to
+``_metrics/batch_id=K/`` with mode "overwrite".
 
 OTTL programs compile (r4): transform `log_statements` and filter
 `logs.log_record` conditions go through ottl.py — a real statement compiler
@@ -43,7 +44,9 @@ one unit so keep_keys-derived schemas inform earlier ParseJSON calls.  The
 named analogs (`analog: ...`) and generic `where:` / `set:` clauses remain
 as shorthand.  `start_config_stream` runs the declared topology
 continuously (foreachBatch re-assembly per micro-batch, checkpointed); a
-replayed micro-batch replaces its sinks and lineage.
+replayed micro-batch replaces its sinks, lineage and ``_metrics`` row.  It
+refuses `groupbytrace` and `interval` processors downstream of the
+streaming receiver: their batch twins see one micro-batch at a time.
 """
 
 from __future__ import annotations
@@ -69,13 +72,7 @@ from .plans.logs import (
     ottl_parse_body,
     ottl_promote_attrs,
 )
-from .plans.pipeline import (
-    append_metrics,
-    batch_dir,
-    sink_defaults,
-    staged,
-    write_lineage,
-)
+from .plans.pipeline import Sink, batch_dir, fan_out, sink_defaults, staged, write_metrics
 from .plans.samplers import probabilistic_sample, tail_sample_errors
 from .sources.domain import NOW, VIEW_BUILDERS
 from .sources.sequences import sequences
@@ -140,6 +137,7 @@ _PROCESSOR_TYPES = {
     "trace_ids",
     "rollup",
 }
+_STATEFUL = {"groupbytrace", "interval"}  # state spans batches; refused in a stream
 _EXPORTER_TYPES = {"debug", "file", "otlphttp"}
 _CONNECTOR_TYPES = {"count", "spanmetrics"}
 
@@ -638,52 +636,44 @@ def write_config_batch(
     batch_id: int,
     pipelines: Iterable[str],
 ) -> dict[str, dict[str, int]]:
-    """The one config sink writer: materialize each pipeline in ``pipelines``
-    through its exporters as batch ``batch_id`` under ``ctx.output_dir``, in
-    the layout the module docstring gives.  Staging each frame once means
-    the processor chain runs once however many exporters read it."""
+    """The config writer: materialize each pipeline in ``pipelines`` through
+    its exporters as batch ``batch_id`` under ``ctx.output_dir``, in the
+    layout the module docstring gives.  Each pipeline frame is staged once,
+    so the processor chain runs once however many exporters read it, and is
+    one row sink of the flagship's :func:`~.plans.pipeline.fan_out`: every
+    member, written to its exporter dirs concurrently."""
     t0 = time.time()
     built = assemble(spark, cfg, ctx)
     results: dict[str, dict[str, int]] = {}
     routed: dict[str, int] = {}
     for name in pipelines:
         exporters = [e for e in cfg.pipelines[name]["exporters"] if e not in cfg.connectors]
+        dests = []
+        for eid in exporters:
+            if _ctype(eid) == "debug":
+                continue  # the debug exporter prints; it has no sink
+            ecfg = cfg.exporters.get(eid) or {}
+            # a file exporter's `path:` (the collector's fileexporter key)
+            # holds one dir per pipeline
+            root, leaf = (
+                (str(ecfg["path"]), name)
+                if ecfg.get("path") is not None
+                else (os.path.join(ctx.output_dir, name), eid.replace("/", "_"))
+            )
+            dests.append((batch_dir(root, leaf, batch_id), ecfg.get("format", ctx.sink_format)))
         with staged(
             spark, built[name], sink_defaults()[1], f"liatrio_cfg_stage_b{batch_id}_"
         ) as df:
-            routed[name] = write_lineage(
-                spark, df, ctx.output_dir, name, batch_id, ctx.sink_format
-            )
-            for eid in exporters:
-                if _ctype(eid) == "debug":
-                    continue  # the debug exporter prints; it has no sink
-                ecfg = cfg.exporters.get(eid) or {}
-                # a file exporter's `path:` (the collector's fileexporter
-                # key) holds one dir per pipeline
-                root, leaf = (
-                    (str(ecfg["path"]), name)
-                    if ecfg.get("path") is not None
-                    else (os.path.join(ctx.output_dir, name), eid.replace("/", "_"))
-                )
-                df.write.mode("overwrite").format(ecfg.get("format", ctx.sink_format)).save(
-                    batch_dir(root, leaf, batch_id)
-                )
+            routed[name] = fan_out(
+                spark, df, {name: Sink(df, tuple(dests), F.lit(True))},
+                ctx.output_dir, batch_id, ctx.sink_format,
+            )[name]
         results[name] = {eid: routed[name] for eid in exporters}
-    total = sum(routed.values())
-    elapsed = time.time() - t0
-    append_metrics(
-        spark,
-        ctx.output_dir,
-        ctx.sink_format,
-        (
-            int(batch_id),
-            int(total),
-            float(elapsed),
-            float(total / elapsed) if elapsed > 0 else 0.0,
-            str(sorted(routed.items())),
-        ),
-        "batch_id long, routed_rows long, process_sec double, "
-        "rows_per_sec double, per_pipeline string",
+    total, elapsed = sum(routed.values()), time.time() - t0
+    write_metrics(
+        spark, ctx.output_dir, batch_id, ctx.sink_format,
+        (total, elapsed, total / elapsed, str(sorted(routed.items()))),
+        "routed_rows long, process_sec double, rows_per_sec double, per_pipeline string",
     )
     return results
 
@@ -724,7 +714,8 @@ def start_config_stream(
     with the batch frame injected as the receiver (one topology definition,
     two execution modes).  The checkpoint makes the whole config-driven job
     resumable; ``available_now`` picks the trigger (streaming/job.py
-    ``start_query``)."""
+    ``start_query``).  A `groupbytrace` or `interval` processor downstream
+    of ``receiver_id`` raises ConfigError."""
     if ctx.output_dir is None:
         raise ConfigError("start_config_stream needs ctx.output_dir for sinks")
     if not any(
@@ -748,6 +739,11 @@ def start_config_stream(
             if n not in affected and any(r in conns for r in p["receivers"]):
                 affected.add(n)
                 changed = True
+    # their batch twins see one micro-batch at a time: a trace split across
+    # micro-batches would be written as partial rows
+    procs = [pid for n in affected for pid in cfg.pipelines[n]["processors"]]
+    if stateful := sorted(pid for pid in procs if _ctype(pid) in _STATEFUL):
+        raise ConfigError(f"processors {stateful} keep state across micro-batches")
     return start_query(
         stream_df.writeStream.foreachBatch(
             lambda df, k: write_config_batch(

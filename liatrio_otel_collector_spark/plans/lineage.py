@@ -13,112 +13,87 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
+
+
+def _hashable(dt) -> bool:
+    if isinstance(dt, MapType):
+        return False
+    if hasattr(dt, "fields"):  # StructType
+        return all(_hashable(f.dataType) for f in dt.fields)
+    if hasattr(dt, "elementType"):  # ArrayType
+        return _hashable(dt.elementType)
+    return True
+
+
+def _checksum(df: DataFrame) -> Column:
+    """The per-row hash the manifest folds: xxhash64(doc_id, tokens) when the
+    frame carries tokens.  Otherwise the hashable columns — xxhash64 rejects
+    MAP-typed inputs (map iteration order is not canonical), and
+    OTTL-compiled frames carry attrs/resource maps; a map's CONTENT is still
+    covered indirectly wherever it was derived from hashed scalar columns."""
+    if "tokens" in df.columns:
+        return F.xxhash64("doc_id", "tokens")
+    cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
+    return F.xxhash64(*cols) if cols else F.lit(0).cast("bigint")
+
+
+def manifests(df: DataFrame, members: dict[str, Column], batch_id: int = 0) -> DataFrame:
+    """Manifests for every sink in ``members`` ({sink: membership predicate
+    over ``df``}) in ONE scan of ``df``.
+
+    Each predicate becomes a conditional aggregate: count, min and max skip
+    the rows a ``when`` leaves NULL, and so does bit_xor, so sink ``s``'s rows
+    equal ``lineage_manifest(df.filter(members[s]), s)`` exactly — a filter
+    keeps ``df``'s partitioning, so spark_partition_id is the same on both.
+    One manifest per sink would re-read the wide token column once per sink
+    instead.  The explode unpivots the per-partition aggregates, so the heavy
+    aggregation stays ONE plan node however many sinks there are."""
+    key = F.col("doc_id") if "doc_id" in df.columns else F.lit(None).cast("string")
+    names = list(members)
+    base = df.select(
+        key.alias("_key"),
+        _checksum(df).alias("_h"),
+        F.spark_partition_id().alias("_pid"),
+        *[members[n].alias(f"_in{i}") for i, n in enumerate(names)],
+    )
+    aggs = []
+    for i in range(len(names)):
+        inside = F.col(f"_in{i}")
+        aggs += [
+            F.count(F.when(inside, 1)).alias(f"rc{i}"),
+            F.min(F.when(inside, F.col("_key"))).alias(f"mn{i}"),
+            F.max(F.when(inside, F.col("_key"))).alias(f"mx{i}"),
+            # BIT XOR is commutative+associative => order/partition independent
+            F.bit_xor(F.when(inside, F.col("_h"))).cast("bigint").alias(f"ck{i}"),
+        ]
+    per_sink = [
+        F.struct(
+            F.lit(n).alias("sink"),
+            F.col(f"rc{i}").alias("row_count"),
+            F.col(f"mn{i}").alias("min_doc_id"),
+            F.col(f"mx{i}").alias("max_doc_id"),
+            F.col(f"ck{i}").alias("token_checksum"),
+        )
+        for i, n in enumerate(names)
+    ]
+    return (
+        base.groupBy("_pid")
+        .agg(*aggs)
+        .select("_pid", F.explode(F.array(*per_sink)).alias("_m"))
+        .filter(F.col("_m.row_count") > 0)
+        .select(
+            "_m.sink",
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.col("_pid").alias("partition_id"),
+            "_m.row_count",
+            "_m.min_doc_id",
+            "_m.max_doc_id",
+            "_m.token_checksum",
+        )
+    )
 
 
 def lineage_manifest(df: DataFrame, sink: str, batch_id: int = 0) -> DataFrame:
-    has_tokens = "tokens" in df.columns
-    if has_tokens:
-        checksum_src = F.xxhash64("doc_id", "tokens")
-    else:
-        # xxhash64 rejects MAP-typed inputs (map iteration order is not
-        # canonical), and OTTL-compiled frames carry attrs/resource maps —
-        # hash the hashable columns; a map's CONTENT is still covered
-        # indirectly wherever it was derived from hashed scalar columns
-        from pyspark.sql.types import MapType
-
-        def hashable(dt) -> bool:
-            if isinstance(dt, MapType):
-                return False
-            if hasattr(dt, "fields"):  # StructType
-                return all(hashable(f.dataType) for f in dt.fields)
-            if hasattr(dt, "elementType"):  # ArrayType
-                return hashable(dt.elementType)
-            return True
-
-        cols = [f.name for f in df.schema.fields if hashable(f.dataType)]
-        checksum_src = (
-            F.xxhash64(*cols) if cols else F.lit(0).cast("bigint")
-        )
-    key = F.col("doc_id") if "doc_id" in df.columns else F.lit(None).cast("string")
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_h", checksum_src)
-        .groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.min(key).alias("min_doc_id"),
-            F.max(key).alias("max_doc_id"),
-            # BIT XOR is commutative+associative => order/partition independent
-            F.expr("CAST(bit_xor(_h) AS BIGINT)").alias("token_checksum"),
-        )
-        .select(
-            F.lit(sink).alias("sink"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.col("_pid").alias("partition_id"),
-            "row_count",
-            "min_doc_id",
-            "max_doc_id",
-            "token_checksum",
-        )
-    )
-
-
-def combined_row_manifests(
-    enriched: DataFrame, preds: dict[str, Column], batch_id: int = 0
-) -> DataFrame:
-    """Manifests for EVERY row sink plus the ``_input`` frame in ONE scan.
-
-    lineage_manifest per sink re-reads the wide token column once per sink —
-    at B sinks that is B extra passes over the heaviest data in the batch.
-    Here each sink's membership predicate becomes a conditional aggregate
-    over a single scan: bit_xor skips NULLs, so ``bit_xor(CASE WHEN pred
-    THEN h END)`` equals the per-sink recompute exactly, and spark_partition_id
-    is taken on the same un-repartitioned scan a per-sink filter would see —
-    the output rows are value-identical to lineage_manifest's, just computed
-    together.  Returns the UNION shape (sink, batch_id, partition_id,
-    row_count, min_doc_id, max_doc_id, token_checksum); persist before
-    slicing per sink so the heavy pass runs once."""
-    h = F.xxhash64("doc_id", "tokens")
-    names = ["_input", *preds]
-    base = enriched.select(
-        F.col("doc_id"),
-        h.alias("_h"),
-        F.spark_partition_id().alias("_pid"),
-        *[preds[n].alias(f"_f_{n}") for n in preds],
-    )
-    aggs = []
-    for n in names:
-        cond = F.lit(True) if n == "_input" else F.col(f"_f_{n}")
-        aggs += [
-            F.count(F.when(cond, 1)).alias(f"rc_{n}"),
-            F.min(F.when(cond, F.col("doc_id"))).alias(f"mn_{n}"),
-            F.max(F.when(cond, F.col("doc_id"))).alias(f"mx_{n}"),
-            F.expr(
-                "CAST(bit_xor(CASE WHEN "
-                + ("true" if n == "_input" else f"_f_{n}")
-                + " THEN _h END) AS BIGINT)"
-            ).alias(f"ck_{n}"),
-        ]
-    per_pid = base.groupBy("_pid").agg(*aggs)
-    # unpivot with stack so the heavy aggregation is ONE plan node (a
-    # per-sink union would carry B copies of the scan+agg subtree)
-    parts = ", ".join(f"'{n}', rc_{n}, mn_{n}, mx_{n}, ck_{n}" for n in names)
-    return (
-        per_pid.select(
-            "_pid",
-            F.expr(
-                f"stack({len(names)}, {parts}) AS "
-                "(sink, row_count, min_doc_id, max_doc_id, token_checksum)"
-            ),
-        )
-        .filter(F.col("row_count") > 0)
-        .select(
-            "sink",
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.col("_pid").alias("partition_id"),
-            "row_count",
-            "min_doc_id",
-            "max_doc_id",
-            "token_checksum",
-        )
-    )
+    """``df``'s manifest as sink ``sink``: every row is a member."""
+    return manifests(df, {sink: F.lit(True)}, batch_id)

@@ -23,8 +23,9 @@ Scale notes (the part that matters at 10^12 rows):
   on the fact side for the join.
 - the fan-out stages the enriched frame once and feeds every sink from the
   read-back (the reference's multi-exporter fan-out K3, config.yaml:124);
-  batch mode and every streaming micro-batch run the same body,
-  :func:`write_batch`.
+  batch mode and every streaming micro-batch run the same writer,
+  :func:`write_batch`, and it and the config writer share one fan-out body,
+  :func:`fan_out`.
 - aggregates are plain groupBy — Spark's partial (map-side) aggregation is
   the analog of the reference's mutex-merged per-goroutine maps
   (github_scraper.go:105-155) and makes the skewed count safe; the salted
@@ -42,13 +43,13 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokens import parse_tokens_expr, parse_tokens_udf
 from ..functions.ids import span_id, trace_id
 from ..sources.sequences import enrich_dim, sequences
-from .lineage import combined_row_manifests, lineage_manifest
+from .lineage import manifests
 
 SALT_BUCKETS = 16
 
@@ -138,7 +139,7 @@ def enrich_stage(df: DataFrame, dim: DataFrame) -> DataFrame:
 
 def route_predicates(cfg: PipelineConfig) -> "dict[str, Column]":
     """The row-sink membership predicates, exposed so a single combined
-    manifest pass (:func:`write_batch`) can compute every row sink's lineage in
+    manifest pass (:func:`fan_out`) can compute every row sink's lineage in
     ONE scan of the enriched frame instead of one re-scan per sink."""
     preds: dict[str, Column] = {}
     if "logs" in cfg.sinks:
@@ -258,36 +259,97 @@ def staged(
         shutil.rmtree(stage_dir, ignore_errors=True)
 
 
-def write_manifest(
-    manifest: DataFrame, output_dir: str, name: str, batch_id: int, fmt: str
-) -> None:
-    """Write ``name``'s lineage manifest to ``_lineage/<name>/batch_id=K/``.
-    The hive-partitioned batch_id drops out of the file payload; the `sink`
-    column stays so all _lineage files are union-compatible."""
-    manifest.drop("batch_id").coalesce(1).write.mode("overwrite").format(fmt).save(
-        batch_dir(os.path.join(output_dir, "_lineage"), name, batch_id)
+def write_batch_table(df: DataFrame, root: str, name: str, batch_id: int, fmt: str) -> None:
+    """Write one batch's bookkeeping table (a manifest or the ``_metrics``
+    row) as one file to ``<root>/<name>/batch_id=K/`` with mode "overwrite".
+    batch_id moves from the payload into the path."""
+    df.drop("batch_id").coalesce(1).write.mode("overwrite").format(fmt).save(
+        batch_dir(root, name, batch_id)
     )
 
 
-def write_lineage(
-    spark: SparkSession, df: DataFrame, output_dir: str, name: str, batch_id: int, fmt: str
-) -> int:
-    """Compute ``df``'s lineage manifest in one scan, write it, and return
-    its row count (the collected manifest is tiny: one row per partition)."""
-    manifest = lineage_manifest(df, name, batch_id)
-    rows = manifest.collect()
-    write_manifest(spark.createDataFrame(rows, manifest.schema), output_dir, name, batch_id, fmt)
-    return sum(r["row_count"] for r in rows)
+def write_manifests(
+    df: DataFrame, members: dict[str, Column], output_dir: str, batch_id: int, fmt: str
+) -> dict[str, int]:
+    """One manifest pass over ``df`` for every member sink
+    (:func:`~.lineage.manifests`): write each sink's rows to
+    ``_lineage/<sink>/batch_id=K/`` and return its row count, observed by
+    that write itself rather than by a separate collect.  Persisted so the
+    pass runs once however many sinks share it."""
+    manifest = manifests(df, members, batch_id).persist()
+    try:
+        counts = {}
+        for name in members:
+            rows = Observation()
+            write_batch_table(
+                manifest.filter(F.col("sink") == name).observe(rows, F.sum("row_count").alias("n")),
+                os.path.join(output_dir, "_lineage"), name, batch_id, fmt,
+            )
+            counts[name] = rows.get["n"] or 0
+        return counts
+    finally:
+        manifest.unpersist()
 
 
-def append_metrics(
-    spark: SparkSession, output_dir: str, fmt: str, row: tuple, schema: str
+@dataclass(frozen=True)
+class Sink:
+    """``df`` written to every ``(dir, format)`` of ``dests``.  A ROW sink
+    sets ``member``, its membership predicate over the staged frame, and
+    gets its manifest from one pass over that frame.  A DERIVED sink (no
+    ``member``, e.g. a rollup) gets it from its first destination's
+    read-back: re-deriving it from the staged frame would redo the work."""
+
+    df: DataFrame
+    dests: tuple[tuple[str, str], ...] = ()
+    member: Column | None = None
+
+
+def fan_out(
+    spark: SparkSession,
+    staged_df: DataFrame,
+    sinks: dict[str, Sink],
+    output_dir: str,
+    batch_id: int,
+    fmt: str,
+) -> dict[str, int]:
+    """The one fan-out body (the multi-exporter fan-out K3) under both
+    writers, :func:`write_batch` and ``confmap.write_config_batch``: writes
+    every sink to its destinations and its manifest to
+    ``<output_dir>/_lineage/<sink>/batch_id=K/``, all with mode "overwrite",
+    so a replayed batch replaces its output.  Returns row counts per sink.
+
+    Destination writes run CONCURRENTLY, one driver thread each, so Spark
+    interleaves their jobs instead of paying each job's scheduling latency
+    in turn; the row sinks' manifest pass runs on the calling thread."""
+    rows = {n: s.member for n, s in sinks.items() if s.member is not None}
+    writes = [(s.df, d) for n, s in sinks.items() if n in rows for d in s.dests]
+    derived = {n: s for n, s in sinks.items() if n not in rows}
+
+    def write(df: DataFrame, dest: tuple[str, str]) -> None:
+        df.write.mode("overwrite").format(dest[1]).save(dest[0])
+
+    def derive(name: str, sink: Sink) -> int:
+        for dest in sink.dests:
+            write(sink.df, dest)
+        written = spark.read.format(sink.dests[0][1]).load(sink.dests[0][0])
+        return write_manifests(written, {name: F.lit(True)}, output_dir, batch_id, fmt)[name]
+
+    with ThreadPoolExecutor(max_workers=max(1, len(writes) + len(derived))) as pool:
+        write_futs = [pool.submit(write, df, d) for df, d in writes]
+        derived_futs = {n: pool.submit(derive, n, s) for n, s in derived.items()}
+        counts = write_manifests(staged_df, rows, output_dir, batch_id, fmt)
+        for f in write_futs:
+            f.result()
+        return counts | {n: f.result() for n, f in derived_futs.items()}
+
+
+def write_metrics(
+    spark: SparkSession, output_dir: str, batch_id: int, fmt: str, row: tuple, schema: str
 ) -> None:
-    """Append one self-observability row (the obsreport analog K4), stamped
-    with ``processed_at``, to ``<output_dir>/_metrics``."""
-    spark.createDataFrame([row], schema).withColumn(
-        "processed_at", F.current_timestamp()
-    ).write.mode("append").format(fmt).save(os.path.join(output_dir, "_metrics"))
+    """Write one batch's self-observability row (the obsreport analog K4),
+    stamped with ``processed_at``, to ``_metrics/batch_id=K/``."""
+    df = spark.createDataFrame([row], schema).withColumn("processed_at", F.current_timestamp())
+    write_batch_table(df, output_dir, "_metrics", batch_id, fmt)
 
 
 def write_batch(
@@ -298,15 +360,12 @@ def write_batch(
     batch_id: int,
     timings: dict[str, float] | None = None,
 ) -> dict[str, int]:
-    """The one fan-out body: batch mode is a single call of it, and a stream
-    calls it once per micro-batch.  Writes every sink (multi-exporter fan-out
-    K3) to ``<output_dir>/<sink>/batch_id=K/``, each sink's lineage manifest
-    to ``_lineage/<sink>/batch_id=K/`` and appends one ``_metrics`` row (the
-    obsreport analog K4).  Returns row counts per sink.
-
-    Every batch directory is written with mode "overwrite", so a replayed
-    micro-batch (a crash after the writes but before the checkpoint commit)
-    replaces its sinks and lineage instead of appending duplicates.
+    """The flagship writer: batch mode is a single call of it, and a stream
+    calls it once per micro-batch.  One :func:`fan_out` of the staged
+    enriched frame writes the row sinks (``logs``, ``traces``) and the
+    rollups to ``<output_dir>/<sink>/batch_id=K/`` with their manifests,
+    plus the ``_input`` manifest (every staged row, no destination); then
+    one ``_metrics`` row.  Returns row counts per sink.
 
     Fan-out strategy: the enriched frame is WRITTEN ONCE to a columnar
     staging table on scratch and every sink derives from the read-back.  This
@@ -326,71 +385,26 @@ def write_batch(
         if timings is not None:
             timings["parse_enrich_stage_write_sec"] = round(t_sinks - t0, 3)
         routed = route_stage(enriched, cfg)
-        aggs = aggregate_stage(enriched, routed, cfg)
-        # Row-sink lineage is NOT recomputed per sink: one pass over the
-        # staged frame (a conditional aggregate per membership predicate)
-        # yields every row sink's manifest plus the _input manifest — a
-        # per-sink recompute is one extra scan of the wide token column per
-        # sink.  Persisted so the per-sink slices below run the pass once.
-        manifests = combined_row_manifests(enriched, route_predicates(cfg), batch_id).persist()
+        preds = route_predicates(cfg)
 
-        def write_row_sink(name: str, df: DataFrame) -> None:
-            df.write.mode("overwrite").format(fmt).save(batch_dir(output_dir, name, batch_id))
+        def at(name: str) -> tuple[tuple[str, str], ...]:
+            return ((batch_dir(output_dir, name, batch_id), fmt),)
 
-        def write_agg_sink(name: str, df: DataFrame) -> int:
-            # agg sinks are tiny; their manifest comes from the WRITTEN batch
-            # (re-deriving it from the staged frame would re-run the whole
-            # aggregation scan per sink)
-            path = batch_dir(output_dir, name, batch_id)
-            df.write.mode("overwrite").format(fmt).save(path)
-            written = spark.read.format(fmt).load(path)
-            return write_lineage(spark, written, output_dir, name, batch_id, fmt)
-
-        def write_row_manifests() -> dict[str, int]:
-            for name in ["_input", *routed]:
-                write_manifest(
-                    manifests.filter(F.col("sink") == name), output_dir, name, batch_id, fmt
-                )
-            rows = manifests.groupBy("sink").agg(F.sum("row_count").alias("rc")).collect()
-            return {r["sink"]: r["rc"] for r in rows}
-
-        try:
-            # sinks write CONCURRENTLY (one driver thread each — Spark's
-            # scheduler interleaves the jobs across the executor pool):
-            # per-sink job scheduling latency is otherwise serial dead time,
-            # and every sink reads the same staged table so there is no
-            # recompute between them
-            with ThreadPoolExecutor(max_workers=len(routed) + len(aggs) + 1) as pool:
-                row_futs = [pool.submit(write_row_sink, n, df) for n, df in routed.items()]
-                agg_futs = {n: pool.submit(write_agg_sink, n, df) for n, df in aggs.items()}
-                row_counts = pool.submit(write_row_manifests).result()
-                for f in row_futs:
-                    f.result()
-                agg_counts = {n: f.result() for n, f in agg_futs.items()}
-            input_rows = int(row_counts.get("_input", 0))
-            counts = {n: int(row_counts.get(n, 0)) for n in routed} | agg_counts
-            elapsed = time.time() - t0
-            append_metrics(
-                spark,
-                output_dir,
-                fmt,
-                (
-                    int(batch_id),
-                    input_rows,
-                    counts.get("logs", 0),
-                    counts.get("traces", 0),
-                    float(elapsed),
-                    float(input_rows / elapsed) if elapsed > 0 else 0.0,
-                ),
-                "batch_id long, input_rows long, logs_rows long, traces_rows long, "
-                "process_sec double, rows_per_sec double",
-            )
-            if timings is not None:
-                # route fan-out + per-sink aggregates + lineage off the staged scan
-                timings["route_aggregate_sinks_sec"] = round(time.time() - t_sinks, 3)
-            return counts
-        finally:
-            manifests.unpersist()
+        sinks = {"_input": Sink(enriched, member=F.lit(True))}
+        sinks |= {n: Sink(df, at(n), preds[n]) for n, df in routed.items()}
+        sinks |= {n: Sink(df, at(n)) for n, df in aggregate_stage(enriched, routed, cfg).items()}
+        counts = fan_out(spark, enriched, sinks, output_dir, batch_id, fmt)
+        rows, elapsed = counts.pop("_input"), time.time() - t0
+        write_metrics(
+            spark, output_dir, batch_id, fmt,
+            (rows, counts.get("logs", 0), counts.get("traces", 0), elapsed, rows / elapsed),
+            "input_rows long, logs_rows long, traces_rows long, "
+            "process_sec double, rows_per_sec double",
+        )
+        if timings is not None:
+            # route fan-out + per-sink aggregates + lineage off the staged scan
+            timings["route_aggregate_sinks_sec"] = round(time.time() - t_sinks, 3)
+        return counts
 
 
 def run_pipeline(

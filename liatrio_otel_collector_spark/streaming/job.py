@@ -7,17 +7,17 @@ execution here:
 
 - the source is a replayable stream (file stream over the sequences table;
   maxFilesPerTrigger is the collection-interval analog);
-- each micro-batch is one call of the batch fan-out body
+- each micro-batch is one call of the batch writer
   (:func:`~liatrio_otel_collector_spark.plans.pipeline.write_batch`): the
   SAME parse → enrich → route → aggregate DAG, staging, sink layout,
   lineage and ``_metrics`` row as batch mode (one code path, two execution
   modes);
-- micro-batch K writes every sink to ``<sink>/batch_id=K/`` and every
-  lineage manifest to ``_lineage/<sink>/batch_id=K/`` with mode
-  "overwrite": the checkpoint directory makes the job resumable (a restart
-  processes only unseen input), and a micro-batch replayed after a crash
-  before its checkpoint commit replaces its sinks and lineage instead of
-  appending duplicates (its ``_metrics`` row is appended again).
+- micro-batch K writes every sink to ``<sink>/batch_id=K/``, every lineage
+  manifest to ``_lineage/<sink>/batch_id=K/`` and its ``_metrics`` row to
+  ``_metrics/batch_id=K/``, all with mode "overwrite": the checkpoint
+  directory makes the job resumable (a restart processes only unseen
+  input), and a micro-batch replayed after a crash before its checkpoint
+  commit replaces its output instead of appending duplicates.
 """
 
 from __future__ import annotations

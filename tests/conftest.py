@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import SparkSession
 
 from liatrio_otel_collector_spark.session import get_spark
 
@@ -14,3 +15,16 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def no_streaming_query_left_running():
+    """Stop every streaming query a test left running and fail that test: a
+    leaked query keeps scheduling micro-batches that compete with every
+    later test.  Starts no session for a test that never used one."""
+    yield
+    session = SparkSession.getActiveSession()
+    active = session.streams.active if session is not None else []
+    for q in active:
+        q.stop()
+    assert not active, f"streaming queries left running: {[str(q.id) for q in active]}"

@@ -493,7 +493,7 @@ service:
     )
     ctx = AssembleContext(output_dir=out)
     q = start_config_stream(spark, cfg, ctx, "webhookevent", stream, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     logs = spark.read.parquet(_os.path.join(out, "logs", "file"))
     n1 = logs.count()
@@ -509,7 +509,7 @@ service:
         spark.readStream.schema(seq_schema).option("maxFilesPerTrigger", 1).parquet(indir + "/*")
     )
     q2 = start_config_stream(spark, cfg, ctx, "webhookevent", stream2, ckpt)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     logs2 = spark.read.parquet(_os.path.join(out, "logs", "file"))
     n2 = logs2.count()
     assert n2 - n1 in (0, 1)  # the one extra row, if its severity routes to logs
@@ -539,7 +539,7 @@ def test_config_stream_replay_replaces_its_batch(spark, tmp_path):
     """A micro-batch replayed after a crash before its checkpoint commit
     (commits/0 gone, sinks already written) must replace its output, not
     append a second copy: one batch_id=0 dir per exporter, one batch's rows
-    in it and in the pipeline's lineage.  The stream also honours a file
+    in it and in the pipeline's lineage, and one _metrics row.  The stream also honours a file
     exporter's configured ``path:``."""
     import os as _os
 
@@ -581,7 +581,9 @@ service:
 
     def run_once():
         stream = spark.readStream.schema(seq_schema).parquet(indir + "/*")
-        start_config_stream(spark, cfg, ctx, "webhookevent", stream, ckpt).awaitTermination(120)
+        assert start_config_stream(
+            spark, cfg, ctx, "webhookevent", stream, ckpt
+        ).awaitTermination(120)
 
     run_once()
     # crash after the sink writes, before the commit: batch 0 replays
@@ -606,6 +608,65 @@ service:
         ]
     # the configured path replaces the default <output_dir>/<pipeline>/<id> dir
     assert not _os.path.exists(_os.path.join(out, "raw"))
+    metrics = spark.read.parquet(_os.path.join(out, "_metrics"))
+    assert [(r["batch_id"], r["routed_rows"]) for r in metrics.collect()] == [
+        (0, want_logs + 1000)
+    ]
+
+
+@pytest.mark.parametrize(
+    "pipelines",
+    [
+        # the processor directly after the streaming receiver
+        """
+    traces:
+      receivers: [webhookevent]
+      processors: [groupbytrace]
+      exporters: [file]
+""",
+        # behind a connector bridge
+        """
+    traces:
+      receivers: [webhookevent]
+      processors: []
+      exporters: [count]
+    metrics:
+      receivers: [count]
+      processors: [interval]
+      exporters: [file]
+""",
+    ],
+)
+def test_config_stream_refuses_cross_batch_processors(spark, tmp_path, pipelines):
+    """groupbytrace and interval keep state across batches, and a config
+    stream runs their batch twins on one micro-batch at a time: a trace with
+    spans in two micro-batches would land as two partial rows.  The stream
+    refuses them anywhere downstream of its receiver."""
+    from liatrio_otel_collector_spark.confmap import start_config_stream
+
+    cfg = load_config(
+        """
+receivers:
+  webhookevent: {}
+processors:
+  groupbytrace: {}
+  interval: {}
+connectors:
+  count: {}
+exporters:
+  file: {}
+service:
+  pipelines:"""
+        + pipelines
+    )
+    indir = tmp_path / "in"
+    spark.createDataFrame(
+        [("T", "s1"), ("T", "s2")], "trace_id string, span_id string"
+    ).write.parquet(str(indir / "b0"))
+    stream = spark.readStream.schema("trace_id string, span_id string").parquet(f"{indir}/*")
+    ctx = AssembleContext(output_dir=str(tmp_path / "out"))
+    with pytest.raises(ConfigError, match="across micro-batches"):
+        start_config_stream(spark, cfg, ctx, "webhookevent", stream, str(tmp_path / "ckpt"))
 
 
 def test_duplicate_pipeline_refs_rejected():

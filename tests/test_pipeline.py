@@ -3,6 +3,7 @@ invariant, lineage manifests, parse-path parity (UDF vs Catalyst expr)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from liatrio_otel_collector_spark.plans.pipeline import (
@@ -10,7 +11,7 @@ from liatrio_otel_collector_spark.plans.pipeline import (
     build_pipeline,
     run_pipeline,
 )
-from liatrio_otel_collector_spark.plans.lineage import lineage_manifest
+from liatrio_otel_collector_spark.plans.lineage import lineage_manifest, manifests
 from liatrio_otel_collector_spark.sources.sequences import sequences
 
 N = 4000
@@ -84,6 +85,25 @@ def test_lineage_manifest(spark):
     for r in m2:
         xor2 ^= r["token_checksum"]
     assert xor1 == xor2
+
+
+@pytest.mark.parametrize("frame", ["tokens", "map column"])
+def test_manifests_equal_per_sink_manifests(spark, frame):
+    """The combined pass over several membership predicates gives, row for
+    row, the union of one manifest per filtered sink — both with the
+    doc_id+tokens checksum and with the hashable-columns checksum of a frame
+    that carries a map column and no tokens."""
+    src = sequences(spark, N).repartition(5, "doc_id")
+    if frame == "map column":
+        src = src.drop("tokens").withColumn("attrs", F.create_map(F.lit("src"), F.col("source")))
+    p = F.col("n_tok") % 2 == 0
+    q = F.col("source") == "github"
+    combined = manifests(src, {"a": p, "b": q}, 7).collect()
+    per_sink = lineage_manifest(src.filter(p), "a", 7).union(
+        lineage_manifest(src.filter(q), "b", 7)
+    ).collect()
+    assert {r["sink"] for r in combined} == {"a", "b"}
+    assert sorted(map(tuple, combined)) == sorted(map(tuple, per_sink))
 
 
 def test_run_pipeline_writes_sinks(spark, tmp_path):

@@ -59,7 +59,7 @@ def test_cross_batch_dedup(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     out = spark.read.parquet(outdir)
     rows = {r["doc_id"]: r for r in out.collect()}
     # every key exactly once
@@ -119,7 +119,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     dropped = sum(
         (p["stateOperators"][0].get("numRowsDroppedByWatermark", 0) if p["stateOperators"] else 0)
         for p in q.recentProgress
@@ -160,7 +160,7 @@ def test_dedup_state_survives_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run_once()  # emits k0..k4, state persisted
     # new input: 3 replayed keys + 2 fresh ones, processed by a RESTARTED query
@@ -203,10 +203,13 @@ def _run_trace_stream(spark, indir, outdir, ckpt, wait_ms):
         .option("path", outdir)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
+        # not availableNow: the processing-time timeout keeps that trigger
+        # scheduling no-data micro-batches, so the query never ends; a
+        # once trigger runs one micro-batch over every new file and stops
+        .trigger(once=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
 
 def test_group_traces_stream_cross_batch_completion(spark, tmp_path):
@@ -307,7 +310,7 @@ def test_interval_last_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     out = spark.read.parquet(outdir)
     eleven = {
         (r["user_id"], r["event_type"]): r
@@ -375,7 +378,7 @@ def test_interval_last_stream_deterministic_tie(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     out = spark.read.parquet(outdir).collect()
     row = [r for r in out if r["interval_start"].minute == 0][0]
     assert row["last_value"] == 7.0 and row["last_ts"] == tied
@@ -434,7 +437,7 @@ def test_streaming_session_window_matches_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        assert q.awaitTermination(180)
 
     _sentinel(999_999, 10, "b1")
     _run()

@@ -32,7 +32,7 @@ def test_stream_resume_from_checkpoint(spark, tmp_path):
 
     cfg = StreamingConfig(input_dir=input_dir, output_dir=out, checkpoint_dir=ckpt)
     q = start_stream(spark, cfg, available_now=True)
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
 
     logs1 = spark.read.parquet(os.path.join(out, "logs"))
     n_logs_1 = logs1.count()
@@ -47,7 +47,7 @@ def test_stream_resume_from_checkpoint(spark, tmp_path):
 
     # restart from the same checkpoint: only the new file is processed
     q2 = start_stream(spark, cfg, available_now=True)
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300)
 
     metrics2 = spark.read.parquet(os.path.join(out, "_metrics"))
     total_input = metrics2.agg(F.sum("input_rows")).collect()[0][0]
@@ -82,7 +82,7 @@ def test_stream_matches_batch_semantics(spark, tmp_path):
         max_files_per_trigger=10,
     )
     q = start_stream(spark, cfg, available_now=True)
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
 
     stream_metrics = (
         spark.read.parquet(os.path.join(out, "metrics"))
@@ -98,7 +98,8 @@ def test_stream_matches_batch_semantics(spark, tmp_path):
 def test_replayed_batch_replaces_its_output(spark, tmp_path):
     """A micro-batch replayed after a crash before its checkpoint commit runs
     the per-batch body again with the same batch_id into the same output
-    dir: it must replace that batch's sinks and lineage, not duplicate them."""
+    dir: it must replace that batch's sinks, lineage and _metrics row, not
+    duplicate them."""
     from liatrio_otel_collector_spark.plans.pipeline import PipelineConfig, write_batch
 
     out = str(tmp_path / "out")
@@ -114,3 +115,5 @@ def test_replayed_batch_replaces_its_output(spark, tmp_path):
     assert logs.count() == sum(1 for i in range(1000) if i % 5 in (2, 3, 4))
     lineage = spark.read.parquet(os.path.join(out, "_lineage", "_input"))
     assert lineage.agg(F.sum("row_count")).collect()[0][0] == 1000
+    metrics = spark.read.parquet(os.path.join(out, "_metrics"))
+    assert [(r["batch_id"], r["input_rows"]) for r in metrics.collect()] == [(3, 1000)]
