@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from ..functions.tokens import parse_tokens_expr, parse_tokens_udf
 from ..functions.ids import span_id, trace_id
 from ..sources.sequences import enrich_dim, sequences
-from .lineage import manifests
+from .lineage import literal_row, manifest_aggs, manifests, observed_manifest
 
 SALT_BUCKETS = 16
 
@@ -248,13 +248,14 @@ def staged(
 ) -> Iterator[DataFrame]:
     """Write ``df`` ONCE to a parquet staging table under ``scratch_dir`` and
     yield its read-back; the table is deleted on exit.  Every consumer of the
-    read-back scans columnar files instead of recomputing ``df``."""
+    read-back scans columnar files instead of recomputing ``df``.  The
+    read-back takes ``df``'s schema, so it runs no schema-inference job."""
     stage_dir = tempfile.mkdtemp(prefix=prefix, dir=scratch_dir)
     try:
         df.write.mode("overwrite").option("compression", STAGE_COMPRESSION).option(
             "parquet.enable.dictionary", STAGE_DICTIONARY
         ).parquet(stage_dir)
-        yield spark.read.parquet(stage_dir)
+        yield spark.read.schema(df.schema).parquet(stage_dir)
     finally:
         shutil.rmtree(stage_dir, ignore_errors=True)
 
@@ -296,8 +297,10 @@ class Sink:
     """``df`` written to every ``(dir, format)`` of ``dests``.  A ROW sink
     sets ``member``, its membership predicate over the staged frame, and
     gets its manifest from one pass over that frame.  A DERIVED sink (no
-    ``member``, e.g. a rollup) gets it from its first destination's
-    read-back: re-deriving it from the staged frame would redo the work."""
+    ``member``, e.g. a rollup) is written as one partition to its first
+    destination, and its manifest comes from values that write observes:
+    re-deriving it from the staged frame would redo the work, and reading
+    the written files back would cost jobs for a few rows."""
 
     df: DataFrame
     dests: tuple[tuple[str, str], ...] = ()
@@ -320,7 +323,10 @@ def fan_out(
 
     Destination writes run CONCURRENTLY, one driver thread each, so Spark
     interleaves their jobs instead of paying each job's scheduling latency
-    in turn; the row sinks' manifest pass runs on the calling thread."""
+    in turn; the row sinks' manifest pass runs on the calling thread.  A
+    derived sink's first write observes :func:`~.lineage.manifest_aggs`, and
+    its manifest row is built in the JVM from those values
+    (:func:`~.lineage.observed_manifest`): no read-back, no Python row."""
     rows = {n: s.member for n, s in sinks.items() if s.member is not None}
     writes = [(s.df, d) for n, s in sinks.items() if n in rows for d in s.dests]
     derived = {n: s for n, s in sinks.items() if n not in rows}
@@ -329,10 +335,16 @@ def fan_out(
         df.write.mode("overwrite").format(dest[1]).save(dest[0])
 
     def derive(name: str, sink: Sink) -> int:
-        for dest in sink.dests:
+        (first, *rest), seen = sink.dests, Observation()
+        write(sink.df.coalesce(1).observe(seen, *manifest_aggs(sink.df)), first)
+        for dest in rest:
             write(sink.df, dest)
-        written = spark.read.format(sink.dests[0][1]).load(sink.dests[0][0])
-        return write_manifests(written, {name: F.lit(True)}, output_dir, batch_id, fmt)[name]
+        values = seen.get
+        write_batch_table(
+            observed_manifest(spark, sink.df, values, name, batch_id),
+            os.path.join(output_dir, "_lineage"), name, batch_id, fmt,
+        )
+        return values["row_count"]
 
     with ThreadPoolExecutor(max_workers=max(1, len(writes) + len(derived))) as pool:
         write_futs = [pool.submit(write, df, d) for df, d in writes]
@@ -347,8 +359,10 @@ def write_metrics(
     spark: SparkSession, output_dir: str, batch_id: int, fmt: str, row: tuple, schema: str
 ) -> None:
     """Write one batch's self-observability row (the obsreport analog K4),
-    stamped with ``processed_at``, to ``_metrics/batch_id=K/``."""
-    df = spark.createDataFrame([row], schema).withColumn("processed_at", F.current_timestamp())
+    ``row`` typed by the DDL ``schema`` and stamped with ``processed_at``,
+    to ``_metrics/batch_id=K/``.  The row is built in the JVM
+    (:func:`~.lineage.literal_row`)."""
+    df = literal_row(spark, row, schema).withColumn("processed_at", F.current_timestamp())
     write_batch_table(df, output_dir, "_metrics", batch_id, fmt)
 
 

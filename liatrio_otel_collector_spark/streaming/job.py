@@ -47,7 +47,13 @@ def start_query(
     """Start ``writer`` checkpointed at ``checkpoint_dir`` (a restart resumes
     from it).  ``available_now=True`` drains everything currently in the
     source then stops — the deterministic test/bench mode.  ``False`` runs a
-    continuous micro-batch trigger (the production mode)."""
+    continuous micro-batch trigger (the production mode).
+
+    ``availableNow`` ends only when no operator asks for more batches: a
+    stateful operator with a processing-time timeout, such as
+    ``stateful.group_traces_stream``, keeps scheduling no-data micro-batches,
+    so its query never stops by itself.  Start such a query with
+    ``trigger(once=True)``, or stop it from the caller."""
     writer = writer.option("checkpointLocation", checkpoint_dir)
     if available_now:
         return writer.trigger(availableNow=True).start()

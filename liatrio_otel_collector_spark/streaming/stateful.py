@@ -117,7 +117,12 @@ def group_traces_stream(stream: DataFrame, wait_duration_ms: int = 60_000) -> Da
     is the same key the trace sink is laid out on.
 
     The batch twin is plans/grouping.py::group_by_trace (bounded input =
-    every trace complete)."""
+    every trace complete).
+
+    A query using it never ends under an ``availableNow`` trigger: the
+    ProcessingTimeTimeout keeps Spark scheduling no-data micro-batches, and
+    ``processAllAvailable`` does not return either.  Run such a query with
+    ``trigger(once=True)``, or have whoever starts it stop it."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def fn(key, pdfs, state):

@@ -393,6 +393,42 @@ service:
     assert spark.read.parquet(str(tmp_path / "explicit" / "seqs")).count() == 100
 
 
+def test_config_metrics_row_round_trips(spark, tmp_path):
+    """The config writer's ``_metrics`` row reads back with its column names,
+    types and values."""
+    from liatrio_otel_collector_spark.confmap import write_config_batch
+
+    cfg = load_config(
+        """
+receivers:
+  sequences:
+    n_rows: 100
+exporters:
+  file/out: {}
+service:
+  pipelines:
+    seqs:
+      receivers: [sequences]
+      processors: []
+      exporters: [file/out]
+"""
+    )
+    write_config_batch(spark, cfg, AssembleContext(output_dir=str(tmp_path)), 4, cfg.pipelines)
+    m = spark.read.parquet(str(tmp_path / "_metrics" / "batch_id=4"))
+    assert [(f.name, f.dataType.simpleString()) for f in m.schema.fields] == [
+        ("routed_rows", "bigint"),
+        ("process_sec", "double"),
+        ("rows_per_sec", "double"),
+        ("per_pipeline", "string"),
+        ("processed_at", "timestamp"),
+    ]
+    (r,) = m.collect()
+    assert r["routed_rows"] == 100 and r["per_pipeline"] == "[('seqs', 100)]"
+    assert r["process_sec"] > 0
+    assert r["rows_per_sec"] == pytest.approx(100 / r["process_sec"])
+    assert r["processed_at"] is not None
+
+
 def test_connector_merges_multiple_producers(spark):
     """Two pipelines exporting into the SAME connector must both feed the
     consumer — the collector merges every producer's stream into the

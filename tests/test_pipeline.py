@@ -10,6 +10,7 @@ from liatrio_otel_collector_spark.plans.pipeline import (
     PipelineConfig,
     build_pipeline,
     run_pipeline,
+    write_batch,
 )
 from liatrio_otel_collector_spark.plans.lineage import lineage_manifest, manifests
 from liatrio_otel_collector_spark.sources.sequences import sequences
@@ -115,3 +116,56 @@ def test_run_pipeline_writes_sinks(spark, tmp_path):
     assert (tmp_path / "_lineage" / "logs").exists()
     lineage = spark.read.parquet(str(tmp_path / "_lineage" / "logs"))
     assert lineage.agg(F.sum("row_count")).collect()[0][0] == counts["logs"]
+
+
+def _columns(df) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+@pytest.mark.parametrize("rows", ["all", "no warn/error/fatal"])
+def test_rollup_manifests_equal_read_back_manifests(spark, tmp_path, rows):
+    """A rollup's manifest is built from values its own write observed; it
+    equals, row for row and in every column, the manifest of the rollup's
+    read-back.  Without warn/error/fatal rows ``logs_agg`` is empty: its
+    manifest has no row and its count is 0."""
+    src = sequences(spark, N)
+    if rows != "all":
+        src = src.filter(F.col("doc_id").cast("long") % 5 < 2)
+    out = str(tmp_path)
+    counts = write_batch(spark, src, PipelineConfig(output_dir=out), out, 5)
+    for agg in ("metrics", "logs_agg", "traces_agg"):
+        got = spark.read.parquet(f"{out}/_lineage/{agg}/batch_id=5")
+        want = lineage_manifest(spark.read.parquet(f"{out}/{agg}/batch_id=5"), agg, 5)
+        want = want.drop("batch_id")
+        assert _columns(got) == _columns(want), agg
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), agg
+        assert counts[agg] == sum(r["row_count"] for r in got.collect()), agg
+    if rows != "all":
+        assert counts["logs_agg"] == 0
+        assert spark.read.parquet(f"{out}/_lineage/logs_agg/batch_id=5").count() == 0
+
+
+def test_metrics_row_round_trips(spark, tmp_path):
+    """The flagship ``_metrics`` row reads back with its column names, types
+    and values."""
+    import datetime
+
+    out = str(tmp_path)
+    before = datetime.datetime.now()
+    counts = write_batch(spark, sequences(spark, 1000), PipelineConfig(output_dir=out), out, 2)
+    m = spark.read.parquet(f"{out}/_metrics/batch_id=2")
+    assert _columns(m) == [
+        ("input_rows", "bigint"),
+        ("logs_rows", "bigint"),
+        ("traces_rows", "bigint"),
+        ("process_sec", "double"),
+        ("rows_per_sec", "double"),
+        ("processed_at", "timestamp"),
+    ]
+    (r,) = m.collect()
+    assert (r["input_rows"], r["logs_rows"], r["traces_rows"]) == (
+        1000, counts["logs"], counts["traces"]
+    )
+    assert r["process_sec"] > 0
+    assert r["rows_per_sec"] == pytest.approx(1000 / r["process_sec"])
+    assert before - datetime.timedelta(minutes=1) <= r["processed_at"] <= datetime.datetime.now()

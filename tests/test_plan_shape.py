@@ -6,7 +6,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from liatrio_otel_collector_spark.plans.pipeline import PipelineConfig, build_pipeline
+from liatrio_otel_collector_spark.plans.pipeline import (
+    PipelineConfig,
+    build_pipeline,
+    write_batch,
+)
+from liatrio_otel_collector_spark.sources.sequences import sequences
 from liatrio_otel_collector_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -25,6 +30,58 @@ def test_enrich_join_is_broadcast_no_smj(spark):
 def test_parse_runs_on_arrow(spark):
     plan = _plan(build_pipeline(spark, 10_000)["logs"])
     assert "ArrowEvalPython" in plan or "EvalPython" in plan
+
+
+def _jobs_of(spark, fn) -> int:
+    """The Spark jobs ``fn`` runs, counted in the status store after its
+    listener bus has drained."""
+    sc = spark.sparkContext
+
+    def ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = ids()
+    fn()
+    return len(ids() - before)
+
+
+def test_write_batch_job_budget(spark, tmp_path):
+    """Per-batch fixed cost: one flagship batch runs at most 20 Spark jobs.
+    No written output is read back: each rollup's manifest comes from values
+    its own write observed, the stage read-back takes its schema from the
+    staged frame, and the ``_metrics`` row is built in the JVM."""
+    out, src = str(tmp_path), sequences(spark, 2000)
+    cfg = PipelineConfig(output_dir=out)
+    assert _jobs_of(spark, lambda: write_batch(spark, src, cfg, out, 0)) <= 20
+
+
+def test_write_config_batch_job_budget(spark, tmp_path):
+    """One config batch of one pipeline and one exporter runs at most 6
+    Spark jobs."""
+    from liatrio_otel_collector_spark.confmap import (
+        AssembleContext,
+        load_config,
+        write_config_batch,
+    )
+
+    cfg = load_config(
+        """
+receivers:
+  sequences:
+    n_rows: 500
+exporters:
+  file/out: {}
+service:
+  pipelines:
+    seqs:
+      receivers: [sequences]
+      processors: []
+      exporters: [file/out]
+"""
+    )
+    ctx = AssembleContext(output_dir=str(tmp_path))
+    assert _jobs_of(spark, lambda: write_config_batch(spark, cfg, ctx, 0, cfg.pipelines)) <= 6
 
 
 def test_filter_pushdown_to_parquet(spark):
