@@ -419,24 +419,9 @@ def _is_ottl(pid: str, pcfg: dict) -> bool:
     return False
 
 
-def _apply_processor(
-    df: DataFrame, pid: str, pcfg: dict, ctx: AssembleContext, signal: str = "logs"
-) -> DataFrame:
+def _apply_processor(df: DataFrame, pid: str, pcfg: dict, ctx: AssembleContext) -> DataFrame:
+    """One non-OTTL processor; :func:`assemble` compiles every OTTL run."""
     ptype = _ctype(pid)
-    if _is_ottl(pid, pcfg):
-        # single OTTL processor outside a detected run (assemble batches
-        # consecutive ones; this path keeps _apply_processor self-sufficient)
-        if signal not in ("logs", "traces", "metrics"):
-            raise ConfigError(
-                f"processor {pid!r}: OTTL needs a logs/traces/metrics pipeline "
-                "id to pick its statement context; refusing to guess"
-            )
-        from . import ottl
-
-        try:
-            return ottl.compile_chain(df, [(pid, ptype, pcfg)], signal=signal)
-        except ottl.OttlError as e:
-            raise ConfigError(f"processor {pid!r}: {e}") from None
     if ptype == "transform":
         analog = pcfg.get("analog")
         if analog is not None:
@@ -613,7 +598,7 @@ def assemble(
                     except ottl.OttlError as e:
                         raise ConfigError(f"pipeline {name!r} OTTL chain: {e}") from None
                 else:
-                    df = _apply_processor(df, pid, cfg.processors[pid], ctx, signal=signal)
+                    df = _apply_processor(df, pid, cfg.processors[pid], ctx)
                     i += 1
             out[name] = df
             for e in p["exporters"]:

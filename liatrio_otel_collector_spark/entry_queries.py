@@ -20,7 +20,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.strings import workflow_path_to_name
+from .functions.strings import api_to_html_url, format_service_name, workflow_path_to_name
 from .functions.timeparse import parse_multi_format_ts
 from .operators import aggregates as A
 from .operators import dedup as DD
@@ -487,14 +487,8 @@ FROM repos
 )(
     lambda spark, sf: _view(spark, sf, "repos").select(
         "repo_name",
-        F.lower(
-            F.regexp_replace(
-                F.coalesce(
-                    F.when(F.col("archived"), F.lit("Custom_Svc")), F.col("repo_name")
-                ),
-                "_",
-                "-",
-            )
+        format_service_name(
+            F.coalesce(F.when(F.col("archived"), F.lit("Custom_Svc")), F.col("repo_name"))
         ).alias("service_name"),
     )
 )
@@ -624,7 +618,7 @@ _q(
 )(
     lambda spark, sf: _view(spark, sf, "repos").select(
         "repo_name",
-        F.regexp_replace("url", r"api\.github\.com/repos", "github.com").alias("html_url"),
+        api_to_html_url("url").alias("html_url"),
     )
 )
 

@@ -156,13 +156,13 @@ def capped_bands(
 
 
 def minhash_candidates(
-    documents: DataFrame,
+    sig: DataFrame,
     num_hashes: int = NUM_HASHES,
     band_size: int = BAND_SIZE,
     max_bucket_width: int = MAX_BUCKET_WIDTH,
 ) -> DataFrame:
-    """Band-collision candidate pairs (pre-verification), bucket-capped."""
-    sig = _materialized_signatures(documents, num_hashes)
+    """Band-collision candidate pairs (pre-verification), bucket-capped, over
+    an already built signature frame (:func:`_materialized_signatures`)."""
     bands = capped_bands(sig, num_hashes, band_size, max_bucket_width)
     a, b = bands.alias("a"), bands.alias("b")
     return (
@@ -188,18 +188,7 @@ def minhash_near_dups(
     bucket join → signature-agreement filter.  Returns (doc_a, doc_b,
     match_count) for pairs agreeing on >= min_matches of num_hashes hashes."""
     sig = _materialized_signatures(documents, num_hashes)
-    bands = capped_bands(sig, num_hashes, band_size, max_bucket_width)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = minhash_candidates(sig, num_hashes, band_size, max_bucket_width)
     sa = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)])
     sb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)])
     joined = cand.join(sa, "doc_a").join(sb, "doc_b")
@@ -214,17 +203,23 @@ def minhash_near_dups(
     )
 
 
-def ngram_candidates(
+def doc_freq_split(
     sh: DataFrame, max_doc_freq: int = MAX_DOC_FREQ
-) -> DataFrame:
-    """Inverted-index candidate pairs with the posting-list frequency cap:
-    shingles appearing in more than max_doc_freq docs are excluded from
-    candidate GENERATION (they'd contribute O(df²) pairs), standard practice
-    that keeps high-Jaccard pairs as long as each shares one cold shingle."""
+) -> tuple[DataFrame, DataFrame]:
+    """(cold, hot) shingle rows: shingles in at most ``max_doc_freq`` docs,
+    and the rest.  Only cold shingles generate candidates (a hot one would
+    contribute O(df²) pairs) — standard practice that keeps high-Jaccard
+    pairs as long as each shares one cold shingle."""
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    cold = sh.join(
-        dfreq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle"
-    )
+    cold = sh.join(dfreq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle")
+    hot = sh.join(dfreq.filter(F.col("df") > max_doc_freq).select("shingle"), "shingle")
+    return cold, hot
+
+
+def ngram_candidates(cold: DataFrame) -> DataFrame:
+    """Inverted-index candidate pairs over the cold shingle rows of
+    :func:`doc_freq_split`: (doc_a, doc_b, inter_cold), one row per pair
+    sharing a cold shingle, with the number of cold shingles it shares."""
     a, b = cold.alias("a"), cold.alias("b")
     return (
         a.join(
@@ -232,8 +227,8 @@ def ngram_candidates(
             (F.col("a.shingle") == F.col("b.shingle"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("inter_cold"))
     )
 
 
@@ -257,20 +252,8 @@ def ngram_jaccard_pairs(
     DuckDB oracle computes it the naive way and hash-matches."""
     sh = shingles(documents, k)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    cold = sh.join(dfreq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle")
-    hot = sh.join(dfreq.filter(F.col("df") > max_doc_freq).select("shingle"), "shingle")
-
-    a, b = cold.alias("a"), cold.alias("b")
-    inter_cold = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter_cold"))
-    )
+    cold, hot = doc_freq_split(sh, max_doc_freq)
+    inter_cold = ngram_candidates(cold)
     ha = hot.select(F.col("doc_id").alias("doc_a"), "shingle")
     hb = hot.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter_hot = (

@@ -1,15 +1,12 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing is real and tested — schema, partition-preserving
-mapInPandas over Arrow batches, deterministic batching — while the actual
-codec work is stubbed (the image/audio libraries are not in this container):
-
-- :func:`decode_image_stub` raises NotImplementedError exactly where a codec
-  (Pillow/libvips) would plug in;
-- :func:`fake_decode_features` is the deterministic stand-in used by tests
-  and benchmarks: it derives a feature vector from the bytes themselves, so
-  the full pipeline (scan → batch → Python → feature column) is exercised
-  end to end with verifiable output.
+mapInPandas over Arrow batches, deterministic batching — while no codec
+decodes a payload: :func:`fake_decode_features` (driver query
+``mm1_multimodal_features``) derives the feature vector from the bytes
+themselves, so the full pipeline (scan → batch → Python → feature column)
+runs end to end with verifiable output.  A real codec (Pillow/libvips)
+would replace its per-batch kernel behind the same ``mapInPandas`` call.
 
 At 100 TB the shape matters: binary payloads stay columnar (parquet binary
 with metadata columns for pruning), the UDF processes Arrow record batches
@@ -20,15 +17,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id string, kind string, mime string, width int, height int, "
-    "duration_ms int, payload binary"
-)
 
 FEATURE_DIM = 16
 
@@ -50,76 +41,6 @@ def synthetic_media(spark: SparkSession, n_rows: int) -> DataFrame:
         # repeat(sha-ish hex, …) cast to binary: deterministic, size varies
         "CAST(repeat(substring(sha2(CAST(id AS STRING), 256), 1, 16), CAST(1 + id % 8 AS INT)) AS BINARY) AS payload",
     )
-
-
-def pillow_available() -> bool:
-    """Runtime probe for the optional codec (VERDICT r2 item 6): the real
-    decode path activates wherever Pillow is importable; this container
-    ships without it (verified by tests/test_multimodal.py::test_codec_probe)."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image_stub(payload: bytes) -> "np.ndarray":
-    """Single codec plug-point: decodes via Pillow when importable, else
-    raises — the mapInPandas plumbing around it is identical either way."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError:
-        raise NotImplementedError(
-            "image decode requires Pillow/libvips (probe: pillow_available() is "
-            "False in this container); use fake_decode_features for the "
-            "pipeline-plumbing path"
-        ) from None
-    return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
-
-
-def real_decode_features(media: DataFrame) -> DataFrame:
-    """The REAL decode path behind the same mapInPandas plumbing as
-    :func:`fake_decode_features`: payloads are decoded with Pillow per Arrow
-    batch and the feature vector is the per-channel mean histogram
-    (16 bins over RGB luminance).  Call :func:`pillow_available` first —
-    executors raise where the codec is absent.  Output schema matches the
-    fake path so downstream plans are codec-agnostic."""
-    dim = FEATURE_DIM
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        import numpy as _np
-        import pandas as _pd
-        from PIL import Image as _Image
-
-        for pdf in batches:
-            n = len(pdf)
-            out = _np.zeros((n, dim), dtype=_np.float32)
-            lens = _np.fromiter(
-                (len(b) for b in pdf["payload"]), dtype=_np.int64, count=n
-            )
-            for i, b in enumerate(pdf["payload"]):
-                rgb = _np.asarray(_Image.open(_io.BytesIO(b)).convert("RGB"))
-                # luminance histogram, dim bins over [0, 256)
-                lum = (
-                    0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-                ).astype(_np.uint8)
-                hist = _np.bincount(lum.ravel() >> 4, minlength=dim)[:dim]
-                out[i] = hist / max(lum.size, 1)
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": lens,
-                    "features": list(out),
-                }
-            )
-
-    return media.mapInPandas(run, schema=_FEATURE_SCHEMA)
 
 
 def fake_decode_features(media: DataFrame) -> DataFrame:
@@ -187,7 +108,7 @@ def frame_sample_plan(
     media: DataFrame, every_ms: int = 1000, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """Frame-sampling plumbing: explode a deterministic frame-timestamp grid
-    per video row (the decode of each frame is the stubbed step).  ``carry``
+    per video row (no codec decodes the frames).  ``carry``
     names extra columns to keep alongside the grid (e.g. the payload for a
     per-frame decode) — by default the grid stays narrow, because every
     carried column is duplicated once per exploded frame row."""

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.strings import format_service_name
 from .traces import KIND_SERVER, SPAN_COLS, STATUS_ERROR, STATUS_OK, STATUS_UNSET
 
 GO_ZERO_RFC3339 = "0001-01-01T00:00:00Z"
@@ -155,9 +156,7 @@ def _service_name(
     cfg = (
         F.lit(custom_service_name)
         if custom_service_name
-        else F.concat(
-            F.lit(prefix), F.lower(F.regexp_replace(repo_name, "_", "-")), F.lit(suffix)
-        )
+        else F.concat(F.lit(prefix), format_service_name(repo_name), F.lit(suffix))
     )
     return F.coalesce(F.element_at(custom_props, "service_name"), cfg)
 

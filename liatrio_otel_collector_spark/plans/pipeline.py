@@ -92,12 +92,11 @@ def sink_defaults() -> tuple[str, str | None]:
 
 @dataclass
 class PipelineConfig:
-    """Enabled-sink gating — the analog of the reference's per-metric on/off
-    switches (azuredevops_scraper.go:114-127): disabled branches are never
-    built, so Catalyst never plans them."""
+    """How the flagship DAG parses and where it writes.  It gates no sink:
+    every batch builds and writes all five, ``logs``, ``traces``,
+    ``metrics``, ``logs_agg`` and ``traces_agg``."""
 
     use_udf_parse: bool = True
-    sinks: tuple[str, ...] = ("logs", "traces", "metrics")
     output_dir: str | None = None
     sink_format: str = field(default_factory=lambda: sink_defaults()[0])
     scratch_dir: str | None = field(default_factory=lambda: sink_defaults()[1])
@@ -137,64 +136,52 @@ def enrich_stage(df: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def route_predicates(cfg: PipelineConfig) -> "dict[str, Column]":
+def route_predicates() -> "dict[str, Column]":
     """The row-sink membership predicates, exposed so a single combined
     manifest pass (:func:`fan_out`) can compute every row sink's lineage in
     ONE scan of the enriched frame instead of one re-scan per sink."""
-    preds: dict[str, Column] = {}
-    if "logs" in cfg.sinks:
+    return {
         # F8 analog: the OTTL filter keeps only event-bearing records
-        preds["logs"] = F.col("severity").isin("warn", "error", "fatal")
-    if "traces" in cfg.sinks:
+        "logs": F.col("severity").isin("warn", "error", "fatal"),
         # F4 analog: completed-only gate; webhook source has no trace context
-        preds["traces"] = F.col("scope").isin("scope-0", "scope-1", "scope-2") & (
-            F.col("source") != "webhook"
-        )
-    return preds
+        "traces": F.col("scope").isin("scope-0", "scope-1", "scope-2")
+        & (F.col("source") != "webhook"),
+    }
 
 
-def route_stage(enriched: DataFrame, cfg: PipelineConfig) -> dict[str, DataFrame]:
+def route_stage(enriched: DataFrame) -> dict[str, DataFrame]:
     """Fan rows out to per-signal sinks.  Tokens pass through UNTOUCHED on
     the LOGS sink — the per-row token-array-equality invariant lives there.
     The traces sink does NOT carry the token payload (r6, guide §2.3
     "project before the exchange"/§6 output sizing): a span is ids +
     routing attributes, and the wide token array was ~90% of its write
     bytes while nothing downstream read it from that sink."""
-    preds = route_predicates(cfg)
-    out: dict[str, DataFrame] = {}
-    if "logs" in preds:
-        out["logs"] = enriched.filter(preds["logs"])
-    if "traces" in preds:
-        out["traces"] = (
+    preds = route_predicates()
+    return {
+        "logs": enriched.filter(preds["logs"]),
+        "traces": (
             enriched.filter(preds["traces"])
             .withColumn("trace_id", trace_id("doc_id", "source"))
             .withColumn("span_id", span_id("doc_id", "scope"))
             .drop("tokens")
-        )
-    return out
+        ),
+    }
 
 
-def aggregate_stage(
-    enriched: DataFrame, routed: dict[str, DataFrame], cfg: PipelineConfig | None = None
-) -> dict[str, DataFrame]:
+def aggregate_stage(enriched: DataFrame, routed: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """Per-sink groupBy rollups (the githubreceiver metric rollups, SURVEY
     §2.4).  All builtin hash aggregates: map-side partial → shuffle → final."""
-    cfg = cfg or PipelineConfig()
-    aggs: dict[str, DataFrame] = {}
-    if "metrics" in cfg.sinks:
-        aggs["metrics"] = (
-            enriched.groupBy("source", "severity")
-            .agg(F.count(F.lit(1)).alias("seq_count"), F.sum("n_tok").alias("tok_count"))
-        )
-    if "logs" in routed:
-        aggs["logs_agg"] = (
-            routed["logs"].groupBy("team", "severity").agg(F.count(F.lit(1)).alias("log_count"))
-        )
-    if "traces" in routed:
-        aggs["traces_agg"] = (
-            routed["traces"].groupBy("scope", "tier").agg(F.count(F.lit(1)).alias("span_count"))
-        )
-    return aggs
+    return {
+        "metrics": enriched.groupBy("source", "severity").agg(
+            F.count(F.lit(1)).alias("seq_count"), F.sum("n_tok").alias("tok_count")
+        ),
+        "logs_agg": routed["logs"]
+        .groupBy("team", "severity")
+        .agg(F.count(F.lit(1)).alias("log_count")),
+        "traces_agg": routed["traces"]
+        .groupBy("scope", "tier")
+        .agg(F.count(F.lit(1)).alias("span_count")),
+    }
 
 
 def build_enriched(
@@ -228,9 +215,8 @@ def build_pipeline(
     cfg = cfg or PipelineConfig()
     if enriched is None:
         enriched = build_enriched(spark, n_rows, cfg, source_df)
-    routed = route_stage(enriched, cfg)
-    aggs = aggregate_stage(enriched, routed, cfg)
-    return {**routed, **aggs}
+    routed = route_stage(enriched)
+    return routed | aggregate_stage(enriched, routed)
 
 
 def batch_dir(root: str, name: str, batch_id: int) -> str:
@@ -297,10 +283,10 @@ class Sink:
     """``df`` written to every ``(dir, format)`` of ``dests``.  A ROW sink
     sets ``member``, its membership predicate over the staged frame, and
     gets its manifest from one pass over that frame.  A DERIVED sink (no
-    ``member``, e.g. a rollup) is written as one partition to its first
-    destination, and its manifest comes from values that write observes:
-    re-deriving it from the staged frame would redo the work, and reading
-    the written files back would cost jobs for a few rows."""
+    ``member``, e.g. a rollup) has exactly one destination and is written
+    there as one partition, and its manifest comes from values that write
+    observes: re-deriving it from the staged frame would redo the work, and
+    reading the written files back would cost jobs for a few rows."""
 
     df: DataFrame
     dests: tuple[tuple[str, str], ...] = ()
@@ -335,10 +321,8 @@ def fan_out(
         df.write.mode("overwrite").format(dest[1]).save(dest[0])
 
     def derive(name: str, sink: Sink) -> int:
-        (first, *rest), seen = sink.dests, Observation()
-        write(sink.df.coalesce(1).observe(seen, *manifest_aggs(sink.df)), first)
-        for dest in rest:
-            write(sink.df, dest)
+        (dest,), seen = sink.dests, Observation()
+        write(sink.df.coalesce(1).observe(seen, *manifest_aggs(sink.df)), dest)
         values = seen.get
         write_batch_table(
             observed_manifest(spark, sink.df, values, name, batch_id),
@@ -398,20 +382,20 @@ def write_batch(
         t_sinks = time.time()
         if timings is not None:
             timings["parse_enrich_stage_write_sec"] = round(t_sinks - t0, 3)
-        routed = route_stage(enriched, cfg)
-        preds = route_predicates(cfg)
+        routed = route_stage(enriched)
+        preds = route_predicates()
 
         def at(name: str) -> tuple[tuple[str, str], ...]:
             return ((batch_dir(output_dir, name, batch_id), fmt),)
 
         sinks = {"_input": Sink(enriched, member=F.lit(True))}
         sinks |= {n: Sink(df, at(n), preds[n]) for n, df in routed.items()}
-        sinks |= {n: Sink(df, at(n)) for n, df in aggregate_stage(enriched, routed, cfg).items()}
+        sinks |= {n: Sink(df, at(n)) for n, df in aggregate_stage(enriched, routed).items()}
         counts = fan_out(spark, enriched, sinks, output_dir, batch_id, fmt)
         rows, elapsed = counts.pop("_input"), time.time() - t0
         write_metrics(
             spark, output_dir, batch_id, fmt,
-            (rows, counts.get("logs", 0), counts.get("traces", 0), elapsed, rows / elapsed),
+            (rows, counts["logs"], counts["traces"], elapsed, rows / elapsed),
             "input_rows long, logs_rows long, traces_rows long, "
             "process_sec double, rows_per_sec double",
         )

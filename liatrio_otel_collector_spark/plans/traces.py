@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.strings import format_service_name
+
 KIND_SERVER = 2
 STATUS_UNSET, STATUS_OK, STATUS_ERROR = 0, 1, 2
 
@@ -83,7 +85,7 @@ def _status_code(conclusion: Column) -> Column:
 
 def _service_name(custom_service_name: Column, repo_name: Column) -> Column:
     """getServiceName precedence + formatString (model.go:319-343)."""
-    return F.lower(F.regexp_replace(F.coalesce(custom_service_name, repo_name), "_", "-"))
+    return format_service_name(F.coalesce(custom_service_name, repo_name))
 
 
 def _nonnull_map(*pairs) -> Column:

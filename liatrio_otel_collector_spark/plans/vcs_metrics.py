@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.maps import normalize_severity
+from ..functions.strings import age_seconds
 
 GO_MAX_DURATION_S = 9_223_372_036  # MaxInt64 ns in whole seconds
 
@@ -32,9 +33,7 @@ GO_MAX_DURATION_S = 9_223_372_036  # MaxInt64 ns in whole seconds
 def _clamped_age_s(start: Column, end: Column) -> Column:
     """getAge with Go's Duration overflow clamp (helpers.go:410-412; the
     zero-time open PR in the happy-path golden hits the cap)."""
-    return F.least(
-        F.unix_timestamp(end) - F.unix_timestamp(start), F.lit(GO_MAX_DURATION_S)
-    ).cast("bigint")
+    return F.least(age_seconds(start, end), F.lit(GO_MAX_DURATION_S)).cast("bigint")
 
 
 def _emit(df: DataFrame, metric: str, value: Column, attrs: Column) -> DataFrame:

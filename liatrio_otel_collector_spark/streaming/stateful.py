@@ -1,20 +1,18 @@
-"""Custom stateful streaming operators (SURVEY §2.9 / brief: "watermarks +
-windowed aggs for late data; applyInPandasWithState for custom stateful
-operators").
+"""Streaming twins of the two stateful collector processors, for a stream
+where a trace or a metric interval spans micro-batches (SURVEY §2.9:
+"watermarks + windowed aggs for late data; applyInPandasWithState for
+custom stateful operators"):
 
-Two operators the batch DAG cannot express:
+- :func:`group_traces_stream` — the groupbytraceprocessor: GroupState per
+  open trace, buffered until complete or flushed after ``wait_duration``;
+  batch twin ``plans/grouping.py::group_by_trace``.
+- :func:`interval_last_stream` — the intervalprocessor: last datapoint per
+  metric identity per watermarked tumbling window; batch twin
+  ``plans/grouping.py::interval_last``.
 
-- :func:`dedup_by_key_stream` — exactly-once-per-key across micro-batches
-  via ``applyInPandasWithState``: the first row of each key is emitted, every
-  later arrival (same batch or any later batch) is dropped.  This is the
-  streaming analog of dd1 exact-dedup and the guard the collector's
-  webhook receivers get from deterministic ids (X4): replays collapse.
-  State per key is one boolean — at 10^12 keys state size is bounded by
-  distinct keys, and the shuffle is the same hash-on-key the sink write
-  needs anyway.
-- :func:`windowed_counts` — watermarked tumbling-window counts per source:
-  late rows beyond the watermark are DROPPED by the engine (the
-  collection_interval rollup analog with bounded state).
+No pipeline calls them yet: ``confmap.start_config_stream`` refuses a
+``groupbytrace`` or ``interval`` processor behind its streaming receiver
+until they are wired in front of ``foreachBatch``.
 
 Worker fns are self-contained closures (pickle-by-value) per the repo rule:
 executors may not be able to import this package.
@@ -31,60 +29,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-DEDUP_OUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("n_tok", IntegerType()),
-        StructField("source", StringType()),
-        StructField("first_batch", LongType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType([StructField("seen", IntegerType())])
-
-
-def dedup_by_key_stream(stream: DataFrame, batch_id_col: str = "id") -> DataFrame:
-    """Streaming exact-dedup on doc_id: emit the FIRST arrival of each key,
-    drop all later duplicates across micro-batches (GroupState survives the
-    checkpoint, so a restart keeps deduping where it left off)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        import pandas as _pd
-
-        if state.exists:
-            # key already emitted in an earlier batch: consume + drop
-            for _ in pdfs:
-                pass
-            return
-        first = None
-        for pdf in pdfs:
-            if len(pdf) and first is None:
-                first = pdf.iloc[[0]]
-        if first is None:
-            return
-        state.update((1,))
-        yield _pd.DataFrame(
-            {
-                "doc_id": first["doc_id"].values,
-                "n_tok": first["n_tok"].values,
-                "source": first["source"].values,
-                "first_batch": first["id"].astype("int64").values,
-            }
-        )
-
-    return (
-        stream.groupBy("doc_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=DEDUP_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 TRACE_OUT_SCHEMA = StructType(
     [
@@ -210,67 +154,5 @@ def interval_last_stream(
             *identity,
             F.col("_last.v").alias("last_value"),
             F.col("_last.ts").alias("last_ts"),
-        )
-    )
-
-
-def session_counts(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Watermarked session-window aggregation: Spark's native
-    ``session_window`` merges events whose inter-arrival gap is under
-    ``gap`` — the streaming twin of ``operators.temporal.sessionize``.
-
-    Boundary fine print: ``session_window`` treats an event arriving at
-    EXACTLY ``gap`` after the previous one as a new session (windows are
-    ``[ts, ts+gap)`` and merge on overlap), while the batch operator keeps
-    it (splits strictly on ``> gap``).  The two agree on every input with
-    no exact-gap adjacent pair — asserted, not assumed, in
-    ``tests/test_stateful_streaming.py``.
-
-    State is one ``(start, end, count)`` per open session per key, aged out
-    by the watermark — bounded at unbounded input.  Append mode emits a
-    session only once it can no longer grow (watermark past its close),
-    which is exactly the training-pipeline contract: emitted sessions are
-    final, replays and stragglers inside the gap fold in before emission.
-    """
-    # watermarks require TIMESTAMP (not NTZ); the session timezone is pinned
-    # UTC (session.py) so the cast is value-preserving
-    return (
-        stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), key_col)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def windowed_counts(
-    stream: DataFrame,
-    ts_col: str = "event_ts",
-    watermark: str = "10 minutes",
-    window: str = "5 minutes",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per source: the engine ages out
-    window state past the watermark and silently drops later-than-watermark
-    rows — bounded state at unbounded input."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), "source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "source",
-            "n",
         )
     )

@@ -27,6 +27,12 @@ from liatrio_otel_collector_spark.plans.ado_traces import ado_trace_pipeline
 FIXDIR = "/root/reference/receiver/azuredevopsreceiver/testdata"
 FIXTURES = ["example-pipeline-event.json", "example-stage-event.json", "example-job-event.json"]
 
+# the fixtures are the reference checkout's own testdata, not kept in this
+# repository: without that checkout there is nothing to replay
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(FIXDIR), reason=f"reference fixtures absent: {FIXDIR}"
+)
+
 
 def _sha(s: str) -> str:
     return hashlib.sha256(s.encode()).hexdigest()

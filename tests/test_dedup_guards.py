@@ -16,6 +16,8 @@ from __future__ import annotations
 import pytest
 
 from liatrio_otel_collector_spark.operators.dedup import (
+    _materialized_signatures,
+    doc_freq_split,
     minhash_candidates,
     ngram_candidates,
     ngram_jaccard_pairs,
@@ -31,8 +33,9 @@ def test_minhash_bucket_width_guard(spark):
     C(8,2) = 28 distinct pairs survive."""
     docs = [(f"d{i:03d}", "alpha beta gamma delta epsilon zeta") for i in range(60)]
     df = spark.createDataFrame(docs, DOC_SCHEMA)
-    uncapped = minhash_candidates(df, max_bucket_width=10**9).count()
-    capped = minhash_candidates(df, max_bucket_width=8).count()
+    sig = _materialized_signatures(df)
+    uncapped = minhash_candidates(sig, max_bucket_width=10**9).count()
+    capped = minhash_candidates(sig, max_bucket_width=8).count()
     assert uncapped == 60 * 59 // 2
     assert 0 < capped <= 28
 
@@ -47,8 +50,8 @@ def test_ngram_doc_freq_guard(spark):
     ]
     df = spark.createDataFrame(docs, DOC_SCHEMA)
     sh = shingles(df)
-    uncapped = ngram_candidates(sh, max_doc_freq=10**9).count()
-    capped = ngram_candidates(sh, max_doc_freq=10).count()
+    uncapped = ngram_candidates(doc_freq_split(sh, max_doc_freq=10**9)[0]).count()
+    capped = ngram_candidates(doc_freq_split(sh, max_doc_freq=10)[0]).count()
     assert uncapped == 60 * 59 // 2
     assert capped == 0
 

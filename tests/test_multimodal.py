@@ -1,18 +1,15 @@
 """Multimodal plumbing tests: binary columns, Arrow-batched mapInPandas
-feature extraction (deterministic fake codec), frame-sample grid, and the
-explicit NotImplementedError seam where real codecs plug in."""
+feature extraction (deterministic fake codec) and the frame-sample grid."""
 
 from __future__ import annotations
 
 import hashlib
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from liatrio_otel_collector_spark.operators.multimodal import (
     FEATURE_DIM,
-    decode_image_stub,
     fake_decode_features,
     frame_sample_plan,
     synthetic_media,
@@ -52,60 +49,3 @@ def test_frame_sample_grid(spark):
     assert per_vid["2"] == 3
     # only videos (id % 3 == 2) appear
     assert all(int(k) % 3 == 2 for k in per_vid)
-
-
-def test_decode_stub_is_explicit(spark):
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"\x89PNG...")
-
-
-# ---------------------------------------------------------------------------
-# Codec probe (VERDICT r2 item 6): the real Pillow decode path activates
-# wherever the lib imports; in this container the probe documents its absence.
-# ---------------------------------------------------------------------------
-
-import pytest
-
-from liatrio_otel_collector_spark.operators.multimodal import (
-    decode_image_stub,
-    pillow_available,
-    real_decode_features,
-)
-
-
-def test_codec_probe_documented():
-    """Either Pillow imports (real path active) or decode raises the
-    documented NotImplementedError naming the probe — never a silent fake."""
-    if pillow_available():
-        import numpy as np
-        from PIL import Image
-        import io
-
-        buf = io.BytesIO()
-        Image.new("RGB", (4, 4), (255, 0, 0)).save(buf, format="PNG")
-        arr = decode_image_stub(buf.getvalue())
-        assert arr.shape == (4, 4, 3) and arr[0, 0, 0] == 255
-    else:
-        with pytest.raises(NotImplementedError, match="pillow_available"):
-            decode_image_stub(b"\x89PNG\r\n\x1a\n")
-
-
-def test_real_decode_features_golden(spark):
-    """With Pillow present: a generated solid-color PNG decodes through the
-    SAME mapInPandas plumbing as the fake path, and the luminance histogram
-    concentrates in the single expected bin."""
-    if not pillow_available():
-        pytest.skip("Pillow absent in this container (probe documented above)")
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (8, 8), (255, 255, 255)).save(buf, format="PNG")  # lum=255 -> bin 15
-    media = spark.createDataFrame(
-        [("m1", "image", "image/png", 8, 8, 0, bytearray(buf.getvalue()))],
-        MEDIA_SCHEMA,
-    )
-    [row] = real_decode_features(media).collect()
-    feats = row["features"]
-    assert abs(feats[15] - 1.0) < 1e-6 and sum(feats[:15]) < 1e-6

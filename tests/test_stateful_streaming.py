@@ -1,5 +1,6 @@
-"""Stateful streaming operators: cross-batch dedup (applyInPandasWithState)
-and watermarked windowed counts with late-data drop (streaming/stateful.py).
+"""Stateful streaming twins (streaming/stateful.py): the groupbytrace
+processor's cross-batch GroupState with its wait_duration flush, and the
+interval processor's last value per watermarked window.
 
 These are the §2.9 semantics a batch DAG can't express — per-key GroupState
 surviving micro-batches, and engine-managed window state aging."""
@@ -11,174 +12,12 @@ import time
 
 from pyspark.sql import functions as F
 
-from liatrio_otel_collector_spark.streaming.stateful import (
-    dedup_by_key_stream,
-    windowed_counts,
-)
-
-DEDUP_SCHEMA = "doc_id string, n_tok int, source string, id bigint"
-WIN_SCHEMA = "doc_id string, source string, event_ts timestamp"
-
 
 def _write_batch(spark, path, rows, schema, name):
     spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, name)
     )
     time.sleep(1.1)  # distinct mtimes => deterministic file order per trigger
-
-
-def test_cross_batch_dedup(spark, tmp_path):
-    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    os.makedirs(indir)
-    # batch 0: d0..d9 (d3 duplicated in-batch); batch 1: d5..d14 overlap
-    _write_batch(
-        spark,
-        indir,
-        [(f"d{i}", 10 + i, "api", 0) for i in range(10)] + [("d3", 99, "api", 0)],
-        DEDUP_SCHEMA,
-        "b0",
-    )
-    _write_batch(
-        spark,
-        indir,
-        [(f"d{i}", 20 + i, "webhook", 1) for i in range(5, 15)],
-        DEDUP_SCHEMA,
-        "b1",
-    )
-    stream = (
-        spark.readStream.schema(DEDUP_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir + "/*")
-    )
-    q = (
-        dedup_by_key_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    out = spark.read.parquet(outdir)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    # every key exactly once
-    assert sorted(rows) == sorted(f"d{i}" for i in range(15))
-    assert out.count() == 15
-    # overlap keys kept their FIRST (batch-0) arrival
-    for i in range(5, 10):
-        assert rows[f"d{i}"]["first_batch"] == 0
-        assert rows[f"d{i}"]["source"] == "api"
-    for i in range(10, 15):
-        assert rows[f"d{i}"]["first_batch"] == 1
-    # the in-batch duplicate d3 kept the first row (n_tok 13, not 99)
-    assert rows["d3"]["n_tok"] == 13
-
-
-def test_watermark_drops_late_rows(spark, tmp_path):
-    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    os.makedirs(indir)
-    from datetime import datetime
-
-    ts = lambda h, m: datetime(2024, 1, 1, h, m, 0)  # noqa: E731
-    # batch 0: two 11:00-window events + a 12:00 event (watermark advances
-    # to 11:50 after this batch commits)
-    _write_batch(
-        spark,
-        indir,
-        [("a", "api", ts(11, 0)), ("b", "api", ts(11, 4)), ("c", "api", ts(12, 0))],
-        WIN_SCHEMA,
-        "b0",
-    )
-    # batch 1: on-time only — the 11:00 window finalizes + emits here, and
-    # the watermark propagates (under availableNow the filter in batch N uses
-    # the watermark established by batch N-2, verified via
-    # numRowsDroppedByWatermark in StreamingQueryProgress)
-    _write_batch(spark, indir, [("x", "api", ts(12, 10))], WIN_SCHEMA, "b1")
-    # batch 2: a LATE 11:02 event into the ALREADY-EMITTED 11:00 window —
-    # the engine must DROP it (append-mode windows never re-emit) — plus an
-    # on-time 12:20 event
-    _write_batch(
-        spark,
-        indir,
-        [("late", "api", ts(11, 2)), ("y", "api", ts(12, 20))],
-        WIN_SCHEMA,
-        "b2",
-    )
-    stream = (
-        spark.readStream.schema(WIN_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir + "/*")
-    )
-    q = (
-        windowed_counts(stream)
-        .writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    dropped = sum(
-        (p["stateOperators"][0].get("numRowsDroppedByWatermark", 0) if p["stateOperators"] else 0)
-        for p in q.recentProgress
-    )
-    out = sorted(
-        (str(r["window_start"]), r["n"]) for r in spark.read.parquet(outdir).collect()
-    )
-    # the late 11:02 row was DROPPED by the watermark (engine-counted), the
-    # 11:00 window emitted EXACTLY ONCE with the on-time count only, and no
-    # window row was ever duplicated/updated after emission
-    assert dropped == 1
-    assert out.count(("2024-01-01 11:00:00", 2)) == 1
-    assert len([1 for s, _ in out if s == "2024-01-01 11:00:00"]) == 1
-
-
-def test_dedup_state_survives_restart(spark, tmp_path):
-    """GroupState is checkpoint-backed: a SECOND availableNow run (fresh
-    query object, same checkpoint) must still drop keys emitted by the
-    first run — the resume property that makes webhook replays idempotent."""
-    indir, outdir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    os.makedirs(indir)
-    _write_batch(
-        spark, indir, [(f"k{i}", i, "api", 0) for i in range(5)], DEDUP_SCHEMA, "b0"
-    )
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(DEDUP_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(indir + "/*")
-        )
-        q = (
-            dedup_by_key_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-
-    run_once()  # emits k0..k4, state persisted
-    # new input: 3 replayed keys + 2 fresh ones, processed by a RESTARTED query
-    _write_batch(
-        spark,
-        indir,
-        [("k1", 99, "webhook", 1), ("k3", 99, "webhook", 1), ("k4", 99, "webhook", 1),
-         ("k5", 15, "webhook", 1), ("k6", 16, "webhook", 1)],
-        DEDUP_SCHEMA,
-        "b1",
-    )
-    run_once()
-    rows = {r["doc_id"]: r for r in spark.read.parquet(outdir).collect()}
-    assert sorted(rows) == [f"k{i}" for i in range(7)]
-    # replayed keys kept their ORIGINAL first-run rows
-    for i in (1, 3, 4):
-        assert rows[f"k{i}"]["first_batch"] == 0 and rows[f"k{i}"]["n_tok"] == i
-    assert rows["k5"]["first_batch"] == 1 and rows["k6"]["first_batch"] == 1
 
 
 # ---------------------------------------------------------------------------
@@ -382,91 +221,3 @@ def test_interval_last_stream_deterministic_tie(spark, tmp_path):
     out = spark.read.parquet(outdir).collect()
     row = [r for r in out if r["interval_start"].minute == 0][0]
     assert row["last_value"] == 7.0 and row["last_ts"] == tied
-
-
-def test_streaming_session_window_matches_batch(spark, tmp_path):
-    """session_counts (native session_window, append mode) emits exactly the
-    sessions the batch sessionize operator derives, once the watermark has
-    passed them.  Two availableNow invocations: the sentinel in the first
-    advances the watermark, the second's extra batch flushes the aged-out
-    session state (watermark is applied one batch behind its source rows)."""
-    from datetime import timedelta
-
-    from pyspark.sql import Window
-
-    from liatrio_otel_collector_spark.operators.temporal import sessionize
-    from liatrio_otel_collector_spark.sources.tables import load_tables
-    from liatrio_otel_collector_spark.streaming.stateful import session_counts
-
-    events = load_tables(spark, "/root/testdata/sf0.001")["events"].select("user_id", "ts")
-    gap_s = 1800
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    # the two operators diverge only on exact-gap adjacent pairs (see the
-    # session_counts docstring) — assert this input has none
-    w = Window.partitionBy("user_id").orderBy("ts")
-    exact = (
-        events.withColumn("_d", us - F.lag(us).over(w))
-        .filter(F.col("_d") == gap_s * 1_000_000)
-        .count()
-    )
-    assert exact == 0
-
-    indir, outdir, ckpt = (str(tmp_path / n) for n in ("in", "out", "ckpt"))
-    os.makedirs(indir)
-    events.coalesce(1).write.parquet(os.path.join(indir, "b0"))
-    max_ts = events.agg(F.max("ts")).first()[0]
-
-    def _sentinel(uid: int, days: int, name: str) -> None:
-        row = [(uid, max_ts + timedelta(days=days))]
-        spark.createDataFrame(row, events.schema).coalesce(1).write.parquet(
-            os.path.join(indir, name)
-        )
-
-    def _run() -> None:
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(indir + "/*")
-        )
-        q = (
-            session_counts(stream, gap="30 minutes")
-            .writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-
-    _sentinel(999_999, 10, "b1")
-    _run()
-    _sentinel(999_998, 20, "b2")
-    _run()
-
-    got = (
-        spark.read.parquet(outdir)
-        .filter(F.col("user_id") < 999_000)
-        .select(
-            "user_id",
-            F.unix_micros(F.col("session_start").cast("timestamp")).alias("start_us"),
-            "n_events",
-            (
-                F.unix_micros(F.col("session_end").cast("timestamp")) - gap_s * 1_000_000
-            ).alias("last_us"),
-        )
-    )
-    exp = (
-        sessionize(events, ("user_id",), "ts", gap_s)
-        .groupBy("user_id", "session_seq")
-        .agg(
-            F.min(us).alias("start_us"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.max(us).alias("last_us"),
-        )
-        .select("user_id", "start_us", "n_events", "last_us")
-    )
-    got_rows = sorted(map(tuple, got.collect()))
-    exp_rows = sorted(map(tuple, exp.collect()))
-    assert len(got_rows) > 0
-    assert got_rows == exp_rows
