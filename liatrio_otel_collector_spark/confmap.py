@@ -16,37 +16,40 @@ This module re-expresses that contract over the Spark engine:
 
     load_config(yaml_text)            -> validated CollectorConfig
     assemble(spark, cfg, ctx)         -> {pipeline_name: DataFrame}  (lazy DAG)
-    write_config_batch(spark, ...)    -> {pipeline: {exporter: row_count}}
-    run_config_pipelines(spark, ...)  -> one write_config_batch, batch_id 0
-    start_config_stream(spark, ...)   -> one write_config_batch per micro-batch
+    config_stages(spark, ...)         -> one write_batch stage per pipeline
+    run_config_pipelines(spark, ...)  -> one write_batch, batch_id 0
+    start_config_stream(spark, ...)   -> one write_batch per micro-batch
 
 Receivers map to source DataFrames (scraper receivers run their snapshot
 emit over the domain views; push receivers take an injected frame — the
-batch analog of a listening socket). Processors fold left-to-right in
-declaration order, exactly like the collector chains them. Exporters fan
-the SAME DataFrame out (K3) through :func:`write_config_batch`, the one
-config sink writer, on the flagship's fan-out body (plans/pipeline.py
-``fan_out``): each pipeline frame is staged once; its lineage manifest
-goes to ``_lineage/<pipeline>/batch_id=K/``; every `file`/`otlphttp`
-exporter writes ``<exporter dir>/batch_id=K/`` with mode "overwrite",
-concurrently, where the exporter dir is ``<path>/<pipeline>`` when a file
-exporter sets ``path:`` and ``<output_dir>/<pipeline>/<exporter id, / ->
-_>`` otherwise; `debug` writes nothing; every exporter reports the
-manifest's row count; and one ``_metrics`` row per batch goes to
-``_metrics/batch_id=K/`` with mode "overwrite".
+batch analog of a listening socket; the azuredevops receiver scrapes in a
+metrics pipeline and turns its injected webhook frame into spans in a
+traces pipeline). Processors fold left-to-right in declaration order,
+exactly like the collector chains them. Exporters fan the SAME DataFrame
+out (K3) through the one batch writer, plans/pipeline.py ``write_batch``,
+which also runs the flagship topology: each pipeline frame is one stage,
+staged once; its lineage manifest goes to ``_lineage/<pipeline>/batch_id=K/``;
+every `file`/`otlphttp` exporter writes ``<exporter dir>/batch_id=K/`` with
+mode "overwrite", concurrently, where the exporter dir is
+``<path>/<pipeline>`` when a file exporter sets ``path:`` and
+``<output_dir>/<pipeline>/<exporter id, / -> _>`` otherwise; `debug` writes
+nothing; every exporter reports the manifest's row count; and one
+``_metrics`` row per batch (``input_rows``, ``sink_rows`` keyed by
+pipeline, ``process_sec``, ``rows_per_sec``, ``processed_at``: the
+flagship's schema) goes to ``_metrics/batch_id=K/`` with mode "overwrite".
 
 OTTL programs compile (r4): transform `log_statements` and filter
 `logs.log_record` conditions go through ottl.py — a real statement compiler
 (set/keep_keys/delete_key/limit, ParseJSON/Concat/IsMatch, where clauses)
 that emits the same JVM-side Catalyst expressions the hand-written analogs
 in plans/logs.py use; consecutive transform/filter processors compile as
-one unit so keep_keys-derived schemas inform earlier ParseJSON calls.  The
-named analogs (`analog: ...`) and generic `where:` / `set:` clauses remain
-as shorthand.  `start_config_stream` runs the declared topology
-continuously (foreachBatch re-assembly per micro-batch, checkpointed); a
-replayed micro-batch replaces its sinks, lineage and ``_metrics`` row.  It
-refuses `groupbytrace` and `interval` processors downstream of the
-streaming receiver: their batch twins see one micro-batch at a time.
+one unit so keep_keys-derived schemas inform earlier ParseJSON calls.
+Generic `where:` / `set:` clauses remain as shorthand.
+`start_config_stream` runs the declared topology continuously
+(foreachBatch re-assembly per micro-batch, checkpointed); a replayed
+micro-batch replaces its sinks, lineage and ``_metrics`` row.  It refuses
+`groupbytrace` and `interval` processors downstream of the streaming
+receiver: their batch twins see one micro-batch at a time.
 """
 
 from __future__ import annotations
@@ -54,11 +57,8 @@ from __future__ import annotations
 import dataclasses
 import os
 import re
-import shutil
-import tempfile
-import time
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterable
+from typing import Any, Iterable
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession
@@ -66,13 +66,9 @@ from pyspark.sql import functions as F
 
 from .operators.setops import fan_in
 from .plans.grouping import group_by_attrs, group_by_trace, interval_last
-from .plans.logs import (
-    gitlab_enrich,
-    ottl_filter_pipeline_events,
-    ottl_parse_body,
-    ottl_promote_attrs,
-)
-from .plans.pipeline import Sink, batch_dir, fan_out, sink_defaults, staged, write_metrics
+from .plans.logs import gitlab_enrich
+from .plans.pipeline import Sink, Stage, batch_dir, output_dir_or_scratch
+from .plans.pipeline import sink_defaults, write_batch
 from .plans.samplers import probabilistic_sample, tail_sample_errors
 from .sources.domain import NOW, VIEW_BUILDERS
 from .sources.sequences import sequences
@@ -266,7 +262,6 @@ class AssembleContext:
     frames: dict[str, DataFrame] = field(default_factory=dict)  # push receivers
     components_dim: DataFrame | None = None  # gitlab processor lookup
     output_dir: str | None = None
-    sink_format: str = field(default_factory=lambda: sink_defaults()[0])
 
 
 def _views(spark: SparkSession, ctx: AssembleContext) -> dict[str, DataFrame]:
@@ -276,9 +271,11 @@ def _views(spark: SparkSession, ctx: AssembleContext) -> dict[str, DataFrame]:
     return {name: build(t) for name, build in VIEW_BUILDERS.items()}
 
 
-def _build_receiver(spark: SparkSession, rid: str, rcfg: dict, ctx: AssembleContext) -> DataFrame:
+def _build_receiver(
+    spark: SparkSession, rid: str, rcfg: dict, ctx: AssembleContext, signal: str
+) -> DataFrame:
     from .plans.vcs_metrics import (
-        azuredevops_scrape_metrics,
+        azuredevops_view_scrape,
         github_scrape_metrics,
         gitlab_scrape_metrics,
     )
@@ -341,37 +338,23 @@ def _build_receiver(spark: SparkSession, rid: str, rcfg: dict, ctx: AssembleCont
             "deletions",
         )
         return gitlab_scrape_metrics(projects, branches, mrs, org=org, now=NOW)
+    if rtype == "azuredevops" and signal == "traces":
+        # the receiver's webhook half: pipeline events become spans
+        # (trace_receiver.go); the raw payloads are injected like a push
+        # receiver's
+        from .plans.ado_traces import ado_trace_pipeline
+
+        if rid not in ctx.frames:
+            raise ConfigError(
+                f"receiver {rid!r} in a traces pipeline needs an injected webhook frame "
+                "(body_raw) in ctx.frames"
+            )
+        return ado_trace_pipeline(ctx.frames[rid])
     if rtype == "azuredevops":
-        # same input shaping as the a25_ado_snapshot_emit query
-        v = _views(spark, ctx)
         sc = rcfg.get("scrapers", {}).get("azuredevops", {}) or {}
-        prs = v["pull_requests"].select(
-            "repo_name",
-            F.col("repo_name").alias("repo_id"),
-            F.lit("").alias("url"),
-            "pr_id",
-            F.when(F.col("state") == "MERGED", "completed").otherwise("active").alias("status"),
-            F.col("created_at").cast("timestamp").alias("created_at"),
-            F.col("merged_at").cast("timestamp").alias("closed_at"),
-            F.concat(F.lit("br-"), (F.col("pr_id").cast("bigint") % 11).cast("string")).alias(
-                "source_ref"
-            ),
-            "additions",
-            "deletions",
-        )
-        repos = (
-            prs.select("repo_name", "repo_id", "url")
-            .distinct()
-            .withColumn("default_branch", F.lit("main"))
-        )
-        branches = (
-            prs.select("repo_name", "repo_id", "url", F.col("source_ref").alias("branch_name"))
-            .distinct()
-            .withColumn("initial_commit_ts", F.lit(None).cast("timestamp"))
-        )
-        return azuredevops_scrape_metrics(
-            repos, branches, prs,
-            org=sc.get("organization", "org"), now=NOW,
+        return azuredevops_view_scrape(
+            _views(spark, ctx)["pull_requests"],
+            org=sc.get("organization", "org"),
             project=sc.get("project", ""),
         )
     if rtype == "sequences":
@@ -389,16 +372,6 @@ def _build_receiver(spark: SparkSession, rid: str, rcfg: dict, ctx: AssembleCont
     if rid in ctx.frames:
         return ctx.frames[rid]
     raise ConfigError(f"push receiver {rid!r} needs an injected frame in ctx.frames")
-
-
-# named analogs of the reference's two OTTL programs (plans/logs.py)
-_TRANSFORM_ANALOGS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "parse_body": ottl_parse_body,
-    "gitlabpipelineevents": ottl_promote_attrs,
-}
-_FILTER_ANALOGS: dict[str, Callable[[DataFrame], DataFrame]] = {
-    "gitlabpipelineevents": ottl_filter_pipeline_events,
-}
 
 
 def _is_ottl(pid: str, pcfg: dict) -> bool:
@@ -423,28 +396,16 @@ def _apply_processor(df: DataFrame, pid: str, pcfg: dict, ctx: AssembleContext) 
     """One non-OTTL processor; :func:`assemble` compiles every OTTL run."""
     ptype = _ctype(pid)
     if ptype == "transform":
-        analog = pcfg.get("analog")
-        if analog is not None:
-            try:
-                return _TRANSFORM_ANALOGS[analog](df)
-            except KeyError:
-                raise ConfigError(f"processor {pid!r}: unknown analog {analog!r}") from None
         sets = pcfg.get("set") or {}
         if not sets:
-            raise ConfigError(f"processor {pid!r}: needs 'analog', 'set' or 'log_statements'")
+            raise ConfigError(f"processor {pid!r}: needs 'set' or 'log_statements'")
         for col, expr in sets.items():
             df = df.withColumn(col, F.expr(str(expr)))
         return df
     if ptype == "filter":
-        analog = pcfg.get("analog")
-        if analog is not None:
-            try:
-                return _FILTER_ANALOGS[analog](df)
-            except KeyError:
-                raise ConfigError(f"processor {pid!r}: unknown analog {analog!r}") from None
         where = pcfg.get("where")
         if not where:
-            raise ConfigError(f"processor {pid!r}: needs 'analog', 'where' or 'logs'")
+            raise ConfigError(f"processor {pid!r}: needs 'where' or 'logs'")
         return df.filter(F.expr(str(where)))
     if ptype == "attributes":
         for col, value in (pcfg.get("insert") or {}).items():
@@ -557,23 +518,25 @@ def assemble(
                         else fan_in(*conn_inputs[c])
                     )
                     conn_frames[c] = _apply_connector(merged, c, cfg.connectors[c])
+            # the pipeline's signal (logs/traces/metrics, before any '/name'
+            # suffix) picks what a two-signal receiver emits (azuredevops:
+            # spans in traces, the scrape otherwise), and which OTTL
+            # statement lists compile and onto which context's columns —
+            # same dispatch as the collector's service graph handing each
+            # component the signal's pdata type.  A pipeline with any OTHER
+            # name prefix may carry only generic processors: compiling its
+            # OTTL under a guessed signal would silently no-op every
+            # statement (the collector rejects such pipeline IDs at config
+            # validation).
+            signal = name.split("/", 1)[0]
             frames = [
                 conn_frames[r]
                 if r in cfg.connectors
-                else _build_receiver(spark, r, cfg.receivers[r], ctx)
+                else _build_receiver(spark, r, cfg.receivers[r], ctx, signal)
                 for r in p["receivers"]
             ]
             df = frames[0] if len(frames) == 1 else fan_in(*frames)
             procs = p["processors"]
-            # the pipeline's signal (logs/traces/metrics, before any '/name'
-            # suffix) picks which OTTL statement lists compile and onto which
-            # context's columns — same dispatch as the collector's service
-            # graph handing each processor the signal's pdata type.  A
-            # pipeline with any OTHER name prefix may carry only generic
-            # processors: compiling its OTTL under a guessed signal would
-            # silently no-op every statement (the collector rejects such
-            # pipeline IDs at config validation).
-            signal = name.split("/", 1)[0]
             i = 0
             while i < len(procs):
                 pid = procs[i]
@@ -614,27 +577,28 @@ def assemble(
     return out
 
 
-def write_config_batch(
+def _exporters(cfg: CollectorConfig, name: str) -> list[str]:
+    return [e for e in cfg.pipelines[name]["exporters"] if e not in cfg.connectors]
+
+
+def config_stages(
     spark: SparkSession,
     cfg: CollectorConfig,
     ctx: AssembleContext,
-    batch_id: int,
     pipelines: Iterable[str],
-) -> dict[str, dict[str, int]]:
-    """The config writer: materialize each pipeline in ``pipelines`` through
-    its exporters as batch ``batch_id`` under ``ctx.output_dir``, in the
-    layout the module docstring gives.  Each pipeline frame is staged once,
-    so the processor chain runs once however many exporters read it, and is
-    one row sink of the flagship's :func:`~.plans.pipeline.fan_out`: every
-    member, written to its exporter dirs concurrently."""
-    t0 = time.time()
+    output_dir: str,
+    batch_id: int,
+) -> list[Stage]:
+    """The config topology as :func:`~.plans.pipeline.write_batch` stages,
+    one per pipeline in ``pipelines``, in that order: the assembled frame
+    and one row sink named after the pipeline, every staged row, written to
+    its exporter dirs in the layout the module docstring gives.  Staging
+    runs the processor chain once however many exporters read it."""
     built = assemble(spark, cfg, ctx)
-    results: dict[str, dict[str, int]] = {}
-    routed: dict[str, int] = {}
-    for name in pipelines:
-        exporters = [e for e in cfg.pipelines[name]["exporters"] if e not in cfg.connectors]
+
+    def stage(name: str) -> Stage:
         dests = []
-        for eid in exporters:
+        for eid in _exporters(cfg, name):
             if _ctype(eid) == "debug":
                 continue  # the debug exporter prints; it has no sink
             ecfg = cfg.exporters.get(eid) or {}
@@ -643,43 +607,31 @@ def write_config_batch(
             root, leaf = (
                 (str(ecfg["path"]), name)
                 if ecfg.get("path") is not None
-                else (os.path.join(ctx.output_dir, name), eid.replace("/", "_"))
+                else (os.path.join(output_dir, name), eid.replace("/", "_"))
             )
-            dests.append((batch_dir(root, leaf, batch_id), ecfg.get("format", ctx.sink_format)))
-        with staged(
-            spark, built[name], sink_defaults()[1], f"liatrio_cfg_stage_b{batch_id}_"
-        ) as df:
-            routed[name] = fan_out(
-                spark, df, {name: Sink(df, tuple(dests), F.lit(True))},
-                ctx.output_dir, batch_id, ctx.sink_format,
-            )[name]
-        results[name] = {eid: routed[name] for eid in exporters}
-    total, elapsed = sum(routed.values()), time.time() - t0
-    write_metrics(
-        spark, ctx.output_dir, batch_id, ctx.sink_format,
-        (total, elapsed, total / elapsed, str(sorted(routed.items()))),
-        "routed_rows long, process_sec double, rows_per_sec double, per_pipeline string",
-    )
-    return results
+            dests.append(
+                (batch_dir(root, leaf, batch_id), ecfg.get("format", sink_defaults()[0]))
+            )
+        return built[name], lambda df: {name: Sink(df, tuple(dests), F.lit(True))}
+
+    return [stage(name) for name in pipelines]
 
 
 def run_config_pipelines(
     spark: SparkSession, cfg: CollectorConfig, ctx: AssembleContext | None = None
 ) -> dict[str, dict[str, int]]:
-    """Batch mode: one :func:`write_config_batch` (batch 0) over every
-    pipeline.  Without ``ctx.output_dir`` the sinks, lineage and ``_metrics``
-    go to a scratch directory that is removed afterwards (a file exporter's
-    ``path:`` still receives its sink)."""
+    """Batch mode: one :func:`~.plans.pipeline.write_batch` (batch 0) of
+    every pipeline's stage.  Without ``ctx.output_dir`` the sinks, lineage
+    and ``_metrics`` go to a scratch directory that is removed afterwards (a
+    file exporter's ``path:`` still receives its sink).  Returns, per
+    pipeline, each exporter's row count."""
     ctx = ctx or AssembleContext()
-    if ctx.output_dir:
-        return write_config_batch(spark, cfg, ctx, 0, cfg.pipelines)
-    out_dir = tempfile.mkdtemp(prefix="liatrio_cfg_sinks_", dir=sink_defaults()[1])
-    try:
-        return write_config_batch(
-            spark, cfg, dataclasses.replace(ctx, output_dir=out_dir), 0, cfg.pipelines
+    with output_dir_or_scratch(ctx.output_dir) as out:
+        counts = write_batch(
+            spark, config_stages(spark, cfg, ctx, cfg.pipelines, out, 0),
+            out, 0, sink_defaults()[0],
         )
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return {name: {eid: counts[name] for eid in _exporters(cfg, name)} for name in cfg.pipelines}
 
 
 def start_config_stream(
@@ -695,9 +647,10 @@ def start_config_stream(
     operating mode (a ticking service, config/config.yaml:24-25), not a
     one-shot batch.  ``stream_df`` is a streaming DataFrame standing in for
     the push receiver ``receiver_id``; micro-batch K is one
-    :func:`write_config_batch` of the pipelines downstream of that receiver,
-    with the batch frame injected as the receiver (one topology definition,
-    two execution modes).  The checkpoint makes the whole config-driven job
+    :func:`~.plans.pipeline.write_batch` of the stages of the pipelines
+    downstream of that receiver, in declaration order, with the batch frame
+    injected as the receiver (one topology definition, two execution
+    modes).  The checkpoint makes the whole config-driven job
     resumable; ``available_now`` picks the trigger (streaming/job.py
     ``start_query``).  A `groupbytrace` or `interval` processor downstream
     of ``receiver_id`` raises ConfigError."""
@@ -729,16 +682,15 @@ def start_config_stream(
     procs = [pid for n in affected for pid in cfg.pipelines[n]["processors"]]
     if stateful := sorted(pid for pid in procs if _ctype(pid) in _STATEFUL):
         raise ConfigError(f"processors {stateful} keep state across micro-batches")
+    pipelines = [n for n in cfg.pipelines if n in affected]
+    out = ctx.output_dir
+
+    def batch(df: DataFrame, k: int) -> None:
+        run = dataclasses.replace(ctx, frames={**ctx.frames, receiver_id: df})
+        write_batch(
+            spark, config_stages(spark, cfg, run, pipelines, out, k), out, k, sink_defaults()[0]
+        )
+
     return start_query(
-        stream_df.writeStream.foreachBatch(
-            lambda df, k: write_config_batch(
-                spark,
-                cfg,
-                dataclasses.replace(ctx, frames={**ctx.frames, receiver_id: df}),
-                k,
-                affected,
-            )
-        ),
-        checkpoint_dir,
-        available_now,
+        stream_df.writeStream.foreachBatch(batch), checkpoint_dir, available_now
     )

@@ -1880,35 +1880,11 @@ SELECT * FROM runs UNION ALL SELECT * FROM stages UNION ALL SELECT * FROM jobs
 # golden test, not here: branches get NULL initial_commit_ts.)
 # ---------------------------------------------------------------------------
 
-from .plans.vcs_metrics import ADO_DEFAULT_METRICS, azuredevops_scrape_metrics
-
-_A25_NOW = "2026-01-01 00:00:00"
+from .plans.vcs_metrics import azuredevops_view_scrape
 
 
 def _ado_snapshot(spark, sf):
-    prs = _view(spark, sf, "pull_requests").select(
-        "repo_name",
-        F.col("repo_name").alias("repo_id"),
-        F.lit("").alias("url"),
-        "pr_id",
-        F.when(F.col("state") == "MERGED", "completed").otherwise("active").alias("status"),
-        F.col("created_at").cast("timestamp").alias("created_at"),
-        F.col("merged_at").cast("timestamp").alias("closed_at"),
-        F.concat(F.lit("br-"), (F.col("pr_id").cast("bigint") % 11).cast("string")).alias("source_ref"),
-        "additions",
-        "deletions",
-    )
-    repos = prs.select("repo_name", "repo_id", "url").distinct().withColumn(
-        "default_branch", F.lit("main")
-    )
-    branches = (
-        prs.select("repo_name", "repo_id", "url", F.col("source_ref").alias("branch_name"))
-        .distinct()
-        .withColumn("initial_commit_ts", F.lit(None).cast("timestamp"))
-    )
-    emit = azuredevops_scrape_metrics(
-        repos, branches, prs, org="org", now=_A25_NOW, enabled=ADO_DEFAULT_METRICS
-    )
+    emit = azuredevops_view_scrape(_view(spark, sf, "pull_requests"), org="org")
     return emit.select(
         "metric_name",
         "value",
@@ -1962,7 +1938,7 @@ dp_change_count AS (
 ),
 dp_duration AS (
   SELECT 'vcs.change.duration' AS metric_name,
-         CAST(least(floor(epoch(TIMESTAMP '{_A25_NOW}')) - floor(epoch(created_at)), 9223372036) AS BIGINT) AS value,
+         CAST(least(floor(epoch(TIMESTAMP '{NOW}')) - floor(epoch(created_at)), 9223372036) AS BIGINT) AS value,
          u.k AS attr_key, u.v AS attr_value
   FROM pra,
        unnest([struct_pack(k := 'vcs.change.state', v := 'open'),

@@ -42,8 +42,7 @@ from pyspark.sql import functions as F
 
 from ..functions.strings import format_service_name
 from .traces import KIND_SERVER, SPAN_COLS, STATUS_ERROR, STATUS_OK, STATUS_UNSET
-
-GO_ZERO_RFC3339 = "0001-01-01T00:00:00Z"
+from .traces import _num, _put, _rfc3339
 
 _STEP = "struct<name:string,status:string,conclusion:string,number:int,started_at:timestamp,completed_at:timestamp>"
 
@@ -96,29 +95,12 @@ RUN_EVENT_SCHEMA = """
 """
 
 
-def _s(col: Column) -> Column:
-    """Go Get*() on a nil pointer returns "" — PutStr never skips a key."""
-    return F.coalesce(col.cast("string"), F.lit(""))
-
-
-def _rfc3339(ts: Column) -> Column:
-    """time.RFC3339 of a possibly-zero time (zero formats, it doesn't nil)."""
-    return F.coalesce(
-        F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ssXXX"), F.lit(GO_ZERO_RFC3339)
-    )
-
-
 def _digest(*parts: Column) -> Column:
     # Go Sprintf renders zero values ("0" for %d, "" for %s) — a missing
     # JSON field must hash like Go's zero, not null-propagate the whole id
     return F.sha2(
         F.concat(*[F.coalesce(p.cast("string"), F.lit("")) for p in parts]), 256
     )
-
-
-def _num(c: Column) -> Column:
-    """%d of a missing numeric field is "0"."""
-    return F.coalesce(c.cast("string"), F.lit("0"))
 
 
 def _trace_id(run_id: Column, attempt: Column) -> Column:
@@ -217,25 +199,25 @@ def actions_job_spans(
                 service_name_prefix,
                 service_name_suffix,
             ),
-            _s(wj["workflow_name"]),
+            _put(wj["workflow_name"]),
             _rfc3339(wj["created_at"]),
             _rfc3339(wj["completed_at"]),
-            _s(wj["conclusion"]),
-            _s(wj["head_branch"]),
-            _s(wj["head_sha"]),
-            _s(wj["html_url"]),
+            _put(wj["conclusion"]),
+            _put(wj["head_branch"]),
+            _put(wj["head_sha"]),
+            _put(wj["html_url"]),
             labels_attr,
-            _s(job),
-            _s(run_id),
-            _s(wj["runner_group_name"]),
-            _s(wj["runner_name"]),
-            _s(F.col("sender.login")),
+            _put(job),
+            _put(run_id),
+            _put(wj["runner_group_name"]),
+            _put(wj["runner_name"]),
+            _put(F.col("sender.login")),
             _rfc3339(wj["started_at"]),
-            _s(wj["status"]),
+            _put(wj["status"]),
             F.lit("github"),
-            _s(F.col("repository.owner.login")),
-            _s(F.col("repository.name")),
-            _s(F.col("repository.url")),
+            _put(F.col("repository.owner.login")),
+            _put(F.col("repository.name")),
+            _put(F.col("repository.url")),
         ),
     )
 
@@ -268,7 +250,7 @@ def actions_job_spans(
         .when(all_ok, F.lit(STATUS_OK))
         .otherwise(F.lit(STATUS_UNSET))
         .alias("status_code"),
-        _s(wj["conclusion"]).alias("status_message"),
+        _put(wj["conclusion"]).alias("status_message"),
         F.create_map().cast("map<string,string>").alias("attrs"),
         F.array().cast("array<string>").alias("link_trace_ids"),
         F.col("_resource").alias("resource"),
@@ -320,7 +302,7 @@ def actions_job_spans(
         F.col("step.started_at").alias("start_ts"),
         completed_at.alias("end_ts"),
         _status_from_conclusion(F.col("step.conclusion")).alias("status_code"),
-        _s(F.col("step.conclusion")).alias("status_message"),
+        _put(F.col("step.conclusion")).alias("status_message"),
         F.map_from_arrays(
             F.array(
                 F.lit("ci.github.workflow.job.step.name"),
@@ -331,9 +313,9 @@ def actions_job_spans(
                 F.lit("ci.github.workflow.job.step.completed_at"),
             ),
             F.array(
-                _s(F.col("step.name")),
-                _s(F.col("step.status")),
-                _s(F.col("step.conclusion")),
+                _put(F.col("step.name")),
+                _put(F.col("step.status")),
+                _put(F.col("step.conclusion")),
                 number_attr.cast("string"),
                 _rfc3339(F.col("step.started_at")),
                 _rfc3339(completed_at),
@@ -417,33 +399,33 @@ def actions_run_spans(
             service_name_prefix,
             service_name_suffix,
         ),
-        _s(wr["actor"]["login"]),
-        _s(wr["conclusion"]),
+        _put(wr["actor"]["login"]),
+        _put(wr["conclusion"]),
         _rfc3339(wr["created_at"]),
-        _s(wr["display_title"]),
-        _s(wr["event"]),
-        _s(wr["head_branch"]),
-        _s(wr["head_sha"]),
-        _s(wr["html_url"]),
-        _s(run_id),
-        _s(wr["name"]),
-        _s(F.col("workflow.path")),
-        _s(attempt),
+        _put(wr["display_title"]),
+        _put(wr["event"]),
+        _put(wr["head_branch"]),
+        _put(wr["head_sha"]),
+        _put(wr["html_url"]),
+        _put(run_id),
+        _put(wr["name"]),
+        _put(F.col("workflow.path")),
+        _put(attempt),
         _rfc3339(wr["run_started_at"]),
-        _s(wr["status"]),
-        _s(F.col("sender.login")),
-        _s(wr["triggering_actor"]["login"]),
+        _put(wr["status"]),
+        _put(F.col("sender.login")),
+        _put(wr["triggering_actor"]["login"]),
         _rfc3339(wr["updated_at"]),
         F.lit("github"),
-        _s(wr["head_branch"]),
-        _s(wr["head_commit"]["author"]["email"]),
-        _s(wr["head_commit"]["author"]["name"]),
-        _s(wr["head_commit"]["committer"]["email"]),
-        _s(wr["head_commit"]["committer"]["name"]),
-        _s(wr["head_commit"]["message"]),
+        _put(wr["head_branch"]),
+        _put(wr["head_commit"]["author"]["email"]),
+        _put(wr["head_commit"]["author"]["name"]),
+        _put(wr["head_commit"]["committer"]["email"]),
+        _put(wr["head_commit"]["committer"]["name"]),
+        _put(wr["head_commit"]["message"]),
         _rfc3339(wr["head_commit"]["timestamp"]),
-        _s(wr["head_sha"]),
-        _s(F.col("repository.name")),
+        _put(wr["head_sha"]),
+        _put(F.col("repository.name")),
     ]
     resource = F.map_from_arrays(
         F.array(*[F.lit(k) for k in base_keys]), F.array(*base_vals)
@@ -496,7 +478,7 @@ def actions_run_spans(
         wr["run_started_at"].alias("start_ts"),
         wr["updated_at"].alias("end_ts"),
         _status_from_conclusion(wr["conclusion"]).alias("status_code"),
-        _s(wr["conclusion"]).alias("status_message"),
+        _put(wr["conclusion"]).alias("status_message"),
         F.create_map().cast("map<string,string>").alias("attrs"),
         link.alias("link_trace_ids"),
         resource.alias("resource"),

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .traces import _nonnull_map, _num, _put, _rfc3339
+
 KIND_INTERNAL = 1
 
 EVENT_RUN = "ms.vss-pipelines.run-state-changed-event"
@@ -67,11 +69,6 @@ def _digest_span(key: Column) -> Column:
     return F.substring(F.sha2(key, 256), 17, 16)
 
 
-def _num(c: Column) -> Column:
-    """Go %d of a missing field's zero value is "0" — never null-propagate."""
-    return F.coalesce(c.cast("string"), F.lit("0"))
-
-
 def ado_trace_id(run_id: Column) -> Column:
     """newTraceID (trace_event_handling.go:203-225): sha256("{runId}t")[0:32]."""
     return F.substring(F.sha2(F.concat(_num(run_id), F.lit("t")), 256), 1, 32)
@@ -108,22 +105,6 @@ def ado_url(col: Column) -> Column:
     ).otherwise(col)
 
 
-GO_ZERO_RFC3339 = "0001-01-01T00:00:00Z"
-
-
-def _rfc3339(ts: Column) -> Column:
-    """time.RFC3339 — Go formats the zero time rather than skipping it."""
-    return F.coalesce(
-        F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ssXXX"), F.lit(GO_ZERO_RFC3339)
-    )
-
-
-def _put(v: Column) -> Column:
-    """PutStr semantics: Go getters on missing JSON fields give ""/0, so the
-    attr is ALWAYS present — from_json nulls must coalesce, not drop."""
-    return F.coalesce(v.cast("string"), F.lit(""))
-
-
 def _put_int(v: Column) -> Column:
     """PutInt semantics: missing numeric fields are 0, never dropped."""
     return F.coalesce(v.cast("bigint"), F.lit(0)).cast("string")
@@ -145,13 +126,6 @@ def _repo_attrs(r: Column) -> list[tuple[str, Column]]:
         ("vcs.commit.author.email", F.when(has_author, _put(repo["change"]["author"]["email"]))),
         ("vcs.commit.message", F.when(has_author, _put(repo["change"]["message"]))),
     ]
-
-
-def _nonnull_map(pairs) -> Column:
-    kvs = []
-    for k, v in pairs:
-        kvs.extend([F.lit(k), v.cast("string")])
-    return F.map_filter(F.create_map(*kvs), lambda _, v: v.isNotNull())
 
 
 def parse_ado_events(raw: DataFrame, body_col: str = "body_raw") -> DataFrame:
@@ -192,7 +166,7 @@ def ado_pipeline_run_spans(events: DataFrame, gate: bool = True) -> DataFrame:
     if gate:
         done = done.filter(e["run"]["state"] == "completed")
     resource = _nonnull_map(
-        [
+        *[
             ("cicd.pipeline.name", _put(e["run"]["pipeline"]["name"])),
             ("cicd.pipeline.id", _put_int(e["runId"])),
             ("cicd.pipeline.run.state", _put(e["run"]["state"])),
@@ -229,7 +203,7 @@ def ado_stage_spans(events: DataFrame, gate: bool = True) -> DataFrame:
     if gate:
         done = done.filter(e["stage"]["state"] == "completed")
     resource = _nonnull_map(
-        [
+        *[
             ("cicd.pipeline.name", _put(e["pipeline"]["name"])),
             ("cicd.pipeline.id", _put_int(e["runId"])),
             ("cicd.pipeline.stage.name", _put(e["stage"]["name"])),
@@ -269,7 +243,7 @@ def ado_job_spans(events: DataFrame, gate: bool = True) -> DataFrame:
         repo["change"]["author"]["name"] != ""
     )
     resource = _nonnull_map(
-        [
+        *[
             ("cicd.pipeline.name", _put(e["pipeline"]["name"])),
             ("cicd.pipeline.id", _put_int(e["runId"])),
             ("cicd.pipeline.job.name", _put(e["job"]["name"])),

@@ -96,6 +96,27 @@ def _nonnull_map(*pairs) -> Column:
     return F.map_filter(F.create_map(*kvs), lambda _, v: v.isNotNull())
 
 
+# Go zero values, shared by the webhook span builders (actions_traces.py,
+# ado_traces.py): a missing JSON field reads as Go's zero, never as null
+GO_ZERO_RFC3339 = "0001-01-01T00:00:00Z"
+
+
+def _rfc3339(ts: Column) -> Column:
+    """time.RFC3339: Go formats the zero time rather than skipping it."""
+    return F.coalesce(F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ssXXX"), F.lit(GO_ZERO_RFC3339))
+
+
+def _put(v: Column) -> Column:
+    """PutStr of a Go getter: a missing field gives "", so the attr is ALWAYS
+    present — from_json nulls must coalesce, not drop."""
+    return F.coalesce(v.cast("string"), F.lit(""))
+
+
+def _num(c: Column) -> Column:
+    """Go %d of a missing numeric field is "0" — never null-propagate."""
+    return F.coalesce(c.cast("string"), F.lit("0"))
+
+
 def workflow_run_spans(events: DataFrame) -> DataFrame:
     """Run event → root span (handleWorkflowRun :21-43 + createRootSpan
     :125-171 + getWorkflowRunAttrs model.go:154-225)."""

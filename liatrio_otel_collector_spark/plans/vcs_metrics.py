@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.maps import normalize_severity
 from ..functions.strings import age_seconds
+from ..sources.domain import NOW
 
 GO_MAX_DURATION_S = 9_223_372_036  # MaxInt64 ns in whole seconds
 
@@ -895,3 +896,35 @@ def azuredevops_scrape_metrics(
     # rb.SetVcsProviderName/SetVcsOwnerName serialize to the newer names).
     resource = _attrs(("organization.name", F.lit(org)), ("vcs.vendor.name", F.lit("azuredevops")))
     return out.withColumn("resource", resource)
+
+
+def azuredevops_view_scrape(pull_requests: DataFrame, org: str, project: str = "") -> DataFrame:
+    """:func:`azuredevops_scrape_metrics` at the pinned clock ``NOW`` over
+    ADO-shaped inputs derived from the domain ``pull_requests`` view: the
+    azuredevops receiver's scrape and the a25_ado_snapshot_emit query.
+    Every branch has a NULL initial_commit_ts, so no vcs.ref.time point."""
+    prs = pull_requests.select(
+        "repo_name",
+        F.col("repo_name").alias("repo_id"),
+        F.lit("").alias("url"),
+        "pr_id",
+        F.when(F.col("state") == "MERGED", "completed").otherwise("active").alias("status"),
+        F.col("created_at").cast("timestamp").alias("created_at"),
+        F.col("merged_at").cast("timestamp").alias("closed_at"),
+        F.concat(F.lit("br-"), (F.col("pr_id").cast("bigint") % 11).cast("string")).alias(
+            "source_ref"
+        ),
+        "additions",
+        "deletions",
+    )
+    repos = (
+        prs.select("repo_name", "repo_id", "url")
+        .distinct()
+        .withColumn("default_branch", F.lit("main"))
+    )
+    branches = (
+        prs.select("repo_name", "repo_id", "url", F.col("source_ref").alias("branch_name"))
+        .distinct()
+        .withColumn("initial_commit_ts", F.lit(None).cast("timestamp"))
+    )
+    return azuredevops_scrape_metrics(repos, branches, prs, org=org, now=NOW, project=project)

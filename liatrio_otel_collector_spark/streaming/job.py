@@ -7,11 +7,11 @@ execution here:
 
 - the source is a replayable stream (file stream over the sequences table;
   maxFilesPerTrigger is the collection-interval analog);
-- each micro-batch is one call of the batch writer
-  (:func:`~liatrio_otel_collector_spark.plans.pipeline.write_batch`): the
-  SAME parse → enrich → route → aggregate DAG, staging, sink layout,
-  lineage and ``_metrics`` row as batch mode (one code path, two execution
-  modes);
+- each micro-batch is one call of the one batch writer
+  (:func:`~liatrio_otel_collector_spark.plans.pipeline.write_batch`) on the
+  flagship stage (``flagship_stage``): the SAME parse → enrich → route →
+  aggregate DAG, staging, sink layout, lineage and ``_metrics`` row as
+  batch mode (one code path, two execution modes);
 - micro-batch K writes every sink to ``<sink>/batch_id=K/``, every lineage
   manifest to ``_lineage/<sink>/batch_id=K/`` and its ``_metrics`` row to
   ``_metrics/batch_id=K/``, all with mode "overwrite": the checkpoint
@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..plans.pipeline import PipelineConfig, write_batch
+from ..plans.pipeline import PipelineConfig, flagship_stage, write_batch
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, id bigint"
 
@@ -70,7 +70,10 @@ def start_stream(spark: SparkSession, cfg: StreamingConfig, available_now: bool 
     )
     return start_query(
         raw.writeStream.foreachBatch(
-            lambda df, k: write_batch(spark, df, cfg.pipeline, cfg.output_dir, k)
+            lambda df, k: write_batch(
+                spark, [flagship_stage(spark, df, cfg.pipeline, cfg.output_dir, k)],
+                cfg.output_dir, k, cfg.pipeline.sink_format,
+            )
         ),
         cfg.checkpoint_dir,
         available_now,

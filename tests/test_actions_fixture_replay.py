@@ -23,10 +23,8 @@ from datetime import datetime, timezone
 
 import pytest
 
-from liatrio_otel_collector_spark.plans.actions_traces import (
-    GO_ZERO_RFC3339,
-    actions_webhook_spans,
-)
+from liatrio_otel_collector_spark.plans.actions_traces import actions_webhook_spans
+from liatrio_otel_collector_spark.plans.traces import GO_ZERO_RFC3339
 
 FIXDIR = "/root/reference/receiver/githubactionsreceiver/testdata"
 

@@ -18,13 +18,17 @@ from liatrio_otel_collector_spark.confmap import (
     load_config,
     run_config_pipelines,
 )
+from liatrio_otel_collector_spark.entry_queries import _ado_raw
+from liatrio_otel_collector_spark.plans.ado_traces import ado_trace_pipeline
 from liatrio_otel_collector_spark.plans.logs import log_pipeline
+from liatrio_otel_collector_spark.sources.tables import load_tables
 
 SF = "/root/testdata/sf0.001"
 
-# config/config.yaml re-expressed: same component ids, same service wiring
-# (webhookevent uncommented so the logs pipeline has its declared receiver;
-# otlphttp swapped for a file sink — no network in batch).
+# config/config.yaml re-expressed: same component ids, same service wiring,
+# the logs processors' OTTL programs verbatim (webhookevent uncommented so
+# the logs pipeline has its declared receiver; otlphttp swapped for a file
+# sink — no network in batch).
 REFERENCE_TOPOLOGY = """
 extensions:
   bearertokenauth/github:
@@ -54,11 +58,29 @@ receivers:
 
 processors:
   transform/body:
-    analog: parse_body
+    error_mode: ignore
+    log_statements: ['set(log.body, ParseJSON(log.body)) where log.body != nil']
   filter/gitlabpipelineevents:
-    analog: gitlabpipelineevents
+    error_mode: ignore
+    logs:
+      log_record:
+        - not IsMatch(body["object_kind"], "pipeline")
   transform/gitlabpipelineevents:
-    analog: gitlabpipelineevents
+    log_statements:
+      - context: log
+        statements:
+          - keep_keys(log.body, ["object_kind", "project", "object_attributes"])
+          - keep_keys(log.body["project"], ["id", "name", "namespace", "path_with_namespace", "web_url"]) where log.body["project"] != nil
+          - keep_keys(log.body["object_attributes"], ["id", "ref", "sha", "url", "status"]) where log.body["object_attributes"] != nil
+          - set(log.attributes["event.name"], Concat(["pipeline", log.body["project"]["id"], log.body["object_attributes"]["id"]], "_")) where log.body["project"]["id"] != nil and log.body["object_attributes"]["id"] != nil
+          - set(log.attributes["vcs.repository.owner"], log.body["project"]["namespace"]) where log.body["project"]["namespace"] != nil
+          - set(log.attributes["vcs.repository.url.full"], log.body["project"]["web_url"]) where log.body["project"]["web_url"] != nil
+          - set(log.attributes["vcs.ref.head.name"], log.body["object_attributes"]["ref"]) where log.body["object_attributes"]["ref"] != nil
+          - set(log.attributes["vcs.ref.head.revision"], log.body["object_attributes"]["sha"]) where log.body["object_attributes"]["sha"] != nil
+          - set(log.attributes["vcs.repository.name"], log.body["project"]["path_with_namespace"]) where log.body["project"]["path_with_namespace"] != nil
+          - set(log.attributes["vcs.repository.id"], Concat(["", log.body["project"]["id"]], "")) where log.body["project"]["id"] != nil
+          - set(resource.attributes["service.namespace"], "gitlab")
+          - set(resource.attributes["service.name"], log.body["project"]["name"]) where log.body["project"]["name"] != nil
   gitlab: {}
 
 exporters:
@@ -118,9 +140,11 @@ def _ctx(spark, tmp_path=None):
         [("my-group/my-project", "abc123", {"comps/test": "2.0.0"})],
         "repo_name string, revision string, components map<string,string>",
     )
+    # the azuredevops receiver's webhook payloads, for the traces pipeline
+    ado_raw = _ado_raw(load_tables(spark, SF)["events"])
     return AssembleContext(
         sf_dir=SF,
-        frames={"webhookevent": raw_logs},
+        frames={"webhookevent": raw_logs, "azuredevops": ado_raw},
         components_dim=dim,
         output_dir=str(tmp_path) if tmp_path is not None else None,
     ), raw_logs, dim
@@ -139,9 +163,17 @@ def test_reference_topology_runs(spark, tmp_path):
     # metrics pipeline = 3-receiver fan-in; both exporters saw the same rows
     assert counts["metrics"]["debug"] == counts["metrics"]["otlphttp/openobserve"] > 0
 
-    # traces pipeline = the single ado receiver's frame
+    # traces pipeline = the single ado receiver's frame: its webhook
+    # payloads as spans, not the scrape
     assembled = assemble(spark, cfg, ctx)
     assert counts["traces"]["debug"] == assembled["traces"].count() > 0
+    want_spans = ado_trace_pipeline(ctx.frames["azuredevops"])
+    assert counts["traces"]["debug"] == want_spans.count()
+    spans = assembled["traces"].select("trace_id", "span_id").collect()
+    assert all(r["trace_id"] and r["span_id"] for r in spans)
+    assert sorted(map(tuple, spans)) == sorted(
+        map(tuple, want_spans.select("trace_id", "span_id").collect())
+    )
 
     # fan-in really is the sum of the per-receiver snapshots
     per_receiver = sum(
@@ -161,6 +193,27 @@ def test_reference_topology_runs(spark, tmp_path):
     # file-style exporter wrote a readable sink
     written = spark.read.parquet(str(tmp_path / "metrics" / "otlphttp_openobserve"))
     assert written.count() == counts["metrics"]["debug"]
+
+
+def test_azuredevops_traces_needs_webhook_frame(spark):
+    """In a traces pipeline the azuredevops receiver reads its injected
+    webhook payloads, not the scrape; without them assembly refuses."""
+    cfg = load_config(
+        """
+receivers:
+  azuredevops: {}
+exporters:
+  debug: {}
+service:
+  pipelines:
+    traces:
+      receivers: [azuredevops]
+      processors: []
+      exporters: [debug]
+"""
+    )
+    with pytest.raises(ConfigError, match="webhook frame"):
+        assemble(spark, cfg, AssembleContext(sf_dir=SF))
 
 
 def test_logs_pipeline_output_matches_direct_plan(spark):
@@ -393,13 +446,7 @@ service:
     assert spark.read.parquet(str(tmp_path / "explicit" / "seqs")).count() == 100
 
 
-def test_config_metrics_row_round_trips(spark, tmp_path):
-    """The config writer's ``_metrics`` row reads back with its column names,
-    types and values."""
-    from liatrio_otel_collector_spark.confmap import write_config_batch
-
-    cfg = load_config(
-        """
+SEQS_TO_FILE = """
 receivers:
   sequences:
     n_rows: 100
@@ -412,21 +459,52 @@ service:
       processors: []
       exporters: [file/out]
 """
-    )
-    write_config_batch(spark, cfg, AssembleContext(output_dir=str(tmp_path)), 4, cfg.pipelines)
+
+
+def _config_batch(spark, cfg, out: str, batch_id: int) -> dict[str, int]:
+    """One config batch of every pipeline through the one batch writer."""
+    from liatrio_otel_collector_spark.confmap import config_stages
+    from liatrio_otel_collector_spark.plans.pipeline import sink_defaults, write_batch
+
+    stages = config_stages(spark, cfg, AssembleContext(), cfg.pipelines, out, batch_id)
+    return write_batch(spark, stages, out, batch_id, sink_defaults()[0])
+
+
+def test_config_metrics_row_round_trips(spark, tmp_path):
+    """The config batch's ``_metrics`` row reads back with its column names,
+    types and values."""
+    cfg = load_config(SEQS_TO_FILE)
+    _config_batch(spark, cfg, str(tmp_path), 4)
     m = spark.read.parquet(str(tmp_path / "_metrics" / "batch_id=4"))
     assert [(f.name, f.dataType.simpleString()) for f in m.schema.fields] == [
-        ("routed_rows", "bigint"),
+        ("input_rows", "bigint"),
+        ("sink_rows", "map<string,bigint>"),
         ("process_sec", "double"),
         ("rows_per_sec", "double"),
-        ("per_pipeline", "string"),
         ("processed_at", "timestamp"),
     ]
     (r,) = m.collect()
-    assert r["routed_rows"] == 100 and r["per_pipeline"] == "[('seqs', 100)]"
+    assert r["input_rows"] == 100 and r["sink_rows"] == {"seqs": 100}
     assert r["process_sec"] > 0
     assert r["rows_per_sec"] == pytest.approx(100 / r["process_sec"])
     assert r["processed_at"] is not None
+
+
+def test_flagship_and_config_metrics_share_one_schema(spark, tmp_path):
+    """A flagship batch and a config batch write ``_metrics`` rows of one
+    schema: the same writer writes both."""
+    from liatrio_otel_collector_spark.plans.pipeline import PipelineConfig, run_pipeline
+
+    flag, conf = str(tmp_path / "flagship"), str(tmp_path / "config")
+    counts = run_pipeline(spark, 500, PipelineConfig(output_dir=flag), batch_id=1)
+    _config_batch(spark, load_config(SEQS_TO_FILE), conf, 1)
+    a = spark.read.parquet(f"{flag}/_metrics/batch_id=1")
+    b = spark.read.parquet(f"{conf}/_metrics/batch_id=1")
+    assert a.schema == b.schema
+    ra, rb = a.first(), b.first()
+    assert (ra["input_rows"], rb["input_rows"]) == (500, 100)
+    assert ra["sink_rows"] == counts | {"_input": 500}
+    assert rb["sink_rows"] == {"seqs": 100}
 
 
 def test_connector_merges_multiple_producers(spark):
@@ -568,7 +646,7 @@ service:
     assert lineage.agg(F.sum("row_count")).first()[0] == n2
     metrics = spark.read.parquet(_os.path.join(out, "_metrics"))
     assert metrics.count() >= 1
-    assert metrics.agg(F.sum("routed_rows")).first()[0] >= n2
+    assert metrics.agg(F.sum("input_rows")).first()[0] >= n2
 
 
 def test_config_stream_replay_replaces_its_batch(spark, tmp_path):
@@ -645,7 +723,7 @@ service:
     # the configured path replaces the default <output_dir>/<pipeline>/<id> dir
     assert not _os.path.exists(_os.path.join(out, "raw"))
     metrics = spark.read.parquet(_os.path.join(out, "_metrics"))
-    assert [(r["batch_id"], r["routed_rows"]) for r in metrics.collect()] == [
+    assert [(r["batch_id"], r["input_rows"]) for r in metrics.collect()] == [
         (0, want_logs + 1000)
     ]
 

@@ -276,7 +276,7 @@ try:
         cond = ottl.parse_condition(f"{path} != nil")
         assert cond == ("!=", ("path", ("body", *parts)), ("nil",))
 
-    @given(garbage=st.text(alphabet="(){}[]\"'\;%$#@!", min_size=1, max_size=20))
+    @given(garbage=st.text(alphabet="(){}[]\"'\\;%$#@!", min_size=1, max_size=20))
     @settings(max_examples=200, deadline=None)
     def test_parser_never_crashes_on_garbage(garbage):
         """Malformed input raises OttlError, never an unhandled exception."""

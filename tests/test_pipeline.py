@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from liatrio_otel_collector_spark.plans.pipeline import (
     PipelineConfig,
     build_pipeline,
+    flagship_stage,
     run_pipeline,
     write_batch,
 )
@@ -122,6 +123,13 @@ def _columns(df) -> list[tuple[str, str]]:
     return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
 
 
+def _flagship_batch(spark, src, out: str, batch_id: int) -> dict[str, int]:
+    """One flagship batch of ``src`` through the one batch writer."""
+    cfg = PipelineConfig(output_dir=out)
+    stage = flagship_stage(spark, src, cfg, out, batch_id)
+    return write_batch(spark, [stage], out, batch_id, cfg.sink_format)
+
+
 @pytest.mark.parametrize("rows", ["all", "no warn/error/fatal"])
 def test_rollup_manifests_equal_read_back_manifests(spark, tmp_path, rows):
     """A rollup's manifest is built from values its own write observed; it
@@ -132,7 +140,7 @@ def test_rollup_manifests_equal_read_back_manifests(spark, tmp_path, rows):
     if rows != "all":
         src = src.filter(F.col("doc_id").cast("long") % 5 < 2)
     out = str(tmp_path)
-    counts = write_batch(spark, src, PipelineConfig(output_dir=out), out, 5)
+    counts = _flagship_batch(spark, src, out, 5)
     for agg in ("metrics", "logs_agg", "traces_agg"):
         got = spark.read.parquet(f"{out}/_lineage/{agg}/batch_id=5")
         want = lineage_manifest(spark.read.parquet(f"{out}/{agg}/batch_id=5"), agg, 5)
@@ -152,20 +160,20 @@ def test_metrics_row_round_trips(spark, tmp_path):
 
     out = str(tmp_path)
     before = datetime.datetime.now()
-    counts = write_batch(spark, sequences(spark, 1000), PipelineConfig(output_dir=out), out, 2)
+    counts = _flagship_batch(spark, sequences(spark, 1000), out, 2)
     m = spark.read.parquet(f"{out}/_metrics/batch_id=2")
     assert _columns(m) == [
         ("input_rows", "bigint"),
-        ("logs_rows", "bigint"),
-        ("traces_rows", "bigint"),
+        ("sink_rows", "map<string,bigint>"),
         ("process_sec", "double"),
         ("rows_per_sec", "double"),
         ("processed_at", "timestamp"),
     ]
     (r,) = m.collect()
-    assert (r["input_rows"], r["logs_rows"], r["traces_rows"]) == (
+    assert (r["input_rows"], r["sink_rows"]["logs"], r["sink_rows"]["traces"]) == (
         1000, counts["logs"], counts["traces"]
     )
+    assert r["sink_rows"] == counts
     assert r["process_sec"] > 0
     assert r["rows_per_sec"] == pytest.approx(1000 / r["process_sec"])
     assert before - datetime.timedelta(minutes=1) <= r["processed_at"] <= datetime.datetime.now()

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from liatrio_otel_collector_spark.plans.pipeline import (
     PipelineConfig,
     build_pipeline,
+    flagship_stage,
+    sink_defaults,
     write_batch,
 )
 from liatrio_otel_collector_spark.sources.sequences import sequences
@@ -53,7 +55,11 @@ def test_write_batch_job_budget(spark, tmp_path):
     staged frame, and the ``_metrics`` row is built in the JVM."""
     out, src = str(tmp_path), sequences(spark, 2000)
     cfg = PipelineConfig(output_dir=out)
-    assert _jobs_of(spark, lambda: write_batch(spark, src, cfg, out, 0)) <= 20
+
+    def batch():
+        write_batch(spark, [flagship_stage(spark, src, cfg, out, 0)], out, 0, cfg.sink_format)
+
+    assert _jobs_of(spark, batch) <= 20
 
 
 def test_write_config_batch_job_budget(spark, tmp_path):
@@ -61,8 +67,8 @@ def test_write_config_batch_job_budget(spark, tmp_path):
     Spark jobs."""
     from liatrio_otel_collector_spark.confmap import (
         AssembleContext,
+        config_stages,
         load_config,
-        write_config_batch,
     )
 
     cfg = load_config(
@@ -80,8 +86,13 @@ service:
       exporters: [file/out]
 """
     )
-    ctx = AssembleContext(output_dir=str(tmp_path))
-    assert _jobs_of(spark, lambda: write_config_batch(spark, cfg, ctx, 0, cfg.pipelines)) <= 6
+    out = str(tmp_path)
+
+    def batch():
+        stages = config_stages(spark, cfg, AssembleContext(), cfg.pipelines, out, 0)
+        write_batch(spark, stages, out, 0, sink_defaults()[0])
+
+    assert _jobs_of(spark, batch) <= 6
 
 
 def test_filter_pushdown_to_parquet(spark):

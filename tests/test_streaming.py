@@ -100,12 +100,16 @@ def test_replayed_batch_replaces_its_output(spark, tmp_path):
     the per-batch body again with the same batch_id into the same output
     dir: it must replace that batch's sinks, lineage and _metrics row, not
     duplicate them."""
-    from liatrio_otel_collector_spark.plans.pipeline import PipelineConfig, write_batch
+    from liatrio_otel_collector_spark.plans.pipeline import (
+        PipelineConfig,
+        flagship_stage,
+        write_batch,
+    )
 
-    out = str(tmp_path / "out")
+    out, cfg = str(tmp_path / "out"), PipelineConfig()
     batch = sequences(spark, 1000)
     for _ in range(2):
-        write_batch(spark, batch, PipelineConfig(), out, 3)
+        write_batch(spark, [flagship_stage(spark, batch, cfg, out, 3)], out, 3, cfg.sink_format)
 
     for sink in ("logs", "traces", "metrics", "logs_agg", "traces_agg"):
         assert [d for d in os.listdir(os.path.join(out, sink)) if d.startswith("batch_id=")] == [
