@@ -36,7 +36,8 @@ mode "overwrite", concurrently, where the exporter dir is
 nothing; every exporter reports the manifest's row count; and one
 ``_metrics`` row per batch (``input_rows``, ``sink_rows`` keyed by
 pipeline, ``process_sec``, ``rows_per_sec``, ``processed_at``: the
-flagship's schema) goes to ``_metrics/batch_id=K/`` with mode "overwrite".
+flagship's schema) goes to ``_metrics/batch_id=K/``, replacing it: the
+lineage and ``_metrics`` are parquet whatever the exporters' format.
 
 OTTL programs compile (r4): transform `log_statements` and filter
 `logs.log_record` conditions go through ottl.py — a real statement compiler
@@ -58,7 +59,7 @@ import dataclasses
 import os
 import re
 from dataclasses import dataclass, field
-from typing import Any, Iterable
+from typing import Any, Collection, Iterable
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession
@@ -478,15 +479,24 @@ def _apply_connector(df: DataFrame, cid: str, ccfg: dict) -> DataFrame:
 
 
 def assemble(
-    spark: SparkSession, cfg: CollectorConfig, ctx: AssembleContext | None = None
+    spark: SparkSession, cfg: CollectorConfig, ctx: AssembleContext | None = None,
+    pipelines: Iterable[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Wire the declared topology into lazy DataFrames, one per pipeline:
     receivers fan in (U3, unionByName allowMissing), processors fold in
     declaration order.  Connectors bridge pipelines exactly like the
     collector: a pipeline exporting to connector C feeds its (connector-
     transformed) frame to every pipeline that lists C as a receiver —
-    assembled in dependency order, cycles rejected."""
+    assembled in dependency order, cycles rejected.  Builds ``pipelines``
+    (default: all) and the pipelines feeding the connectors they read."""
     ctx = ctx or AssembleContext()
+    wanted = set(cfg.pipelines if pipelines is None else pipelines)
+    grow = list(wanted)
+    while grow:
+        for c in set(cfg.pipelines[grow.pop()]["receivers"]) & set(cfg.connectors):
+            feeders = {n for n, p in cfg.pipelines.items() if c in p["exporters"]} - wanted
+            wanted |= feeders
+            grow += feeders
     out: dict[str, DataFrame] = {}
     # A connector may be fed by SEVERAL producing pipelines (the collector
     # merges every producer's stream into the connector before consumers see
@@ -495,13 +505,12 @@ def assemble(
     # producers of its connector receivers are done, and the connector
     # transform runs ONCE over the fan-in of every producer frame — never
     # last-writer-wins (judge advice r3).
+    pending = {n: p for n, p in cfg.pipelines.items() if n in wanted}
     producers_left: dict[str, int] = {
-        cid: sum(1 for p in cfg.pipelines.values() if cid in p["exporters"])
-        for cid in cfg.connectors
+        cid: sum(1 for p in pending.values() if cid in p["exporters"]) for cid in cfg.connectors
     }
     conn_inputs: dict[str, list[DataFrame]] = {cid: [] for cid in cfg.connectors}
     conn_frames: dict[str, DataFrame] = {}
-    pending = dict(cfg.pipelines)
     while pending:
         progressed = False
         for name, p in list(pending.items()):
@@ -585,7 +594,7 @@ def config_stages(
     spark: SparkSession,
     cfg: CollectorConfig,
     ctx: AssembleContext,
-    pipelines: Iterable[str],
+    pipelines: Collection[str],
     output_dir: str,
     batch_id: int,
 ) -> list[Stage]:
@@ -594,7 +603,7 @@ def config_stages(
     and one row sink named after the pipeline, every staged row, written to
     its exporter dirs in the layout the module docstring gives.  Staging
     runs the processor chain once however many exporters read it."""
-    built = assemble(spark, cfg, ctx)
+    built = assemble(spark, cfg, ctx, pipelines)
 
     def stage(name: str) -> Stage:
         dests = []
@@ -627,10 +636,7 @@ def run_config_pipelines(
     pipeline, each exporter's row count."""
     ctx = ctx or AssembleContext()
     with output_dir_or_scratch(ctx.output_dir) as out:
-        counts = write_batch(
-            spark, config_stages(spark, cfg, ctx, cfg.pipelines, out, 0),
-            out, 0, sink_defaults()[0],
-        )
+        counts = write_batch(spark, config_stages(spark, cfg, ctx, cfg.pipelines, out, 0), out, 0)
     return {name: {eid: counts[name] for eid in _exporters(cfg, name)} for name in cfg.pipelines}
 
 
@@ -687,9 +693,7 @@ def start_config_stream(
 
     def batch(df: DataFrame, k: int) -> None:
         run = dataclasses.replace(ctx, frames={**ctx.frames, receiver_id: df})
-        write_batch(
-            spark, config_stages(spark, cfg, run, pipelines, out, k), out, k, sink_defaults()[0]
-        )
+        write_batch(spark, config_stages(spark, cfg, run, pipelines, out, k), out, k)
 
     return start_query(
         stream_df.writeStream.foreachBatch(batch), checkpoint_dir, available_now

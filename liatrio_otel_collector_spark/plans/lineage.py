@@ -1,12 +1,14 @@
 """Per-partition lineage manifests (north-rule resume requirement).
 
-Each sink write is accompanied by a manifest DataFrame with one row per
-Spark partition: (sink, batch_id, partition_id, row_count, min_doc_id,
+Each sink write is accompanied by a manifest with one row per Spark
+partition: (sink, batch_id, partition_id, row_count, min_doc_id,
 max_doc_id, token_checksum).  The checksum is a commutative 64-bit fold of
 xxhash64(doc_id, tokens) so a resumed/replayed batch can be verified
 idempotent without re-reading sink data — the Spark analog of the
 collector's self-observability obsreport counters
 (/root/reference/receiver/githubreceiver/trace_receiver.go:135,187).
+Spark computes the values; the batch writer writes each sink's few rows
+from the driver as one parquet file (plans/pipeline.py ``fan_out``).
 
 ``partition_id`` is the split index of the frame the manifest was taken
 over.  For a row sink that is the staged read-back, whose splits Spark
@@ -15,14 +17,16 @@ order: so ``partition_id`` is not stable across runs of the same batch.
 Compare a replayed batch's manifest with the original's as a multiset of
 ``(sink, row_count, min_doc_id, max_doc_id, token_checksum)``, not row for
 row by ``partition_id``.  A derived sink (a rollup) is written as one
-partition, and its one manifest row is built from values its own write
-observed (:func:`manifest_aggs`, :func:`observed_manifest`).
+partition, and its one manifest row is built on the driver from values its
+own write observed (:func:`manifest_aggs`, :func:`observed_manifest`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import MapType, StructType
 
 
@@ -119,33 +123,26 @@ def manifest_aggs(df: DataFrame) -> list[Column]:
     ]
 
 
-def literal_row(spark: SparkSession, row: tuple, schema: str) -> DataFrame:
-    """``row``, typed by the DDL ``schema``, as literals over
-    ``spark.range(1)``.  It plans as a JVM Range scan and never crosses into
-    Python; ``spark.createDataFrame`` plans a Python-parallelized RDD scan
-    (measured on a 4-core VM, 10 warm one-row ``_metrics`` writes each:
-    median 0.23 s this way, 1.08 s that way)."""
-    fields = StructType.fromDDL(schema).fields
-    return spark.range(1).select(
-        *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields, strict=True)]
-    )
+def arrow_table(rows: list[tuple], schema: str) -> pa.Table:
+    """``rows``, typed by the DDL ``schema`` as Spark maps it to Arrow, for
+    the driver to write: a timestamp is tz-aware UTC, so it reads back as
+    ``timestamp``, not ``timestamp_ntz``."""
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
+    return pa.Table.from_pylist([dict(zip(arrow.names, r, strict=True)) for r in rows], arrow)
 
 
-def observed_manifest(
-    spark: SparkSession, df: DataFrame, seen: dict, sink: str, batch_id: int
-) -> DataFrame:
+def observed_manifest(df: DataFrame, seen: dict, sink: str) -> pa.Table:
     """The manifest of ``df`` written as ONE partition, from ``seen``, the
     values :func:`manifest_aggs` observed on that write: one row for
     partition 0, none when the frame was empty.  It equals
-    ``lineage_manifest`` over the read-back of that write, in every column,
-    without the read-back."""
+    ``lineage_manifest`` over the read-back of that write, in every column
+    but ``batch_id`` (which the path holds), without the read-back."""
     key = df.select(_key(df)).schema[0].dataType.simpleString()
-    return literal_row(
-        spark,
-        (sink, batch_id, 0, *(seen[v] for v in _VALUES)),
-        f"sink string, batch_id long, partition_id int, row_count long, "
+    return arrow_table(
+        [(sink, 0, *(seen[v] for v in _VALUES))] if seen["row_count"] > 0 else [],
+        f"sink string, partition_id int, row_count long, "
         f"min_doc_id {key}, max_doc_id {key}, token_checksum long",
-    ).filter(F.col("row_count") > 0)
+    )
 
 
 def lineage_manifest(df: DataFrame, sink: str, batch_id: int = 0) -> DataFrame:

@@ -36,6 +36,7 @@ Scale notes (the part that matters at 10^12 rows):
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import tempfile
@@ -44,14 +45,19 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from typing import Callable, ContextManager, Iterable, Iterator
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokens import parse_tokens_expr, parse_tokens_udf
 from ..functions.ids import span_id, trace_id
 from ..sources.sequences import enrich_dim, sequences
-from .lineage import literal_row, manifest_aggs, manifests, observed_manifest
+from .lineage import arrow_table, manifest_aggs, manifests, observed_manifest
 
 SALT_BUCKETS = 16
 
@@ -247,50 +253,48 @@ def output_dir_or_scratch(output_dir: str | None) -> ContextManager[str]:
 
 
 @contextmanager
-def staged(spark: SparkSession, df: DataFrame, prefix: str) -> Iterator[tuple[DataFrame, int]]:
+def job_label(spark: SparkSession, batch_id: int, what: str) -> Iterator[None]:
+    """Describe the Spark jobs the calling thread runs inside the block, and
+    the AQE stage jobs of its writes, as ``write_batch batch K: <what>``."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"write_batch batch {batch_id}: {what}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)
+
+
+@contextmanager
+def staged(
+    spark: SparkSession, df: DataFrame, batch_id: int, stage: int
+) -> Iterator[tuple[DataFrame, int]]:
     """Write ``df`` ONCE to a parquet staging table in a :func:`scratch`
     directory and yield its read-back and the row count that write
     observed.  Every consumer of the read-back scans columnar files instead
     of recomputing ``df``.  The read-back takes ``df``'s schema, so it runs
     no schema-inference job."""
     seen = Observation()
-    with scratch(prefix) as stage_dir:
-        df.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").option(
-            "compression", STAGE_COMPRESSION
-        ).option("parquet.enable.dictionary", STAGE_DICTIONARY).parquet(stage_dir)
+    with scratch(f"liatrio_stage_b{batch_id}_") as stage_dir:
+        with job_label(spark, batch_id, f"stage/{stage}"):
+            df.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").option(
+                "compression", STAGE_COMPRESSION
+            ).option("parquet.enable.dictionary", STAGE_DICTIONARY).parquet(stage_dir)
         yield spark.read.schema(df.schema).parquet(stage_dir), seen.get["rows"]
 
 
-def write_batch_table(df: DataFrame, root: str, name: str, batch_id: int, fmt: str) -> None:
+def write_batch_table(table: pa.Table, root: str, name: str, batch_id: int) -> None:
     """Write one batch's bookkeeping table (a manifest or the ``_metrics``
-    row) as one file to ``<root>/<name>/batch_id=K/`` with mode "overwrite".
-    batch_id moves from the payload into the path."""
-    df.drop("batch_id").coalesce(1).write.mode("overwrite").format(fmt).save(
-        batch_dir(root, name, batch_id)
-    )
-
-
-def write_manifests(
-    df: DataFrame, members: dict[str, Column], output_dir: str, batch_id: int, fmt: str
-) -> dict[str, int]:
-    """One manifest pass over ``df`` for every member sink
-    (:func:`~.lineage.manifests`): write each sink's rows to
-    ``_lineage/<sink>/batch_id=K/`` and return its row count, observed by
-    that write itself rather than by a separate collect.  Persisted so the
-    pass runs once however many sinks share it."""
-    manifest = manifests(df, members, batch_id).persist()
-    try:
-        counts = {}
-        for name in members:
-            rows = Observation()
-            write_batch_table(
-                manifest.filter(F.col("sink") == name).observe(rows, F.sum("row_count").alias("n")),
-                os.path.join(output_dir, "_lineage"), name, batch_id, fmt,
-            )
-            counts[name] = rows.get["n"] or 0
-        return counts
-    finally:
-        manifest.unpersist()
+    row) from the driver as one parquet file in ``<root>/<name>/batch_id=K/``
+    (``root``: a path or an Arrow filesystem URI), replacing what the
+    directory held.  The file is renamed into place from a hidden name,
+    which Spark and a ``*.parquet`` glob skip, so no reader sees it partial."""
+    fs, base = pafs.FileSystem.from_uri(root if urlparse(root).scheme else os.path.abspath(root))
+    path = batch_dir(base, name, batch_id)
+    fs.delete_dir_contents(path, missing_dir_ok=True)
+    fs.create_dir(path)
+    pq.write_table(table, f"{path}/.part-00000.tmp", filesystem=fs)
+    fs.move(f"{path}/.part-00000.tmp", f"{path}/part-00000.parquet")
 
 
 @dataclass(frozen=True)
@@ -309,79 +313,70 @@ class Sink:
 
 
 def fan_out(
-    spark: SparkSession,
-    staged_df: DataFrame,
-    sinks: dict[str, Sink],
-    output_dir: str,
-    batch_id: int,
-    fmt: str,
+    spark: SparkSession, df: DataFrame, sinks: dict[str, Sink], output_dir: str, batch_id: int
 ) -> dict[str, int]:
     """The fan-out body (the multi-exporter fan-out K3) of :func:`write_batch`
-    over one staged frame: writes every sink to its destinations and its
-    manifest to ``<output_dir>/_lineage/<sink>/batch_id=K/``, all with mode
-    "overwrite", so a replayed batch replaces its output.  Returns row
-    counts per sink.
+    over one staged frame ``df``: writes every sink to its destinations and its
+    manifest, as parquet, to ``<output_dir>/_lineage/<sink>/batch_id=K/``,
+    all replacing what the batch wrote before, so a replayed batch replaces
+    its output.  Returns row counts per sink.
 
     Destination writes run CONCURRENTLY, one driver thread each, so Spark
     interleaves their jobs instead of paying each job's scheduling latency
-    in turn; the row sinks' manifest pass runs on the calling thread.  A
-    derived sink's first write observes :func:`~.lineage.manifest_aggs`, and
-    its manifest row is built in the JVM from those values
-    (:func:`~.lineage.observed_manifest`): no read-back, no Python row."""
+    in turn.  The calling thread runs the row sinks' one manifest pass
+    (:func:`~.lineage.manifests`), collects it as Arrow and writes each
+    sink's slice, summing its row count.  A derived sink's write observes
+    :func:`~.lineage.manifest_aggs`, and the driver writes its manifest row
+    from those values (:func:`~.lineage.observed_manifest`): no read-back,
+    no Spark job."""
     rows = {n: s.member for n, s in sinks.items() if s.member is not None}
-    writes = [(s.df, d) for n, s in sinks.items() if n in rows for d in s.dests]
+    writes = [(n, s.df, d) for n, s in sinks.items() if n in rows for d in s.dests]
     derived = {n: s for n, s in sinks.items() if n not in rows}
+    lineage = os.path.join(output_dir, "_lineage")
 
-    def write(df: DataFrame, dest: tuple[str, str]) -> None:
-        df.write.mode("overwrite").format(dest[1]).save(dest[0])
+    def write(what: str, out: DataFrame, dest: tuple[str, str]) -> None:
+        with job_label(spark, batch_id, what):
+            out.write.mode("overwrite").format(dest[1]).save(dest[0])
 
     def derive(name: str, sink: Sink) -> int:
         (dest,), seen = sink.dests, Observation()
-        write(sink.df.coalesce(1).observe(seen, *manifest_aggs(sink.df)), dest)
+        write(f"rollup/{name}", sink.df.coalesce(1).observe(seen, *manifest_aggs(sink.df)), dest)
         values = seen.get
-        write_batch_table(
-            observed_manifest(spark, sink.df, values, name, batch_id),
-            os.path.join(output_dir, "_lineage"), name, batch_id, fmt,
-        )
+        write_batch_table(observed_manifest(sink.df, values, name), lineage, name, batch_id)
         return values["row_count"]
 
     with ThreadPoolExecutor(max_workers=max(1, len(writes) + len(derived))) as pool:
-        write_futs = [pool.submit(write, df, d) for df, d in writes]
+        write_futs = [pool.submit(write, f"sink/{n}", out, d) for n, out, d in writes]
         derived_futs = {n: pool.submit(derive, n, s) for n, s in derived.items()}
-        counts = write_manifests(staged_df, rows, output_dir, batch_id, fmt)
+        with job_label(spark, batch_id, "lineage/" + ",".join(rows)):
+            table = manifests(df, rows, batch_id).drop("batch_id").toArrow()
+        counts = {}
+        for name in rows:
+            manifest = table.filter(pc.field("sink") == name)
+            write_batch_table(manifest, lineage, name, batch_id)
+            counts[name] = sum(manifest["row_count"].to_pylist())
         for f in write_futs:
             f.result()
         return counts | {n: f.result() for n, f in derived_futs.items()}
 
 
 def write_metrics(
-    spark: SparkSession, output_dir: str, batch_id: int, fmt: str,
-    input_rows: int, sink_rows: dict[str, int], process_sec: float,
+    output_dir: str, batch_id: int, input_rows: int, sink_rows: dict[str, int], process_sec: float
 ) -> None:
     """Write one batch's self-observability row (the obsreport analog K4) to
-    ``_metrics/batch_id=K/``, built in the JVM (:func:`~.lineage.literal_row`;
-    ``F.lit`` takes no dict, so ``sink_rows`` is an ``F.create_map``)."""
-    pairs = [F.lit(v) for kv in sorted(sink_rows.items()) for v in kv]
-    df = literal_row(
-        spark,
-        (input_rows, process_sec, input_rows / process_sec),
-        "input_rows long, process_sec double, rows_per_sec double",
-    ).select(
-        "input_rows", F.create_map(*pairs).cast("map<string,bigint>").alias("sink_rows"),
-        "process_sec", "rows_per_sec", F.current_timestamp().alias("processed_at"),
-    )
-    write_batch_table(df, output_dir, "_metrics", batch_id, fmt)
+    ``_metrics/batch_id=K/`` from values the batch already has."""
+    row = (input_rows, sorted(sink_rows.items()), process_sec, input_rows / process_sec,
+           datetime.datetime.now(datetime.timezone.utc))
+    schema = ("input_rows long, sink_rows map<string,bigint>, process_sec double, "
+              "rows_per_sec double, processed_at timestamp")
+    write_batch_table(arrow_table([row], schema), output_dir, "_metrics", batch_id)
 
 
 Stage = tuple[DataFrame, Callable[[DataFrame], dict[str, Sink]]]
 
 
 def write_batch(
-    spark: SparkSession,
-    stages: Iterable[Stage],
-    output_dir: str,
-    batch_id: int,
-    fmt: str,
+    spark: SparkSession, stages: Iterable[Stage], output_dir: str, batch_id: int,
     timings: dict[str, float] | None = None,
 ) -> dict[str, int]:
     """The one batch writer, for the flagship (:func:`flagship_stage`) and
@@ -390,10 +385,13 @@ def write_batch(
     staged read-back to its sinks.  Each frame is staged once
     (:func:`staged`), and one :func:`fan_out` of the read-back writes the
     stage's sinks and manifests; stages run one after another, in order.
-    Then one ``_metrics`` row (:func:`write_metrics`).  Manifests and
-    ``_metrics`` are written in ``fmt``.  Returns row counts per sink.  ``timings``, when
-    given, gets ``parse_enrich_stage_write_sec`` (staging) and
-    ``route_aggregate_sinks_sec`` (fan-outs and ``_metrics``).
+    Then one ``_metrics`` row (:func:`write_metrics`).  Sinks keep their own
+    formats; the driver writes the bookkeeping (manifests, ``_metrics``) as
+    parquet from values Spark computed.  Each Spark job is described
+    ``write_batch batch K: <layer>/<sink>`` (:func:`job_label`), layers
+    ``stage``, ``sink``, ``rollup`` and ``lineage``.  Returns row counts
+    per sink.  ``timings``, when given, gets ``parse_enrich_stage_write_sec``
+    (staging) and ``route_aggregate_sinks_sec`` (fan-outs and ``_metrics``).
 
     Staging beats .persist() for wide token rows (measured 3x at 10M rows:
     the in-memory cache build is GC-bound and anti-scales with cores, while
@@ -401,13 +399,13 @@ def write_batch(
     pushdown + column pruning on the staged scan, and its memory does not
     grow with the batch size."""
     t0, stage_sec, rows, counts = time.time(), 0.0, 0, {}
-    for frame, sinks_of in stages:
+    for i, (frame, sinks_of) in enumerate(stages):
         t = time.time()
-        with staged(spark, frame, f"liatrio_stage_b{batch_id}_") as (read_back, n):
+        with staged(spark, frame, batch_id, i) as (read_back, n):
             stage_sec += time.time() - t
             rows += n
-            counts |= fan_out(spark, read_back, sinks_of(read_back), output_dir, batch_id, fmt)
-    write_metrics(spark, output_dir, batch_id, fmt, rows, counts, time.time() - t0)
+            counts |= fan_out(spark, read_back, sinks_of(read_back), output_dir, batch_id)
+    write_metrics(output_dir, batch_id, rows, counts, time.time() - t0)
     if timings is not None:
         timings["parse_enrich_stage_write_sec"] = round(stage_sec, 3)
         timings["route_aggregate_sinks_sec"] = round(time.time() - t0 - stage_sec, 3)
@@ -455,8 +453,7 @@ def run_pipeline(
         source_df = sequences(spark, n_rows)
     with output_dir_or_scratch(cfg.output_dir) as out:
         counts = write_batch(
-            spark, [flagship_stage(spark, source_df, cfg, out, batch_id)],
-            out, batch_id, cfg.sink_format, timings,
+            spark, [flagship_stage(spark, source_df, cfg, out, batch_id)], out, batch_id, timings
         )
     del counts["_input"]
     return counts

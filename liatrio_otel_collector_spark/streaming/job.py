@@ -14,7 +14,8 @@ execution here:
   batch mode (one code path, two execution modes);
 - micro-batch K writes every sink to ``<sink>/batch_id=K/``, every lineage
   manifest to ``_lineage/<sink>/batch_id=K/`` and its ``_metrics`` row to
-  ``_metrics/batch_id=K/``, all with mode "overwrite": the checkpoint
+  ``_metrics/batch_id=K/``, each replacing what that batch wrote before
+  (the bookkeeping always as parquet, written by the driver): the checkpoint
   directory makes the job resumable (a restart processes only unseen
   input), and a micro-batch replayed after a crash before its checkpoint
   commit replaces its output instead of appending duplicates.
@@ -71,8 +72,7 @@ def start_stream(spark: SparkSession, cfg: StreamingConfig, available_now: bool 
     return start_query(
         raw.writeStream.foreachBatch(
             lambda df, k: write_batch(
-                spark, [flagship_stage(spark, df, cfg.pipeline, cfg.output_dir, k)],
-                cfg.output_dir, k, cfg.pipeline.sink_format,
+                spark, [flagship_stage(spark, df, cfg.pipeline, cfg.output_dir, k)], cfg.output_dir, k
             )
         ),
         cfg.checkpoint_dir,

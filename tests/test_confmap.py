@@ -464,10 +464,10 @@ service:
 def _config_batch(spark, cfg, out: str, batch_id: int) -> dict[str, int]:
     """One config batch of every pipeline through the one batch writer."""
     from liatrio_otel_collector_spark.confmap import config_stages
-    from liatrio_otel_collector_spark.plans.pipeline import sink_defaults, write_batch
+    from liatrio_otel_collector_spark.plans.pipeline import write_batch
 
     stages = config_stages(spark, cfg, AssembleContext(), cfg.pipelines, out, batch_id)
-    return write_batch(spark, stages, out, batch_id, sink_defaults()[0])
+    return write_batch(spark, stages, out, batch_id)
 
 
 def test_config_metrics_row_round_trips(spark, tmp_path):
@@ -726,6 +726,46 @@ service:
     assert [(r["batch_id"], r["input_rows"]) for r in metrics.collect()] == [
         (0, want_logs + 1000)
     ]
+
+
+def test_config_stream_builds_only_its_pipelines(spark, tmp_path):
+    """A micro-batch assembles only the pipelines downstream of the
+    streaming receiver: a ``traces`` pipeline whose azuredevops receiver
+    has no webhook frame is neither built nor written, and the ``logs``
+    pipeline is."""
+    from liatrio_otel_collector_spark.confmap import start_config_stream
+    from liatrio_otel_collector_spark.sources.sequences import sequences
+
+    cfg = load_config(
+        """
+receivers:
+  webhookevent: {}
+  azuredevops: {}
+exporters:
+  file: {}
+service:
+  pipelines:
+    logs:
+      receivers: [webhookevent]
+      processors: []
+      exporters: [file]
+    traces:
+      receivers: [azuredevops]
+      processors: []
+      exporters: [file]
+"""
+    )
+    indir, out = tmp_path / "in", tmp_path / "out"
+    seq_schema = "doc_id string, tokens array<int>, n_tok int, source string, id bigint"
+    sequences(spark, 300).coalesce(1).write.parquet(str(indir / "b0"))
+    stream = spark.readStream.schema(seq_schema).parquet(f"{indir}/*")
+    ctx = AssembleContext(output_dir=str(out))
+    q = start_config_stream(spark, cfg, ctx, "webhookevent", stream, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120)
+    assert spark.read.parquet(str(out / "logs" / "file")).count() == 300
+    assert spark.read.parquet(str(out / "_lineage" / "logs")).count() >= 1
+    assert not (out / "traces").exists()
+    assert not (out / "_lineage" / "traces").exists()
 
 
 @pytest.mark.parametrize(

@@ -96,8 +96,9 @@ def test_iceberg_merge_idempotent_resume(iceberg_spark):
 
 
 def test_run_pipeline_iceberg_format_plumbs_through(iceberg_spark, tmp_path):
-    """sink_format='iceberg' drives the whole fan-out through HadoopTables
-    path-based Iceberg writes with no code changes."""
+    """sink_format='iceberg' drives every sink of the fan-out through
+    HadoopTables path-based Iceberg writes with no code changes; the
+    bookkeeping (lineage manifests, ``_metrics``) stays parquet."""
     from liatrio_otel_collector_spark.plans.pipeline import PipelineConfig, run_pipeline
 
     out = str(tmp_path / "sinks")

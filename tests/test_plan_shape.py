@@ -10,7 +10,6 @@ from liatrio_otel_collector_spark.plans.pipeline import (
     PipelineConfig,
     build_pipeline,
     flagship_stage,
-    sink_defaults,
     write_batch,
 )
 from liatrio_otel_collector_spark.sources.sequences import sequences
@@ -34,9 +33,9 @@ def test_parse_runs_on_arrow(spark):
     assert "ArrowEvalPython" in plan or "EvalPython" in plan
 
 
-def _jobs_of(spark, fn) -> int:
-    """The Spark jobs ``fn`` runs, counted in the status store after its
-    listener bus has drained."""
+def _jobs_of(spark, fn) -> set[int]:
+    """The ids of the Spark jobs ``fn`` runs, read from the status store
+    after its listener bus has drained."""
     sc = spark.sparkContext
 
     def ids() -> set[int]:
@@ -45,26 +44,48 @@ def _jobs_of(spark, fn) -> int:
 
     before = ids()
     fn()
-    return len(ids() - before)
+    return ids() - before
+
+
+def _flagship_batch(spark, out: str, batch_id: int):
+    """One flagship batch of 2 000 generated rows, as a function to run."""
+    src, cfg = sequences(spark, 2000), PipelineConfig(output_dir=out)
+
+    def batch():
+        write_batch(spark, [flagship_stage(spark, src, cfg, out, batch_id)], out, batch_id)
+
+    return batch
 
 
 def test_write_batch_job_budget(spark, tmp_path):
-    """Per-batch fixed cost: one flagship batch runs at most 20 Spark jobs.
+    """Per-batch fixed cost: one flagship batch runs at most 13 Spark jobs.
     No written output is read back: each rollup's manifest comes from values
     its own write observed, the stage read-back takes its schema from the
-    staged frame, and the ``_metrics`` row is built in the JVM."""
-    out, src = str(tmp_path), sequences(spark, 2000)
-    cfg = PipelineConfig(output_dir=out)
+    staged frame, and the driver writes the manifests and the ``_metrics``
+    row itself, with no Spark write job."""
+    assert len(_jobs_of(spark, _flagship_batch(spark, str(tmp_path), 0))) <= 13
 
-    def batch():
-        write_batch(spark, [flagship_stage(spark, src, cfg, out, 0)], out, 0, cfg.sink_format)
 
-    assert _jobs_of(spark, batch) <= 20
+def test_write_batch_labels_every_job(spark, tmp_path):
+    """Every Spark job of a flagship batch, the AQE stage jobs of its
+    writes included, is described ``write_batch batch K: <layer>/<sink>``."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def description(job: int) -> str:
+        d = store.job(job).description()
+        return d.get() if d.isDefined() else ""
+
+    jobs = _jobs_of(spark, _flagship_batch(spark, str(tmp_path), 7))
+    labels = {j: description(j) for j in jobs}
+    assert jobs and all(d.startswith("write_batch batch 7: ") for d in labels.values()), labels
+    layers = {d.split(": ", 1)[1].split("/", 1)[0] for d in labels.values()}
+    assert layers == {"stage", "sink", "rollup", "lineage"}
 
 
 def test_write_config_batch_job_budget(spark, tmp_path):
-    """One config batch of one pipeline and one exporter runs at most 6
-    Spark jobs."""
+    """One config batch of one pipeline and one exporter runs at most 4
+    Spark jobs: the stage write, the exporter write and the manifest pass's
+    two; the driver writes the manifest and the ``_metrics`` row."""
     from liatrio_otel_collector_spark.confmap import (
         AssembleContext,
         config_stages,
@@ -90,9 +111,9 @@ service:
 
     def batch():
         stages = config_stages(spark, cfg, AssembleContext(), cfg.pipelines, out, 0)
-        write_batch(spark, stages, out, 0, sink_defaults()[0])
+        write_batch(spark, stages, out, 0)
 
-    assert _jobs_of(spark, batch) <= 6
+    assert len(_jobs_of(spark, batch)) <= 4
 
 
 def test_filter_pushdown_to_parquet(spark):

@@ -109,7 +109,7 @@ def test_replayed_batch_replaces_its_output(spark, tmp_path):
     out, cfg = str(tmp_path / "out"), PipelineConfig()
     batch = sequences(spark, 1000)
     for _ in range(2):
-        write_batch(spark, [flagship_stage(spark, batch, cfg, out, 3)], out, 3, cfg.sink_format)
+        write_batch(spark, [flagship_stage(spark, batch, cfg, out, 3)], out, 3)
 
     for sink in ("logs", "traces", "metrics", "logs_agg", "traces_agg"):
         assert [d for d in os.listdir(os.path.join(out, sink)) if d.startswith("batch_id=")] == [
