@@ -65,14 +65,15 @@ import yaml
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.ids import span_id, trace_id
 from .operators.setops import fan_in
 from .plans.grouping import group_by_attrs, group_by_trace, interval_last
 from .plans.logs import gitlab_enrich
-from .plans.pipeline import Sink, Stage, batch_dir, output_dir_or_scratch
-from .plans.pipeline import sink_defaults, write_batch
+from .plans.pipeline import Sink, Stage, batch_dir, enrich_stage, metrics_rollup
+from .plans.pipeline import output_dir_or_scratch, parse_stage, sink_defaults, write_batch
 from .plans.samplers import probabilistic_sample, tail_sample_errors
-from .sources.domain import NOW, VIEW_BUILDERS
-from .sources.sequences import sequences
+from .sources.domain import NOW, VIEW_BUILDERS, pr_branch_ref
+from .sources.sequences import enrich_dim, sequences
 from .sources.tables import load_tables
 from .streaming.job import start_query
 
@@ -296,9 +297,7 @@ def _build_receiver(
             "repo_name", F.lit("").alias("url"), "pr_id", "state",
             F.col("created_at").cast("timestamp").alias("created_at"),
             F.col("merged_at").cast("timestamp").alias("merged_at"),
-            F.concat(F.lit("br-"), (F.col("pr_id").cast("bigint") % 11).cast("string")).alias(
-                "head_ref"
-            ),
+            pr_branch_ref().alias("head_ref"),
         )
         commits = v["commits"].select(
             "repo_name", F.lit("").alias("url"), "branch_name",
@@ -329,9 +328,7 @@ def _build_receiver(
             F.col("repo_name").alias("repo_id"),
             F.lit("").alias("url"),
             F.col("pr_id").alias("mr_iid"),
-            F.concat(F.lit("br-"), (F.col("pr_id").cast("bigint") % 11).cast("string")).alias(
-                "source_branch"
-            ),
+            pr_branch_ref().alias("source_branch"),
             F.lit("main").alias("target_branch"),
             F.col("created_at").cast("timestamp").alias("created_at"),
             F.col("merged_at").cast("timestamp").alias("merged_at"),
@@ -442,18 +439,11 @@ def _apply_processor(df: DataFrame, pid: str, pcfg: dict, ctx: AssembleContext) 
     # flagship stages: the north-star parse -> enrich -> route -> aggregate
     # topology declared in YAML drives the exact same plans as run_pipeline
     if ptype == "parse_tokens":
-        from .plans.pipeline import parse_stage
-
         return parse_stage(df, use_udf=bool(pcfg.get("use_udf", True)))
     if ptype == "enrich":
-        from .plans.pipeline import enrich_stage
-        from .sources.sequences import enrich_dim
-
         dim = ctx.components_dim if pcfg.get("dim") == "ctx" else enrich_dim(df.sparkSession)
         return enrich_stage(df, dim)
     if ptype == "trace_ids":
-        from .functions.ids import span_id, trace_id
-
         return df.withColumn(
             "trace_id", trace_id(pcfg.get("key", "doc_id"), pcfg.get("salt", "source"))
         ).withColumn("span_id", span_id(pcfg.get("key", "doc_id"), pcfg.get("scope", "scope")))
@@ -461,9 +451,7 @@ def _apply_processor(df: DataFrame, pid: str, pcfg: dict, ctx: AssembleContext) 
         keys = list(pcfg.get("group_by") or [])
         if not keys:
             raise ConfigError(f"processor {pid!r}: rollup needs group_by")
-        return df.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("seq_count"), F.sum("n_tok").alias("tok_count")
-        )
+        return metrics_rollup(df, *keys)
     raise ConfigError(f"unknown processor type {ptype!r}")
 
 

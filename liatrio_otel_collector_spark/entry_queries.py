@@ -20,6 +20,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.ids import span_id, trace_id
 from .functions.strings import api_to_html_url, format_service_name, workflow_path_to_name
 from .functions.timeparse import parse_multi_format_ts
 from .operators import aggregates as A
@@ -599,12 +600,8 @@ FROM pull_requests
     lambda spark, sf: (
         lambda prs: prs.select(
             "pr_id",
-            F.substring(F.sha2(F.concat_ws("|", "pr_id", "repo_name"), 256), 1, 32).alias(
-                "trace_id"
-            ),
-            F.substring(F.sha2(F.concat_ws("|", "pr_id", "repo_name"), 256), 17, 16).alias(
-                "span_id"
-            ),
+            trace_id("pr_id", "repo_name").alias("trace_id"),
+            span_id("pr_id", "repo_name").alias("span_id"),
         )
     )(_view(spark, sf, "pull_requests"))
 )
@@ -1129,9 +1126,10 @@ _RES_SQL = "'svc-' || CAST(list_filter(tokens, t -> t >= 100 AND t < 120)[1] - 1
 _SCOPE_SQL = "'scope-' || CAST(list_filter(tokens, t -> t >= 200 AND t < 208)[1] - 200 AS STRING)"
 
 
-def _pipeline_parsed(spark: SparkSession, sf: str):
-    from .plans.pipeline import parse_stage
+from .plans.pipeline import enrich_stage, metrics_rollup, parse_stage, route_predicates
 
+
+def _pipeline_parsed(spark: SparkSession, sf: str):
     return parse_stage(sequences(spark, rows_for_sf(sf)), use_udf=True)
 
 
@@ -1146,12 +1144,7 @@ SELECT source, {_SEV_CASE} AS severity,
 FROM sequences GROUP BY 1, 2
 """,
 )(
-    lambda spark, sf: _pipeline_parsed(spark, sf)
-    .groupBy("source", "severity")
-    .agg(
-        F.count(F.lit(1)).alias("seq_count"),
-        F.sum("n_tok").cast("bigint").alias("tok_count"),
-    )
+    lambda spark, sf: metrics_rollup(_pipeline_parsed(spark, sf), "source", "severity")
 )
 
 _q(
@@ -1167,8 +1160,7 @@ FROM parsed LEFT JOIN enrich_dim USING (resource)
 GROUP BY team, tier
 """,
 )(
-    lambda spark, sf: _pipeline_parsed(spark, sf)
-    .join(F.broadcast(enrich_dim(spark)), "resource", "left")
+    lambda spark, sf: enrich_stage(_pipeline_parsed(spark, sf), enrich_dim(spark))
     .groupBy("team", "tier")
     .agg(F.count(F.lit(1)).alias("seq_count"))
 )
@@ -1187,12 +1179,10 @@ WHERE scope IN ('scope-0', 'scope-1', 'scope-2') AND source <> 'webhook'
 """,
 )(
     lambda spark, sf: (
-        lambda parsed: parsed.filter(
-            F.col("scope").isin("scope-0", "scope-1", "scope-2") & (F.col("source") != "webhook")
-        ).select(
+        lambda parsed: parsed.filter(route_predicates()["traces"]).select(
             "doc_id",
-            F.substring(F.sha2(F.concat_ws("|", "doc_id", "source"), 256), 1, 32).alias("trace_id"),
-            F.substring(F.sha2(F.concat_ws("|", "doc_id", "scope"), 256), 17, 16).alias("span_id"),
+            trace_id("doc_id", "source").alias("trace_id"),
+            span_id("doc_id", "scope").alias("span_id"),
         )
     )(_pipeline_parsed(spark, sf))
 )
@@ -1208,7 +1198,7 @@ FROM parsed WHERE severity IN ('warn', 'error', 'fatal')
 """,
 )(
     lambda spark, sf: _pipeline_parsed(spark, sf)
-    .filter(F.col("severity").isin("warn", "error", "fatal"))
+    .filter(route_predicates()["logs"])
     .select(
         "doc_id",
         "severity",
@@ -2089,9 +2079,7 @@ def _user_trace_spans(spark, sf):
     e = load_tables(spark, sf)["events"]
     return e.select(
         F.md5((F.col("user_id")).cast("string")).alias("trace_id"),
-        F.substring(
-            F.sha2(F.concat_ws("|", F.col("event_id"), F.col("event_type")), 256), 17, 16
-        ).alias("span_id"),
+        span_id("event_id", "event_type").alias("span_id"),
         F.col("event_type").alias("span_name"),
         F.when(F.col("event_type") == "error", F.lit(2)).otherwise(F.lit(1)).alias("status_code"),
     )

@@ -7,6 +7,7 @@ from .strings import (  # noqa: F401
     api_to_html_url,
     format_service_name,
     release_to_service,
+    replace_first,
     split_tags,
     strip_refs_heads,
     workflow_path_to_name,

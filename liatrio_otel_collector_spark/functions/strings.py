@@ -22,6 +22,16 @@ def api_to_html_url(col: Column | str) -> Column:
     return F.regexp_replace(_c(col), r"api\.github\.com/repos", "github.com")
 
 
+# Go strings.Replace(s, old, new, 1): the FIRST occurrence only, which
+# regexp_replace cannot limit (githubreceiver convertPRURL, azuredevopsreceiver
+# transformAzureDevOpsURL trace_attributes.go:194-198).
+def replace_first(col: Column | str, old: str, new: str) -> Column:
+    c = _c(col)
+    pos = F.instr(c, F.lit(old))
+    after = c.substr(pos + len(old), F.length(c))
+    return F.when(pos > 0, F.concat(c.substr(F.lit(1), pos - 1), F.lit(new), after)).otherwise(c)
+
+
 # X10 — refs/heads/ prefix strip (/root/reference/receiver/azuredevopsreceiver/
 # internal/scraper/azuredevopsscraper/helpers.go:224-228).
 def strip_refs_heads(col: Column | str) -> Column:
@@ -35,6 +45,11 @@ def split_tags(col: Column | str) -> Column:
         F.transform(F.split(_c(col), ";"), lambda x: F.trim(x)),
         lambda x: x != "",
     )
+
+
+# X12 — a CI-config line that includes a catalog component; group 1 is the
+# component path with its @version (gitlabcatalogscraper/helpers.go:19,109-136).
+CATALOG_COMPONENT_RE = r"^\s*-\s*component:\s*[^/]+/(.+)"
 
 
 # X17 — getAge(start, end) in whole seconds (/root/reference/receiver/

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.maps import normalize_deploy_status, normalize_severity
-from ..functions.strings import release_to_service, split_tags
+from ..functions.strings import CATALOG_COMPONENT_RE, age_seconds, release_to_service, split_tags
 from ..functions.timeparse import parse_multi_format_ts
 from ..sources.domain import NOW
 
@@ -50,9 +50,7 @@ def change_time_to_merge(pull_requests: DataFrame) -> DataFrame:
     return pull_requests.filter(F.col("state") == "MERGED").select(
         "repo_name",
         "pr_id",
-        (F.unix_timestamp("merged_at") - F.unix_timestamp("created_at"))
-        .cast("bigint")
-        .alias("time_to_merge_s"),
+        age_seconds("created_at", "merged_at").alias("time_to_merge_s"),
     )
 
 
@@ -62,9 +60,7 @@ def change_duration(pull_requests: DataFrame) -> DataFrame:
     return pull_requests.filter(F.col("state") == "OPEN").select(
         "repo_name",
         "pr_id",
-        (F.unix_timestamp(_now()) - F.unix_timestamp("created_at"))
-        .cast("bigint")
-        .alias("duration_s"),
+        age_seconds("created_at", _now()).alias("duration_s"),
     )
 
 
@@ -76,9 +72,7 @@ def change_time_to_approval(pull_requests: DataFrame) -> DataFrame:
         .select(
             "repo_name",
             "pr_id",
-            (F.unix_timestamp("first_review_at") - F.unix_timestamp("created_at"))
-            .cast("bigint")
-            .alias("time_to_approval_s"),
+            age_seconds("created_at", "first_review_at").alias("time_to_approval_s"),
         )
     )
 
@@ -115,9 +109,7 @@ def ref_lines_delta(commits: DataFrame) -> DataFrame:
 # now - oldest commit on the branch.
 def ref_time(commits: DataFrame) -> DataFrame:
     return commits.groupBy("repo_name", "branch_name").agg(
-        (F.unix_timestamp(_now()) - F.unix_timestamp(F.min("committed_date")))
-        .cast("bigint")
-        .alias("ref_age_s")
+        age_seconds(F.min("committed_date"), _now()).alias("ref_age_s")
     )
 
 
@@ -167,7 +159,7 @@ def deployment_average_duration(deployments: DataFrame) -> DataFrame:
     fin = _final_deployments(deployments).filter(
         (F.col("status") == "succeeded") & F.col("started_ts").isNotNull()
     )
-    dur = F.unix_timestamp("completed_ts") - F.unix_timestamp("started_ts")
+    dur = age_seconds("started_ts", "completed_ts")
     return fin.groupBy("service", "environment").agg(
         F.floor(F.sum(dur) / F.count(F.lit(1))).cast("bigint").alias("avg_duration_s")
     )
@@ -201,12 +193,8 @@ def work_item_cycle_time(work_items: DataFrame) -> DataFrame:
     return work_items.select(
         "id",
         "wi_type",
-        F.when(
-            F.col("closed_date").isNotNull(),
-            F.unix_timestamp("closed_date") - F.unix_timestamp("created_date"),
-        )
-        .otherwise(F.unix_timestamp(_now()) - F.unix_timestamp("created_date"))
-        .cast("bigint")
+        F.when(F.col("closed_date").isNotNull(), age_seconds("created_date", "closed_date"))
+        .otherwise(age_seconds("created_date", _now()))
         .alias("cycle_time_s"),
         F.col("closed_date").isNotNull().alias("is_closed"),
     )
@@ -224,14 +212,10 @@ def code_coverage(coverage: DataFrame) -> DataFrame:
 
 
 # A18/A19 analog — gitlab.catalog component usage counts
-# (gitlab_catalog_scraper.go:119-173) over regex-parsed CI lines (X12:
-# gitlabcatalogscraper/helpers.go:19,109-136).
-_COMPONENT_RE = r"^\s*-\s*component:\s*[^/]+/(.+)"
-
-
+# (gitlab_catalog_scraper.go:119-173) over regex-parsed CI lines (X12).
 def catalog_component_counts(ci_lines: DataFrame) -> DataFrame:
     comp = (
-        ci_lines.withColumn("m", F.regexp_extract("line", _COMPONENT_RE, 1))
+        ci_lines.withColumn("m", F.regexp_extract("line", CATALOG_COMPONENT_RE, 1))
         .filter(F.col("m") != "")
         .withColumn("component", F.substring_index("m", "@", 1))
         .withColumn("version", F.substring_index("m", "@", -1))

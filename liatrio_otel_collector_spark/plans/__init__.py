@@ -1,10 +1,8 @@
 from .pipeline import (  # noqa: F401
     PipelineConfig,
-    aggregate_stage,
     build_pipeline,
     enrich_stage,
     parse_stage,
-    route_stage,
     run_pipeline,
 )
 from .lineage import lineage_manifest  # noqa: F401

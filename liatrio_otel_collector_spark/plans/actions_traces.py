@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.strings import format_service_name
+from ..functions.strings import format_service_name, replace_first
 from .traces import KIND_SERVER, SPAN_COLS, STATUS_ERROR, STATUS_OK, STATUS_UNSET
 from .traces import _num, _put, _rfc3339
 
@@ -327,20 +327,11 @@ def actions_job_spans(
     return parent.unionByName(step_spans).select(*SPAN_COLS)
 
 
-def _replace_first(c: Column, find: str, repl: str) -> Column:
-    """Go strings.Replace(s, find, repl, 1) — FIRST occurrence only (Spark's
-    regexp_replace has no occurrence limit)."""
-    pos = F.instr(c, F.lit(find))
-    before = c.substr(F.lit(1), pos - 1)
-    after = c.substr(pos + len(find), F.length(c))
-    return F.when(pos > 0, F.concat(before, F.lit(repl), after)).otherwise(c)
-
-
 def _convert_pr_url(url: Column) -> Column:
     """convertPRURL (:137-141): first /repos → '', /pulls → /pull, api. → ''."""
-    u = _replace_first(url, "/repos", "")
-    u = _replace_first(u, "/pulls", "/pull")
-    return _replace_first(u, "api.", "")
+    u = replace_first(url, "/repos", "")
+    u = replace_first(u, "/pulls", "/pull")
+    return replace_first(u, "api.", "")
 
 
 def actions_run_spans(
@@ -437,7 +428,7 @@ def actions_run_spans(
             resource,
             F.create_map(
                 F.lit("cicd.pipeline.run.previous_attempt_url"),
-                _replace_first(prev_url, "api.github.com/repos", "github.com"),
+                replace_first(prev_url, "api.github.com/repos", "github.com"),
             ),
         ),
     ).otherwise(resource)

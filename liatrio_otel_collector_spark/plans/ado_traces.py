@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.strings import replace_first
 from .traces import _nonnull_map, _num, _put, _rfc3339
 
 KIND_INTERNAL = 1
@@ -89,20 +90,6 @@ def ado_job_span_id(run_id: Column, attempt: Column, job_name: Column) -> Column
     return _digest_span(
         F.concat(_num(run_id), _num(attempt), F.coalesce(job_name, F.lit("")))
     )
-
-
-def ado_url(col: Column) -> Column:
-    """transformAzureDevOpsURL (:194-198): Go strings.Replace(..., 1) — the
-    FIRST /_apis/ only (regexp_replace would rewrite all occurrences)."""
-    pos = F.instr(col, F.lit("/_apis/"))
-    return F.when(
-        pos > 0,
-        F.concat(
-            col.substr(F.lit(1), pos - 1),
-            F.lit("/"),
-            col.substr(pos + 7, F.length(col)),
-        ),
-    ).otherwise(col)
 
 
 def _put_int(v: Column) -> Column:
@@ -179,7 +166,7 @@ def ado_pipeline_run_spans(events: DataFrame, gate: bool = True) -> DataFrame:
                     _rfc3339(e["run"]["finishedDate"]),
                 ),
             ),
-            ("cicd.pipeline.run.url", _put(ado_url(e["run"]["url"]))),
+            ("cicd.pipeline.run.url", _put(replace_first(e["run"]["url"], "/_apis/", "/"))),
             ("vcs.vendor.name", F.lit("azuredevops")),
         ]
     )

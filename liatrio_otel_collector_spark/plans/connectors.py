@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ids import span_id, trace_id
+
 # the spanmetrics connector's default explicit bucket bounds, in ms
 # (connector/spanmetricsconnector defaults: 2ms..15s)
 DEFAULT_BOUNDS_MS: tuple[int, ...] = (
@@ -66,8 +68,8 @@ def spans_from_events(events: DataFrame) -> DataFrame:
     input for the connector queries (ids via the X4 sha256 scheme; duration
     quantized exact-int so the DuckDB twin reproduces every value)."""
     return events.select(
-        F.substring(F.sha2(F.concat_ws("|", F.col("event_id")), 256), 1, 32).alias("trace_id"),
-        F.substring(F.sha2(F.concat_ws("|", F.col("event_id"), F.col("event_type")), 256), 17, 16).alias("span_id"),
+        trace_id("event_id").alias("trace_id"),
+        span_id("event_id", "event_type").alias("span_id"),
         F.concat(F.lit("svc-"), (F.col("user_id") % 5).cast("string")).alias("service_name"),
         F.col("event_type").alias("span_name"),
         F.when(F.col("event_type") == "error", F.lit(2)).otherwise(F.lit(1)).alias("status_code"),

@@ -10,9 +10,13 @@ Re-expresses the reference's pipeline topology
 as one Spark batch DAG over the tokenized-sequence table:
 
     sequences ──parse(pandas UDF)──► parsed ──broadcast enrich──► enriched
-        enriched ──filter severity≥warn────────────► logs_sink   (rows, tokens intact)
-        enriched ──filter completed-scope + ids────► traces_sink (rows, tokens intact)
-        enriched ──groupBy rollups─────────────────► metrics_sink (aggregates)
+        enriched ──filter severity≥warn────────────► logs    (rows, tokens intact)
+        enriched ──filter completed-scope + ids────► traces  (rows, tokens dropped)
+        enriched ──groupBy rollups─────────────────► metrics, logs_agg, traces_agg
+
+:func:`build_pipeline` assembles the five sinks; the config processors and
+driver queries call its rules, :func:`route_predicates`, :func:`enrich_stage`
+and :func:`metrics_rollup`, too.
 
 Scale notes (the part that matters at 10^12 rows):
 - the input is **salt-repartitioned at the source** on (source, salt) — the
@@ -146,9 +150,9 @@ def enrich_stage(df: DataFrame, dim: DataFrame) -> DataFrame:
 
 
 def route_predicates() -> "dict[str, Column]":
-    """The row-sink membership predicates, exposed so a single combined
-    manifest pass (:func:`fan_out`) can compute every row sink's lineage in
-    ONE scan of the enriched frame instead of one re-scan per sink."""
+    """The row-sink membership predicates: :func:`build_pipeline` routes by
+    them, and ONE manifest pass (:func:`fan_out`) computes every row sink's
+    lineage from them instead of one re-scan per sink."""
     return {
         # F8 analog: the OTTL filter keeps only event-bearing records
         "logs": F.col("severity").isin("warn", "error", "fatal"),
@@ -158,39 +162,12 @@ def route_predicates() -> "dict[str, Column]":
     }
 
 
-def route_stage(enriched: DataFrame) -> dict[str, DataFrame]:
-    """Fan rows out to per-signal sinks.  Tokens pass through UNTOUCHED on
-    the LOGS sink — the per-row token-array-equality invariant lives there.
-    The traces sink does NOT carry the token payload (r6, guide §2.3
-    "project before the exchange"/§6 output sizing): a span is ids +
-    routing attributes, and the wide token array was ~90% of its write
-    bytes while nothing downstream read it from that sink."""
-    preds = route_predicates()
-    return {
-        "logs": enriched.filter(preds["logs"]),
-        "traces": (
-            enriched.filter(preds["traces"])
-            .withColumn("trace_id", trace_id("doc_id", "source"))
-            .withColumn("span_id", span_id("doc_id", "scope"))
-            .drop("tokens")
-        ),
-    }
-
-
-def aggregate_stage(enriched: DataFrame, routed: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Per-sink groupBy rollups (the githubreceiver metric rollups, SURVEY
-    §2.4).  All builtin hash aggregates: map-side partial → shuffle → final."""
-    return {
-        "metrics": enriched.groupBy("source", "severity").agg(
-            F.count(F.lit(1)).alias("seq_count"), F.sum("n_tok").alias("tok_count")
-        ),
-        "logs_agg": routed["logs"]
-        .groupBy("team", "severity")
-        .agg(F.count(F.lit(1)).alias("log_count")),
-        "traces_agg": routed["traces"]
-        .groupBy("scope", "tier")
-        .agg(F.count(F.lit(1)).alias("span_count")),
-    }
+def metrics_rollup(df: DataFrame, *keys: str) -> DataFrame:
+    """The ``metrics`` rollup: sequences and tokens per ``keys`` (the
+    flagship's (source, severity), the config ``rollup`` processor, ``pl1``)."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("seq_count"), F.sum("n_tok").alias("tok_count")
+    )
 
 
 def build_enriched(
@@ -220,12 +197,32 @@ def build_pipeline(
     source_df: DataFrame | None = None,
     enriched: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Assemble the full lazy DAG; returns {sink_name: DataFrame}."""
+    """The full lazy DAG over ``enriched`` (:func:`build_enriched` when not
+    given) as {sink_name: DataFrame}.  ``logs`` and ``traces`` are the rows
+    :func:`route_predicates` routes.  Tokens pass through UNTOUCHED on logs
+    (the per-row token-array-equality invariant lives there); traces gets
+    the X4 ids and NOT the token payload (r6, guide §2.3/§6: a span is ids +
+    routing attributes, and the token array was ~90% of its write bytes while
+    nothing read it there).  ``metrics``, ``logs_agg`` and ``traces_agg`` are
+    the groupBy rollups (SURVEY §2.4): map-side partial → shuffle → final."""
     cfg = cfg or PipelineConfig()
     if enriched is None:
         enriched = build_enriched(spark, n_rows, cfg, source_df)
-    routed = route_stage(enriched)
-    return routed | aggregate_stage(enriched, routed)
+    preds = route_predicates()
+    logs = enriched.filter(preds["logs"])
+    traces = (
+        enriched.filter(preds["traces"])
+        .withColumn("trace_id", trace_id("doc_id", "source"))
+        .withColumn("span_id", span_id("doc_id", "scope"))
+        .drop("tokens")
+    )
+    return {
+        "logs": logs,
+        "traces": traces,
+        "metrics": metrics_rollup(enriched, "source", "severity"),
+        "logs_agg": logs.groupBy("team", "severity").agg(F.count(F.lit(1)).alias("log_count")),
+        "traces_agg": traces.groupBy("scope", "tier").agg(F.count(F.lit(1)).alias("span_count")),
+    }
 
 
 def batch_dir(root: str, name: str, batch_id: int) -> str:
@@ -417,21 +414,17 @@ def flagship_stage(
 ) -> Stage:
     """The flagship topology as one :func:`write_batch` stage: the enriched
     frame (:func:`build_enriched`) and, over its read-back, the ``_input``
-    manifest (every staged row, no destination), the row sinks ``logs`` and
-    ``traces`` and the three rollups, each written to
-    ``<output_dir>/<sink>/batch_id=K/`` in ``cfg.sink_format``."""
+    manifest (every staged row, no destination) and :func:`build_pipeline`'s
+    five sinks, each written to ``<output_dir>/<sink>/batch_id=K/`` in
+    ``cfg.sink_format``: ``logs`` and ``traces`` as row sinks with their
+    :func:`route_predicates` member, the three rollups as derived sinks."""
 
     def sinks(enriched: DataFrame) -> dict[str, Sink]:
-        routed, preds = route_stage(enriched), route_predicates()
-
-        def at(name: str) -> tuple[tuple[str, str], ...]:
-            return ((batch_dir(output_dir, name, batch_id), cfg.sink_format),)
-
-        return (
-            {"_input": Sink(enriched, member=F.lit(True))}
-            | {n: Sink(df, at(n), preds[n]) for n, df in routed.items()}
-            | {n: Sink(df, at(n)) for n, df in aggregate_stage(enriched, routed).items()}
-        )
+        preds = route_predicates()
+        return {"_input": Sink(enriched, member=F.lit(True))} | {
+            n: Sink(df, ((batch_dir(output_dir, n, batch_id), cfg.sink_format),), preds.get(n))
+            for n, df in build_pipeline(spark, 0, cfg, enriched=enriched).items()
+        }
 
     return build_enriched(spark, 0, cfg, source_df), sinks
 

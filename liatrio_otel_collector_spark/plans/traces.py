@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.strings import format_service_name
+from ..functions.strings import api_to_html_url, format_service_name
 
 KIND_SERVER = 2
 STATUS_UNSET, STATUS_OK, STATUS_ERROR = 0, 1, 2
@@ -147,7 +147,7 @@ def workflow_run_spans(events: DataFrame) -> DataFrame:
             "cicd.pipeline.run.previous_attempt.url.full",
             F.when(
                 F.col("previous_attempt_url") != "",
-                F.regexp_replace("previous_attempt_url", r"api\.github\.com/repos", "github.com"),
+                api_to_html_url("previous_attempt_url"),
             ),
         ),
     )

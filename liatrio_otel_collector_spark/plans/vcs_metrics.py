@@ -21,12 +21,14 @@ the reference's quirks:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.maps import normalize_severity
-from ..functions.strings import age_seconds
-from ..sources.domain import NOW
+from ..functions.strings import CATALOG_COMPONENT_RE, age_seconds
+from ..sources.domain import NOW, pr_branch_ref
 
 GO_MAX_DURATION_S = 9_223_372_036  # MaxInt64 ns in whole seconds
 
@@ -35,6 +37,14 @@ def _clamped_age_s(start: Column, end: Column) -> Column:
     """getAge with Go's Duration overflow clamp (helpers.go:410-412; the
     zero-time open PR in the happy-path golden hits the cap)."""
     return F.least(age_seconds(start, end), F.lit(GO_MAX_DURATION_S)).cast("bigint")
+
+
+def _snapshot(parts: list[DataFrame], org: str, vendor: str) -> DataFrame:
+    """The emit tail (github_scraper.go:256-262): every part's datapoints,
+    stamped with the organization.name + vcs.vendor.name resource attrs."""
+    return reduce(DataFrame.unionByName, parts).withColumn(
+        "resource", _attrs(("organization.name", F.lit(org)), ("vcs.vendor.name", F.lit(vendor)))
+    )
 
 
 def _emit(df: DataFrame, metric: str, value: Column, attrs: Column) -> DataFrame:
@@ -225,11 +235,7 @@ def github_scrape_metrics(
         _emit(cves, "vcs.cve.count", F.col("n"), repo_attrs((("cve.severity", F.col("severity")),)))
     )
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    resource = _attrs(("organization.name", F.lit(org)), ("vcs.vendor.name", F.lit("github")))
-    return out.withColumn("resource", resource)
+    return _snapshot(parts, org, "github")
 
 
 def gitlab_scrape_metrics(
@@ -359,11 +365,7 @@ def gitlab_scrape_metrics(
         )
     )
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    resource = _attrs(("organization.name", F.lit(org)), ("vcs.vendor.name", F.lit("gitlab")))
-    return out.withColumn("resource", resource)
+    return _snapshot(parts, org, "gitlab")
 
 
 def gitlab_terraform_scrape_metrics(
@@ -462,11 +464,7 @@ def gitlab_terraform_scrape_metrics(
             _attrs(*mod_attrs),
         )
     )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    resource = _attrs(("organization.name", F.lit(org)), ("vcs.vendor.name", F.lit("gitlab")))
-    return out.withColumn("resource", resource)
+    return _snapshot(parts, org, "gitlab")
 
 
 def gitlab_catalog_scrape_metrics(
@@ -510,7 +508,7 @@ def gitlab_catalog_scrape_metrics(
     with_usages = usage_counts.filter(F.col("n") > 0).select("project_path")
     comps = (
         ci_lines.join(with_usages, "project_path")
-        .withColumn("m", F.regexp_extract("line", r"^\s*-\s*component:\s*[^/]+/(.+)", 1))
+        .withColumn("m", F.regexp_extract("line", CATALOG_COMPONENT_RE, 1))
         .filter(F.col("m") != "")
         .withColumn("component", F.substring_index("m", "@", 1))
     )
@@ -539,11 +537,7 @@ def gitlab_catalog_scrape_metrics(
     parts.append(
         _emit(resources, "gitlab.catalog.resource.usage_count", F.col("usage_count"), res_attrs)
     )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    resource = _attrs(("organization.name", F.lit(org)), ("vcs.vendor.name", F.lit("gitlab")))
-    return out.withColumn("resource", resource)
+    return _snapshot(parts, org, "gitlab")
 
 
 # --------------------------------------------------------------------------
@@ -778,7 +772,7 @@ def azuredevops_scrape_metrics(
                 )
             )
         if "deploy.deployment.average_duration" in enabled:
-            dur = F.unix_timestamp("completed_ts") - F.unix_timestamp("started_ts")
+            dur = age_seconds("started_ts", "completed_ts")
             ok = fin.filter(
                 (F.col("status") == "succeeded")
                 & F.col("started_ts").isNotNull()
@@ -850,9 +844,7 @@ def azuredevops_scrape_metrics(
                 _emit(
                     dated.filter(F.col("closed_date").isNotNull()),
                     "work_item.cycle_time",
-                    (
-                        F.unix_timestamp("closed_date") - F.unix_timestamp("created_date")
-                    ).cast("bigint"),
+                    age_seconds("created_date", "closed_date"),
                     _attrs(
                         ("work_item.id", F.col("id")),
                         ("work_item.type", F.col("wi_type")),
@@ -865,9 +857,7 @@ def azuredevops_scrape_metrics(
                 _emit(
                     dated.filter(F.col("closed_date").isNull()),
                     "work_item.age",
-                    (F.unix_timestamp(now_ts) - F.unix_timestamp("created_date")).cast(
-                        "bigint"
-                    ),
+                    age_seconds("created_date", now_ts),
                     _attrs(
                         ("work_item.id", F.col("id")),
                         ("work_item.type", F.col("wi_type")),
@@ -889,13 +879,9 @@ def azuredevops_scrape_metrics(
                 F.create_map().cast("map<string,string>"),
             )
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     # Golden-era resource attrs (expected_happy_path.yaml; the current code's
     # rb.SetVcsProviderName/SetVcsOwnerName serialize to the newer names).
-    resource = _attrs(("organization.name", F.lit(org)), ("vcs.vendor.name", F.lit("azuredevops")))
-    return out.withColumn("resource", resource)
+    return _snapshot(parts, org, "azuredevops")
 
 
 def azuredevops_view_scrape(pull_requests: DataFrame, org: str, project: str = "") -> DataFrame:
@@ -911,9 +897,7 @@ def azuredevops_view_scrape(pull_requests: DataFrame, org: str, project: str = "
         F.when(F.col("state") == "MERGED", "completed").otherwise("active").alias("status"),
         F.col("created_at").cast("timestamp").alias("created_at"),
         F.col("merged_at").cast("timestamp").alias("closed_at"),
-        F.concat(F.lit("br-"), (F.col("pr_id").cast("bigint") % 11).cast("string")).alias(
-            "source_ref"
-        ),
+        pr_branch_ref().alias("source_ref"),
         "additions",
         "deletions",
     )

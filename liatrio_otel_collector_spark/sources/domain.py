@@ -16,7 +16,7 @@ Determinism rules shared by both dialects:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .tables import ensure_parallel_scan
@@ -146,6 +146,13 @@ pull_requests AS (
   FROM orders
 )
 """
+
+
+def pr_branch_ref() -> Column:
+    """A pull request's synthetic head branch ``br-<pr_id % 11>``, the same in
+    every scrape of this view (the github, gitlab and azuredevops receivers)."""
+    return F.concat(F.lit("br-"), (F.col("pr_id").cast("bigint") % 11).cast("string"))
+
 
 # ---------------------------------------------------------------------------
 # cve_alerts — FIXTURES §3e (helpers.go:414-521)

@@ -63,7 +63,11 @@ def start_query(
 
 def start_stream(spark: SparkSession, cfg: StreamingConfig, available_now: bool = True):
     """Start (or resume, if the checkpoint exists) the streaming pipeline;
-    ``available_now`` picks the trigger as in :func:`start_query`."""
+    ``available_now`` picks the trigger as in :func:`start_query`.  Every
+    micro-batch writes to ``cfg.output_dir``, so a ``cfg.pipeline`` naming
+    another ``output_dir`` is refused with ``ValueError``."""
+    if cfg.pipeline.output_dir not in (None, cfg.output_dir):
+        raise ValueError(f"pipeline.output_dir must be unset or {cfg.output_dir!r}")
     raw = (
         spark.readStream.schema(SEQ_SCHEMA)
         .option("maxFilesPerTrigger", cfg.max_files_per_trigger)

@@ -16,6 +16,7 @@ from liatrio_otel_collector_spark.functions import (
     normalize_severity,
     parse_multi_format_ts,
     release_to_service,
+    replace_first,
     span_id,
     split_tags,
     status_to_span_code,
@@ -82,6 +83,11 @@ def test_string_kernels(spark):
         _one(spark, workflow_path_to_name(F.lit(".github/workflows/My_CI.yml@refs/heads/main")))
         == "my_ci"
     )
+    # Go strings.Replace(s, old, new, 1): only the first occurrence
+    assert _one(spark, replace_first(F.lit("a/_apis/b/_apis/c"), "/_apis/", "/")) == "a/b/_apis/c"
+    assert _one(spark, replace_first(F.lit("https://x/y"), "/_apis/", "/")) == "https://x/y"
+    assert _one(spark, replace_first(F.lit("api.github.com"), "api.", "")) == "github.com"
+    assert _one(spark, replace_first(F.lit(None).cast("string"), "api.", "")) is None
 
 
 def test_split_tags(spark):

@@ -4,6 +4,8 @@ order-insensitive normalized values)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from liatrio_otel_collector_spark.entry_queries import ORACLES, QUERIES
@@ -34,7 +36,8 @@ def test_parity(name, spark, con):
 def test_entry_contract(spark):
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("spark_entry", "/root/repo/__spark_entry__.py")
+    entry_file = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("spark_entry", entry_file)
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     df = m.entry(spark)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from liatrio_otel_collector_spark.sources.sequences import sequences
@@ -121,3 +122,28 @@ def test_replayed_batch_replaces_its_output(spark, tmp_path):
     assert lineage.agg(F.sum("row_count")).collect()[0][0] == 1000
     metrics = spark.read.parquet(os.path.join(out, "_metrics"))
     assert [(r["batch_id"], r["input_rows"]) for r in metrics.collect()] == [(3, 1000)]
+
+
+def test_stream_refuses_another_pipeline_output_dir(spark, tmp_path):
+    """Every micro-batch writes to the stream's ``output_dir``, so a pipeline
+    config naming another one is refused, not silently ignored; naming the
+    same dir in both (as scripts/run_pipeline_job.py does) still runs."""
+    from liatrio_otel_collector_spark.plans.pipeline import PipelineConfig
+
+    input_dir, out = str(tmp_path / "in"), str(tmp_path / "out")
+    sequences(spark, 200).coalesce(1).write.parquet(input_dir)
+
+    def cfg(pipeline_out):
+        return StreamingConfig(
+            input_dir=input_dir, output_dir=out, checkpoint_dir=str(tmp_path / "ckpt"),
+            pipeline=PipelineConfig(output_dir=pipeline_out),
+        )
+
+    with pytest.raises(ValueError, match="output_dir"):
+        start_stream(spark, cfg(str(tmp_path / "elsewhere")))
+    assert not os.path.exists(out) and not os.path.exists(tmp_path / "elsewhere")
+
+    q = start_stream(spark, cfg(out), available_now=True)
+    assert q.awaitTermination(300)
+    metrics = spark.read.parquet(os.path.join(out, "_metrics"))
+    assert metrics.agg(F.sum("input_rows")).collect()[0][0] == 200
