@@ -70,7 +70,7 @@ from .operators.setops import fan_in
 from .plans.grouping import group_by_attrs, group_by_trace, interval_last
 from .plans.logs import gitlab_enrich
 from .plans.pipeline import Sink, Stage, batch_dir, enrich_stage, metrics_rollup
-from .plans.pipeline import output_dir_or_scratch, parse_stage, sink_defaults, write_batch
+from .plans.pipeline import SINK_FORMAT, output_dir_or_scratch, parse_stage, write_batch
 from .plans.samplers import probabilistic_sample, tail_sample_errors
 from .sources.domain import NOW, VIEW_BUILDERS, pr_branch_ref
 from .sources.sequences import enrich_dim, sequences
@@ -192,6 +192,10 @@ def load_config(text: str, env: dict[str, str] | None = None) -> CollectorConfig
             if bad:
                 raise ConfigError(f"receiver {rid!r}: unknown key(s) {sorted(bad)}")
             scrapers = rcfg.get("scrapers") or {}
+            if not isinstance(scrapers, dict):
+                raise ConfigError(f"receiver {rid!r}: 'scrapers' must be a mapping")
+            # a null `scrapers:` or scraper reads as an empty one
+            rcfg["scrapers"] = {k: v or {} for k, v in scrapers.items()}
             bad_scrapers = set(scrapers) - _SCRAPER_IDS[rtype]
             if bad_scrapers:
                 # config.go:34-50 — scraper key must name a defined scraper
@@ -287,7 +291,7 @@ def _build_receiver(
         # shape the domain views into the scraper fixture schemas
         # (tests/test_scraper_golden.py REPO/BRANCH/PR/COMMIT/CVE_SCHEMA)
         v = _views(spark, ctx)
-        org = (rcfg.get("scrapers", {}).get("scraper", {}) or {}).get("github_org", "org")
+        org = rcfg["scrapers"].get("scraper", {}).get("github_org", "org")
         repos = v["repos"].select("repo_name", "url", "default_branch", "archived")
         branches = v["branches"].select(
             "repo_name", F.lit("").alias("url"), "branch_name",
@@ -313,7 +317,7 @@ def _build_receiver(
         # gitlab scraper snapshot: shape the github-flavored domain views
         # into its (projects, branches, merge_requests) schemas
         v = _views(spark, ctx)
-        org = (rcfg.get("scrapers", {}).get("gitlab", {}) or {}).get("gitlab_org", "org")
+        org = rcfg["scrapers"].get("gitlab", {}).get("gitlab_org", "org")
         projects = v["repos"].select(
             "repo_name", F.col("repo_name").alias("repo_id"), "url"
         )
@@ -349,7 +353,7 @@ def _build_receiver(
             )
         return ado_trace_pipeline(ctx.frames[rid])
     if rtype == "azuredevops":
-        sc = rcfg.get("scrapers", {}).get("azuredevops", {}) or {}
+        sc = rcfg["scrapers"].get("azuredevops", {})
         return azuredevops_view_scrape(
             _views(spark, ctx)["pull_requests"],
             org=sc.get("organization", "org"),
@@ -416,30 +420,26 @@ def _apply_processor(df: DataFrame, pid: str, pcfg: dict, ctx: AssembleContext) 
             raise ConfigError("gitlab processor needs ctx.components_dim")
         return gitlab_enrich(df, ctx.components_dim)
     if ptype == "probabilistic_sampler":
-        return probabilistic_sample(
-            df, percent=float(pcfg.get("sampling_percentage", 25.0)),
-            trace_col=pcfg.get("trace_col", "trace_id"),
-        )
+        # an unset key takes the kernel's default; a set one is converted,
+        # as ${env:} expansion yields strings
+        pct = pcfg.get("sampling_percentage")
+        return probabilistic_sample(df) if pct is None else probabilistic_sample(df, percent=float(pct))
     if ptype == "tail_sampling":
-        return tail_sample_errors(df, trace_col=pcfg.get("trace_col", "trace_id"))
+        return tail_sample_errors(df)
     if ptype == "groupbyattrs":
+        if "fallback" not in pcfg:
+            raise ConfigError(f"processor {pid!r}: groupbyattrs needs 'fallback'")
         return group_by_attrs(
             df, keys=list(pcfg.get("keys") or []), fallback_resource=pcfg["fallback"]
         )
     if ptype == "groupbytrace":
-        return group_by_trace(df, trace_col=pcfg.get("trace_col", "trace_id"))
+        return group_by_trace(df)
     if ptype == "interval":
-        return interval_last(
-            df,
-            identity=list(pcfg.get("identity") or []),
-            ts_col=pcfg.get("ts_col", "ts"),
-            order_tiebreak=pcfg.get("tiebreak"),
-            interval_sec=int(pcfg.get("interval_sec", 60)),
-        )
+        return interval_last(df, identity=list(pcfg.get("identity") or []))
     # flagship stages: the north-star parse -> enrich -> route -> aggregate
     # topology declared in YAML drives the exact same plans as run_pipeline
     if ptype == "parse_tokens":
-        return parse_stage(df, use_udf=bool(pcfg.get("use_udf", True)))
+        return parse_stage(df)
     if ptype == "enrich":
         dim = ctx.components_dim if pcfg.get("dim") == "ctx" else enrich_dim(df.sparkSession)
         return enrich_stage(df, dim)
@@ -460,9 +460,11 @@ def _apply_connector(df: DataFrame, cid: str, ccfg: dict) -> DataFrame:
 
     ctype = _ctype(cid)
     if ctype == "count":
-        return count_connector(df, dims=tuple(ccfg.get("dims") or ("service_name", "span_name")))
+        # an empty `dims:` list counts by the default dims, like an unset one
+        dims = ccfg.get("dims")
+        return count_connector(df, dims=tuple(dims)) if dims else count_connector(df)
     if ctype == "spanmetrics":
-        return spanmetrics_connector(df, duration_col=ccfg.get("duration_col", "duration_ms"))
+        return spanmetrics_connector(df)
     raise ConfigError(f"unknown connector type {ctype!r}")
 
 
@@ -607,7 +609,7 @@ def config_stages(
                 else (os.path.join(output_dir, name), eid.replace("/", "_"))
             )
             dests.append(
-                (batch_dir(root, leaf, batch_id), ecfg.get("format", sink_defaults()[0]))
+                (batch_dir(root, leaf, batch_id), ecfg.get("format", SINK_FORMAT))
             )
         return built[name], lambda df: {name: Sink(df, tuple(dests), F.lit(True))}
 

@@ -2196,9 +2196,7 @@ WHERE rn = 1
     lambda spark, sf: interval_last(
         load_tables(spark, sf)["events"],
         identity=("user_id", "event_type"),
-        ts_col="ts",
         order_tiebreak="event_id",
-        interval_sec=60,
     )
 )
 

@@ -85,11 +85,9 @@ def load_pattern_file(text: str) -> dict[str, str]:
     return defs
 
 
-def add_patterns(
-    defs: dict[str, str], base: dict[str, str] | None = None
-) -> dict[str, str]:
-    """Resolve user pattern definitions against ``base`` (default: the
-    built-in library) into a merged, fully-expanded library.
+def add_patterns(defs: dict[str, str]) -> dict[str, str]:
+    """Resolve user pattern definitions against the built-in library
+    (``GROK_PATTERNS``) into a merged, fully-expanded library.
 
     Definitions may reference other patterns with bare ``%{NAME}`` — custom
     or built-in, in any order.  Two hard rules, both the group-index-safety
@@ -102,7 +100,6 @@ def add_patterns(
 
     Reference cycles (A -> B -> A, or A -> A) are detected and reported with
     the full chain."""
-    base = dict(GROK_PATTERNS if base is None else base)
     resolved: dict[str, str] = {}
 
     def expand(name: str, stack: tuple[str, ...]) -> str:
@@ -113,10 +110,10 @@ def add_patterns(
             raise ValueError(f"grok pattern cycle: {chain}")
         if name in defs:
             body = defs[name]
-        elif name in base:
+        elif name in GROK_PATTERNS:
             # built-ins are already leaf regexes (no %{} refs)
-            resolved[name] = base[name]
-            return base[name]
+            resolved[name] = GROK_PATTERNS[name]
+            return GROK_PATTERNS[name]
         else:
             raise ValueError(f"unknown grok pattern %{{{name}}}")
         if _CAPTURING_PAREN.search(body):
@@ -139,7 +136,7 @@ def add_patterns(
 
     for name in defs:
         expand(name, ())
-    return {**base, **resolved}
+    return {**GROK_PATTERNS, **resolved}
 
 
 def grok_compile(

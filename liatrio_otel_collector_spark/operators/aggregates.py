@@ -178,10 +178,10 @@ def work_item_count(work_items: DataFrame) -> DataFrame:
 
 
 # A16 — work_item.tag.count (work_items.go:256-267): X11 split + allowlist F9.
-def work_item_tag_count(work_items: DataFrame, allowlist: tuple[str, ...] = ("alpha", "beta", "gamma")) -> DataFrame:
+def work_item_tag_count(work_items: DataFrame) -> DataFrame:
     return (
         work_items.select("wi_type", F.explode(split_tags("tags")).alias("tag"))
-        .filter(F.col("tag").isin(*allowlist))
+        .filter(F.col("tag").isin("alpha", "beta", "gamma"))
         .groupBy("tag", "wi_type")
         .agg(F.count(F.lit(1)).alias("tag_count"))
     )

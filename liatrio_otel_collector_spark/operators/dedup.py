@@ -45,8 +45,8 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     ).drop("_k")
 
 
-def shingles(documents: DataFrame, k: int = 3, distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle): k-word shingles per document.
+def shingles(documents: DataFrame, distinct: bool = True) -> DataFrame:
+    """(doc_id, shingle): 3-word shingles per document.
 
     ``distinct=True`` (a full shuffle) is required for Jaccard set counts;
     minwise hashing passes ``distinct=False`` — min over duplicates is
@@ -70,12 +70,12 @@ def shingles(documents: DataFrame, k: int = 3, distinct: bool = True) -> DataFra
     if needs_widening(documents):
         documents = documents.repartition(sc.defaultParallelism, F.col("doc_id"))
     w = F.split(F.col("text"), " ")
-    # slice+concat_ws measured FASTER than k per-element get() probes inside
+    # slice+concat_ws measured FASTER than 3 per-element get() probes inside
     # the interpreted lambda (1.2 s vs 1.9 s noop at sf1.0) — the one array
-    # copy beats k boxed function-call round-trips
+    # copy beats 3 boxed function-call round-trips
     sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(w) - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
+        F.sequence(F.lit(0), F.greatest(F.size(w) - 3, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(w, i + 1, 3)),
     )
     out = documents.select("doc_id", F.explode(sh).alias("shingle")).filter(
         F.col("shingle") != ""
@@ -83,16 +83,16 @@ def shingles(documents: DataFrame, k: int = 3, distinct: bool = True) -> DataFra
     return out.distinct() if distinct else out
 
 
-def minhash_signatures(sh: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(doc_id, h0..h{n-1}): minwise md5 signature per doc."""
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, h0..h{NUM_HASHES-1}): minwise md5 signature per doc."""
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _materialized_signatures(documents: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
+def _materialized_signatures(documents: DataFrame) -> DataFrame:
     """The minhash signature frame behind a lazy plan barrier (guide §1.2
     "don't compute things twice"): dd2's plan consumes the signatures FOUR
     times (both sides of the band bucket join, both sides of the
@@ -109,24 +109,23 @@ def _materialized_signatures(documents: DataFrame, num_hashes: int = NUM_HASHES)
     lambdas evaluate interpreted per element, and 11M interpreted md5 calls
     lose badly to the codegen'd explode + aggregate, so the exploded form
     stays."""
-    sig = minhash_signatures(shingles(documents, distinct=False), num_hashes)
+    sig = minhash_signatures(shingles(documents, distinct=False))
     return sig.localCheckpoint(eager=False)
 
 
-def lsh_bands(sig: DataFrame, num_hashes: int = NUM_HASHES, band_size: int = BAND_SIZE) -> DataFrame:
+def lsh_bands(sig: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_key): banded signature for bucket-join."""
-    n_bands = num_hashes // band_size
     bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_id"),
                 F.md5(
                     F.concat_ws(
-                        "|", *[F.col(f"h{b * band_size + j}") for j in range(band_size)]
+                        "|", *[F.col(f"h{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
                     )
                 ).alias("band_key"),
             )
-            for b in range(n_bands)
+            for b in range(NUM_HASHES // BAND_SIZE)
         ]
     )
     return sig.select("doc_id", F.explode(bands).alias("b")).select(
@@ -134,12 +133,7 @@ def lsh_bands(sig: DataFrame, num_hashes: int = NUM_HASHES, band_size: int = BAN
     )
 
 
-def capped_bands(
-    sig: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    band_size: int = BAND_SIZE,
-    max_bucket_width: int = MAX_BUCKET_WIDTH,
-) -> DataFrame:
+def capped_bands(sig: DataFrame, max_bucket_width: int = MAX_BUCKET_WIDTH) -> DataFrame:
     """lsh_bands with the bucket-width guard: within each (band_id,
     band_key) bucket only the first max_bucket_width doc_ids survive, so a
     bucket of N identical docs yields O(W²) candidate pairs instead of
@@ -148,22 +142,17 @@ def capped_bands(
     key as the downstream bucket join — no extra shuffle stage."""
     w = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
     return (
-        lsh_bands(sig, num_hashes, band_size)
+        lsh_bands(sig)
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= max_bucket_width)
         .drop("_rk")
     )
 
 
-def minhash_candidates(
-    sig: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    band_size: int = BAND_SIZE,
-    max_bucket_width: int = MAX_BUCKET_WIDTH,
-) -> DataFrame:
+def minhash_candidates(sig: DataFrame, max_bucket_width: int = MAX_BUCKET_WIDTH) -> DataFrame:
     """Band-collision candidate pairs (pre-verification), bucket-capped, over
     an already built signature frame (:func:`_materialized_signatures`)."""
-    bands = capped_bands(sig, num_hashes, band_size, max_bucket_width)
+    bands = capped_bands(sig, max_bucket_width)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -177,29 +166,23 @@ def minhash_candidates(
     )
 
 
-def minhash_near_dups(
-    documents: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    band_size: int = BAND_SIZE,
-    min_matches: int = 4,
-    max_bucket_width: int = MAX_BUCKET_WIDTH,
-) -> DataFrame:
+def minhash_near_dups(documents: DataFrame) -> DataFrame:
     """MinHash+LSH near-duplicate pairs: shingle → minhash → capped band →
     bucket join → signature-agreement filter.  Returns (doc_a, doc_b,
-    match_count) for pairs agreeing on >= min_matches of num_hashes hashes."""
-    sig = _materialized_signatures(documents, num_hashes)
-    cand = minhash_candidates(sig, num_hashes, band_size, max_bucket_width)
-    sa = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)])
-    sb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)])
+    match_count) for pairs agreeing on >= 4 of the NUM_HASHES hashes."""
+    sig = _materialized_signatures(documents)
+    cand = minhash_candidates(sig)
+    sa = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)])
+    sb = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)])
     joined = cand.join(sa, "doc_a").join(sb, "doc_b")
     match = reduce(
         lambda acc, i: acc + F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0),
-        range(1, num_hashes),
+        range(1, NUM_HASHES),
         F.when(F.col("a0") == F.col("b0"), 1).otherwise(0),
     )
     return (
         joined.select("doc_a", "doc_b", match.cast("bigint").alias("match_count"))
-        .filter(F.col("match_count") >= min_matches)
+        .filter(F.col("match_count") >= 4)
     )
 
 
@@ -234,11 +217,10 @@ def ngram_candidates(cold: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(
     documents: DataFrame,
-    k: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int = MAX_DOC_FREQ,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs with the DF cap.
+    """Exact 3-word-shingle Jaccard near-dup pairs with the DF cap.
 
     intersection = COLD part + HOT part:
     - the cold self-join (shingles with df <= cap) IS candidate generation,
@@ -250,7 +232,7 @@ def ngram_jaccard_pairs(
       lists.
     Values are identical to the naive full-intersection definition — the
     DuckDB oracle computes it the naive way and hash-matches."""
-    sh = shingles(documents, k)
+    sh = shingles(documents)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     cold, hot = doc_freq_split(sh, max_doc_freq)
     inter_cold = ngram_candidates(cold)
@@ -282,28 +264,28 @@ def ngram_jaccard_pairs(
 SIMHASH_BITS = 16
 
 
-def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash): bit-majority fingerprint over shingle hashes.
 
     Shingle hash = first 15 hex chars of md5 parsed as int (60 bits, positive)
-    — reproducible in any SQL engine with md5 + hex parse.  16 bits keeps the
-    aggregate narrow; widen `bits` for production use.
+    — reproducible in any SQL engine with md5 + hex parse.  SIMHASH_BITS (16)
+    keeps the aggregate narrow; widen it for production use.
     """
     sh = shingles(documents)
     h = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("bigint")
     withbits = sh.select("doc_id", *[
-        (F.shiftright(h, j).bitwiseAND(F.lit(1))).alias(f"bit{j}") for j in range(bits)
+        (F.shiftright(h, j).bitwiseAND(F.lit(1))).alias(f"bit{j}") for j in range(SIMHASH_BITS)
     ])
     agg = withbits.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"bit{j}").alias(f"s{j}") for j in range(bits)],
+        *[F.sum(f"bit{j}").alias(f"s{j}") for j in range(SIMHASH_BITS)],
     )
     fp = reduce(
         lambda acc, j: acc
         + F.when(2 * F.col(f"s{j}") >= F.col("n"), F.lit(2**j).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         ),
-        range(1, bits),
+        range(1, SIMHASH_BITS),
         F.when(2 * F.col("s0") >= F.col("n"), F.lit(1).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         ),

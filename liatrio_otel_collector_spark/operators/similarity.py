@@ -54,28 +54,25 @@ def dot_lit(q: str, vec):
     )
 
 
-def random_hyperplanes(
-    n_bits: int = 3,
-    dim: int = EMBEDDING_DIM,
-    seed: int = LSH_SEED,
-    scale: int = PLANE_SCALE,
-) -> tuple[tuple[int, ...], ...]:
-    """Seeded random hyperplanes with INTEGER coefficients in [-scale,
-    scale]: the bucket bit is sign(<quantized_embedding, plane>), a BIGINT
-    dot product — bit-exact in Spark and DuckDB alike (no float-order
-    hazards near the decision boundary)."""
-    rng = random.Random(seed)
+def random_hyperplanes() -> tuple[tuple[int, ...], ...]:
+    """Three seeded random hyperplanes with INTEGER coefficients in
+    [-PLANE_SCALE, PLANE_SCALE]: the bucket bit is
+    sign(<quantized_embedding, plane>), a BIGINT dot product — bit-exact in
+    Spark and DuckDB alike (no float-order hazards near the decision
+    boundary)."""
+    rng = random.Random(LSH_SEED)
     return tuple(
-        tuple(rng.randint(-scale, scale) for _ in range(dim)) for _ in range(n_bits)
+        tuple(rng.randint(-PLANE_SCALE, PLANE_SCALE) for _ in range(EMBEDDING_DIM))
+        for _ in range(3)
     )
 
 
 RANDOM_PLANES = random_hyperplanes()
 
 
-def _quantized(embeddings: DataFrame, out: str = "q") -> DataFrame:
+def _quantized(embeddings: DataFrame) -> DataFrame:
     return embeddings.withColumn(
-        out, F.transform(F.col("embedding"), lambda x: F.floor(x.cast("double") * 1000).cast("bigint"))
+        "q", F.transform(F.col("embedding"), lambda x: F.floor(x.cast("double") * 1000).cast("bigint"))
     )
 
 
@@ -116,19 +113,15 @@ def brute_force_topk(embeddings: DataFrame, query_ids: tuple[int, ...] = (0, 1, 
     )
 
 
-def signlsh_buckets(
-    embeddings: DataFrame,
-    planes: tuple[tuple[int, ...], ...] = RANDOM_PLANES,
-    q_col: str = "q",
-) -> DataFrame:
+def signlsh_buckets(embeddings: DataFrame) -> DataFrame:
     """Sign-LSH bucket id from seeded RANDOM hyperplanes (replacing the r1
     first-3-dims heuristic — measured recall vs sim1 documented in
     tests/test_similarity_recall.py): bit j = <q, plane_j> >= 0."""
     bucket = None
-    for j, plane in enumerate(planes):
+    for j, plane in enumerate(RANDOM_PLANES):
         # expanded literal dot (codegen) — same exact BIGINT sum as the old
         # aggregate(zip_with(...)) fold
-        dot = dot_lit(q_col, plane)
+        dot = dot_lit("q", plane)
         bit = F.when(dot >= 0, F.lit(2**j)).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
     return embeddings.withColumn("bucket", bucket.cast("int"))
@@ -154,15 +147,14 @@ def lsh_topk(
     embeddings: DataFrame,
     query_ids: tuple[int, ...] = (0, 1, 2),
     k: int = 5,
-    planes: tuple[tuple[int, ...], ...] = RANDOM_PLANES,
     probe_hamming: int = 1,
 ) -> DataFrame:
     """ANN variant: candidates restricted to the query's sign-LSH probe set
     (own bucket + Hamming-≤probe_hamming neighbors — multi-probe LSH).
     Same scoring as brute force; recall < 1 by design (scale path)."""
-    b = signlsh_buckets(_quantized(embeddings), planes)
+    b = signlsh_buckets(_quantized(embeddings))
     masks = F.array(
-        *[F.lit(m) for m in probe_masks(len(planes), probe_hamming)]
+        *[F.lit(m) for m in probe_masks(len(RANDOM_PLANES), probe_hamming)]
     )
     q = (
         b.select(
@@ -212,13 +204,17 @@ _SQDIST = (
 )
 
 
-def ivf_centroids(embeddings: DataFrame, k: int = IVF_K, stride: int = IVF_CENTROID_STRIDE) -> DataFrame:
-    """(cell, qc): the K sampled centroid vectors (vec_id = j*stride)."""
-    ids = [j * stride for j in range(k)]
+def ivf_centroids(embeddings: DataFrame) -> DataFrame:
+    """(cell, qc): the IVF_K sampled centroid vectors (vec_id =
+    j*IVF_CENTROID_STRIDE)."""
+    ids = [j * IVF_CENTROID_STRIDE for j in range(IVF_K)]
     return (
         _quantized(embeddings)
         .filter(F.col("vec_id").isin(*ids))
-        .select((F.col("vec_id") / stride).cast("int").alias("cell"), F.col("q").alias("qc"))
+        .select(
+            (F.col("vec_id") / IVF_CENTROID_STRIDE).cast("int").alias("cell"),
+            F.col("q").alias("qc"),
+        )
     )
 
 
@@ -237,7 +233,7 @@ def collect_centroids(centroids: DataFrame) -> list[tuple[int, list[int]]]:
     return sorted((int(r["cell"]), [int(x) for x in r["qc"]]) for r in centroids.collect())
 
 
-def _assign_expr(cents: list[tuple[int, list[int]]], q_col: str = "q"):
+def _assign_expr(cents: list[tuple[int, list[int]]]):
     """Nearest-centroid cell id as one expression over literal centroids:
     array_min over (dist, cell) structs — struct comparison is field-ordered,
     so this is EXACTLY the old row_number(ORDER BY dist, cell) == 1 tie rule.
@@ -262,7 +258,7 @@ def _assign_expr(cents: list[tuple[int, list[int]]], q_col: str = "q"):
     ids = "array(" + ", ".join(str(int(cell)) for cell, _ in cents) + ")"
     return F.expr(
         f"CAST(array_min(zip_with({vecs}, {ids}, "
-        f"(cv, cid) -> named_struct('d', aggregate(zip_with({q_col}, cv, "
+        "(cv, cid) -> named_struct('d', aggregate(zip_with(q, cv, "
         "(x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v), "
         "'c', cid))).c AS INT)"
     )
@@ -300,13 +296,9 @@ def _lloyd_rows(assigned: DataFrame) -> list[tuple[int, list[int]]]:
     )
 
 
-def ivf_kmeans_centroid_rows(
-    embeddings: DataFrame,
-    k: int = IVF_K,
-    stride: int = IVF_CENTROID_STRIDE,
-    iters: int = IVF_KMEANS_ITERS,
-) -> list[tuple[int, list[int]]]:
-    """Driver-side list of (cell, qc) after the FIXED Lloyd iterations.
+def ivf_kmeans_centroid_rows(embeddings: DataFrame) -> list[tuple[int, list[int]]]:
+    """Driver-side list of (cell, qc) after the IVF_KMEANS_ITERS Lloyd
+    iterations.
 
     Arithmetic is UNCHANGED from the r5 DataFrame-only version — init is the
     stride sample, assignment is exact integer squared distance with ties to
@@ -316,11 +308,11 @@ def ivf_kmeans_centroid_rows(
     BroadcastNestedLoopJoin and one full-N row_number window shuffle, and
     stops the final assignment's lineage from nesting every previous
     iteration's join+window (the old plan re-ran ~5 scans of the vectors).
-    Cost: `iters + 1` tiny collects (K rows of 64 ints each — dim-table
+    Cost: `IVF_KMEANS_ITERS + 1` tiny collects (K rows of 64 ints each — dim-table
     size), the same class of driver work as building any broadcast side."""
-    cents = collect_centroids(ivf_centroids(embeddings, k, stride))
+    cents = collect_centroids(ivf_centroids(embeddings))
     v = _quantized(_widened(embeddings)).select("vec_id", "q")
-    for _ in range(iters):
+    for _ in range(IVF_KMEANS_ITERS):
         cents = _lloyd_rows(assign_cells_local(v, cents))
     return cents
 
@@ -342,17 +334,12 @@ def _widened(embeddings: DataFrame) -> DataFrame:
     return embeddings
 
 
-def ivf_kmeans_centroids(
-    embeddings: DataFrame,
-    k: int = IVF_K,
-    stride: int = IVF_CENTROID_STRIDE,
-    iters: int = IVF_KMEANS_ITERS,
-) -> DataFrame:
+def ivf_kmeans_centroids(embeddings: DataFrame) -> DataFrame:
     """(cell, qc) centroid frame after the FIXED Lloyd iterations — same
     result as r5, now built via :func:`ivf_kmeans_centroid_rows` (see its
     docstring for the plan-shape change and why results are bit-identical)."""
     spark = embeddings.sparkSession
-    rows = ivf_kmeans_centroid_rows(embeddings, k, stride, iters)
+    rows = ivf_kmeans_centroid_rows(embeddings)
     return spark.createDataFrame(rows, _CENTROID_SCHEMA)
 
 
@@ -360,7 +347,6 @@ def ivf_topk(
     embeddings: DataFrame,
     query_ids: tuple[int, ...] = (0, 1, 2),
     k: int = 5,
-    n_centroids: int = IVF_K,
     nprobe: int = IVF_NPROBE,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -380,7 +366,7 @@ def ivf_topk(
 
     spark = embeddings.sparkSession
     cent_rows = collect_centroids(
-        ivf_centroids(embeddings, n_centroids) if centroids is None else centroids
+        ivf_centroids(embeddings) if centroids is None else centroids
     )
     assigned = assign_cells_local(
         _quantized(_widened(embeddings)).select("vec_id", "q"), cent_rows

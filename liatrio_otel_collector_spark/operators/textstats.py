@@ -110,8 +110,8 @@ def pii_scrub(documents: DataFrame) -> DataFrame:
     )
 
 
-def repetition_stats(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Gopher-style repetition signal: the fraction of duplicate k-grams per
+def repetition_stats(documents: DataFrame) -> DataFrame:
+    """Gopher-style repetition signal: the fraction of duplicate 3-grams per
     document (docs that repeat themselves are low-quality training text;
     Rae et al. 2021 'Scaling Language Models' filter on exactly this family
     of ratios).  Pure Catalyst — transform/sequence builds the k-gram list,
@@ -123,8 +123,8 @@ def repetition_stats(documents: DataFrame, k: int = 3) -> DataFrame:
     w = F.split(F.col("text"), " ")
     grams = F.filter(
         F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(w) - k, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
+            F.sequence(F.lit(0), F.greatest(F.size(w) - 3, F.lit(0))),
+            lambda i: F.concat_ws(" ", F.slice(w, i + 1, 3)),
         ),
         lambda g: g != "",
     )

@@ -471,11 +471,11 @@ def _empty_map() -> Column:
 
 
 class _State:
-    def __init__(self, df: DataFrame, body_col: str, context: str = "log"):
+    def __init__(self, df: DataFrame, context: str = "log"):
         self.df = df
         self.context = context
-        self.body_col = body_col  # raw JSON string column pre-ParseJSON
-        self.body_parsed = "body" in df.columns and body_col != "body"
+        # the raw JSON string column pre-ParseJSON is body_raw
+        self.body_parsed = "body" in df.columns
         defaults: list[tuple[str, Column]] = [
             ("attrs", _empty_map()),
             ("resource", _empty_map()),
@@ -493,7 +493,7 @@ class _State:
                 self.df = self.df.withColumn(col, default)
 
     def body(self) -> Column:
-        return F.col("body") if self.body_parsed else F.col(self.body_col)
+        return F.col("body") if self.body_parsed else F.col("body_raw")
 
 
 def _compile_expr(e: Any, st: _State, schema: str) -> Column:
@@ -902,7 +902,6 @@ class _RecipeFrame:
 def _chain_recipe(
     columns: tuple[str, ...],
     chain: list[tuple[str, str, dict]],
-    body_col: str,
     signal: str,
 ) -> list[tuple]:
     program = extract_program(chain, signal)
@@ -911,7 +910,7 @@ def _chain_recipe(
         raise OttlError("ParseJSON compiles only in the log context")
     schema = infer_body_schema(program) if uses_pj else ""
     tree = _schema_tree(program)
-    st = _State(_RecipeFrame(columns), body_col, _SIGNALS[signal][2])
+    st = _State(_RecipeFrame(columns), _SIGNALS[signal][2])
     for stmt in program:
         _apply_statement(st, stmt, schema, tree)
     return st.df.ops
@@ -920,7 +919,6 @@ def _chain_recipe(
 def compile_chain(
     df: DataFrame,
     chain: list[tuple[str, str, dict]],
-    body_col: str = "body_raw",
     signal: str = "logs",
 ) -> DataFrame:
     """Compile a consecutive run of transform/filter processors into one
@@ -931,14 +929,14 @@ def compile_chain(
     schema inferred from LATER keep_keys informs an EARLIER ParseJSON.
 
     The compiled recipe (see :class:`_RecipeFrame`) is memoized ON the
-    SparkSession, keyed by (signal, body_col, chain config, input columns):
+    SparkSession, keyed by (signal, chain config, input columns):
     a config-driven stream re-assembling the same topology every micro-batch
     now pays the parse + py4j construction once, not per batch.  Cached
     Column objects are expression trees bound to the session's gateway, so
     the cache dies with the session (never a stale-gateway reuse), and
     caching code — not data — keeps every batch's results computed from its
     own input."""
-    key = (signal, body_col, repr(chain), tuple(df.columns))
+    key = (signal, repr(chain), tuple(df.columns))
     spark = df.sparkSession
     cache = getattr(spark, "_ottl_chain_cache", None)
     if cache is None:
@@ -946,7 +944,7 @@ def compile_chain(
         spark._ottl_chain_cache = cache
     recipe = cache.get(key)
     if recipe is None:
-        recipe = _chain_recipe(tuple(df.columns), chain, body_col, signal)
+        recipe = _chain_recipe(tuple(df.columns), chain, signal)
         cache[key] = recipe
     out = df
     for op, name, col in recipe:

@@ -145,7 +145,6 @@ def _service_name(
 
 def actions_job_spans(
     raw: DataFrame,
-    payload_col: str = "payload",
     custom_service_name: str = "",
     service_name_prefix: str = "",
     service_name_suffix: str = "",
@@ -153,7 +152,7 @@ def actions_job_spans(
     """workflow_job payload strings → parent + step spans (NO queue span —
     unlike the githubreceiver, this receiver doesn't synthesize one)."""
     ev = raw.select(
-        F.from_json(F.col(payload_col), JOB_EVENT_SCHEMA).alias("e")
+        F.from_json(F.col("payload"), JOB_EVENT_SCHEMA).alias("e")
     ).select("e.workflow_job", "e.repository", "e.sender")
     # F4: trace_receiver.go:125-128
     ev = ev.filter(F.col("workflow_job.status") == "completed")
@@ -334,16 +333,12 @@ def _convert_pr_url(url: Column) -> Column:
     return replace_first(u, "api.", "")
 
 
-def actions_run_spans(
-    raw: DataFrame,
-    payload_col: str = "payload",
-    custom_service_name: str = "",
-    service_name_prefix: str = "",
-    service_name_suffix: str = "",
-) -> DataFrame:
-    """workflow_run payload strings → one root span per completed run."""
+def actions_run_spans(raw: DataFrame) -> DataFrame:
+    """workflow_run payload strings → one root span per completed run; the
+    service name has no config override, so it is the repository's
+    ``service_name`` custom property or its formatted name."""
     ev = raw.select(
-        F.from_json(F.col(payload_col), RUN_EVENT_SCHEMA).alias("e")
+        F.from_json(F.col("payload"), RUN_EVENT_SCHEMA).alias("e")
     ).select("e.workflow_run", "e.workflow", "e.repository", "e.sender")
     # F4: trace_receiver.go:131-134
     ev = ev.filter(F.col("workflow_run.status") == "completed")
@@ -384,11 +379,7 @@ def actions_run_spans(
     ]
     base_vals = [
         _service_name(
-            F.col("repository.name"),
-            F.col("repository.custom_properties"),
-            custom_service_name,
-            service_name_prefix,
-            service_name_suffix,
+            F.col("repository.name"), F.col("repository.custom_properties"), "", "", ""
         ),
         _put(wr["actor"]["login"]),
         _put(wr["conclusion"]),
@@ -476,13 +467,9 @@ def actions_run_spans(
     ).select(*SPAN_COLS)
 
 
-def actions_webhook_spans(raw: DataFrame, event_type_col: str = "event_type", payload_col: str = "payload", **cfg) -> DataFrame:
+def actions_webhook_spans(raw: DataFrame) -> DataFrame:
     """S26-style dispatch: route raw (event_type, payload) rows to the two
     handlers; unknown event types are dropped (eventToTraces :64-67)."""
-    jobs = actions_job_spans(
-        raw.filter(F.col(event_type_col) == "workflow_job"), payload_col, **cfg
-    )
-    runs = actions_run_spans(
-        raw.filter(F.col(event_type_col) == "workflow_run"), payload_col, **cfg
-    )
+    jobs = actions_job_spans(raw.filter(F.col("event_type") == "workflow_job"))
+    runs = actions_run_spans(raw.filter(F.col("event_type") == "workflow_run"))
     return jobs.unionByName(runs)

@@ -115,8 +115,9 @@ def _repo_attrs(r: Column) -> list[tuple[str, Column]]:
     ]
 
 
-def parse_ado_events(raw: DataFrame, body_col: str = "body_raw") -> DataFrame:
-    """S26: extract eventType and typed payload from raw webhook JSON.
+def parse_ado_events(raw: DataFrame) -> DataFrame:
+    """S26: extract eventType and typed payload from the raw webhook JSON in
+    ``body_raw``.
 
     The parsed struct is materialized ONCE behind an optimizer barrier
     (guide §1.2 "don't compute things twice" / §7.3 planning cost).  Without
@@ -134,7 +135,7 @@ def parse_ado_events(raw: DataFrame, body_col: str = "body_raw") -> DataFrame:
     parsed batch to executor-local storage — the same bytes a shuffle of the
     typed payload would write."""
     spark = raw.sparkSession
-    parsed = raw.withColumn("e", F.from_json(F.col(body_col), ADO_EVENT_SCHEMA)).filter(
+    parsed = raw.withColumn("e", F.from_json(F.col("body_raw"), ADO_EVENT_SCHEMA)).filter(
         F.col("e.eventType").isin(EVENT_RUN, EVENT_STAGE, EVENT_JOB)
     )
     return (
@@ -268,9 +269,9 @@ def ado_job_spans(events: DataFrame, gate: bool = True) -> DataFrame:
     )
 
 
-def ado_trace_pipeline(raw: DataFrame, body_col: str = "body_raw", gate: bool = True) -> DataFrame:
+def ado_trace_pipeline(raw: DataFrame, gate: bool = True) -> DataFrame:
     """Full S26 router: parse → dispatch → completed gate → span union."""
-    events = parse_ado_events(raw, body_col)
+    events = parse_ado_events(raw)
     return (
         ado_pipeline_run_spans(events, gate=gate)
         .unionByName(ado_stage_spans(events, gate=gate))

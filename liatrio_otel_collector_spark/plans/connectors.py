@@ -39,22 +39,18 @@ def count_connector(
     return spans.groupBy(*dims).agg(F.count(F.lit(1)).alias("span_count"))
 
 
-def spanmetrics_connector(
-    spans: DataFrame,
-    duration_col: str = "duration_ms",
-    bounds_ms: tuple[int, ...] = DEFAULT_BOUNDS_MS,
-) -> DataFrame:
+def spanmetrics_connector(spans: DataFrame) -> DataFrame:
     """spanmetricsconnector: calls + duration sum + cumulative histogram per
     (service_name, span_name, status_code).
 
-    Input needs columns: service_name, span_name, status_code, and an exact
-    integer duration column.  Histogram columns le_<bound> hold cumulative
+    Input needs columns: service_name, span_name, status_code, and the exact
+    integer duration_ms.  Histogram columns le_<bound> hold cumulative
     counts (``duration <= bound``); calls doubles as the +Inf bucket.
     """
-    dur: Column = F.col(duration_col)
+    dur: Column = F.col("duration_ms")
     les = [
         F.sum(F.when(dur <= b, 1).otherwise(0)).cast("bigint").alias(f"le_{b}")
-        for b in bounds_ms
+        for b in DEFAULT_BOUNDS_MS
     ]
     return spans.groupBy("service_name", "span_name", "status_code").agg(
         F.count(F.lit(1)).alias("calls"),

@@ -72,11 +72,11 @@ def group_by_attrs(
     )
 
 
-def group_by_trace(spans: DataFrame, trace_col: str = "trace_id") -> DataFrame:
+def group_by_trace(spans: DataFrame) -> DataFrame:
     """Emit one row per COMPLETE trace: span count, error count, distinct
     span names — the batch equivalent of groupbytraceprocessor's
     buffer-until-complete emit (bounded input = every trace is complete)."""
-    return spans.groupBy(trace_col).agg(
+    return spans.groupBy("trace_id").agg(
         F.count(F.lit(1)).alias("span_count"),
         F.sum(F.when(F.col("status_code") == 2, 1).otherwise(0))
         .cast("bigint")
@@ -88,11 +88,9 @@ def group_by_trace(spans: DataFrame, trace_col: str = "trace_id") -> DataFrame:
 def interval_last(
     metrics: DataFrame,
     identity: Sequence[str],
-    ts_col: str = "ts",
     order_tiebreak: str | None = None,
-    interval_sec: int = 60,
 ) -> DataFrame:
-    """Last datapoint per metric identity per tumbling interval
+    """Last datapoint per metric identity per 60-second tumbling interval
     (intervalprocessor: aggregate datapoints between ticks, emit the latest
     state at each tick).
 
@@ -102,14 +100,14 @@ def interval_last(
     fully deterministic.
     """
     bucket = (
-        (F.unix_timestamp(F.col(ts_col)) / interval_sec).cast("bigint") * interval_sec
+        (F.unix_timestamp(F.col("ts")) / 60).cast("bigint") * 60
     ).alias("interval_start")
-    order = [F.col(ts_col).desc()]
+    order = [F.col("ts").desc()]
     if order_tiebreak:
         order.append(F.col(order_tiebreak).desc())
     w = Window.partitionBy(*identity, "interval_start").orderBy(*order)
     return (
-        metrics.select(*identity, bucket, ts_col, *( [order_tiebreak] if order_tiebreak else [] ), "value")
+        metrics.select(*identity, bucket, "ts", *( [order_tiebreak] if order_tiebreak else [] ), "value")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(

@@ -37,11 +37,12 @@ BODY_SCHEMA = (
 LOG_COLS = ["ts", "severity_text", "body", "attrs", "resource"]
 
 
-def ottl_parse_body(logs: DataFrame, body_col: str = "body_raw") -> DataFrame:
-    """transform/body: set(log.body, ParseJSON(log.body)) where body != nil."""
+def ottl_parse_body(logs: DataFrame) -> DataFrame:
+    """transform/body: set(log.body, ParseJSON(log.body)) where body != nil,
+    the raw body read from ``body_raw``."""
     return logs.withColumn(
         "body",
-        F.when(F.col(body_col).isNotNull(), F.from_json(F.col(body_col), BODY_SCHEMA)),
+        F.when(F.col("body_raw").isNotNull(), F.from_json(F.col("body_raw"), BODY_SCHEMA)),
     )
 
 
@@ -113,11 +114,9 @@ def gitlab_enrich(logs: DataFrame, components_dim: DataFrame) -> DataFrame:
     ).drop("_repo", "_rev", "_components")
 
 
-def log_pipeline(
-    raw_logs: DataFrame, components_dim: DataFrame, body_col: str = "body_raw"
-) -> DataFrame:
+def log_pipeline(raw_logs: DataFrame, components_dim: DataFrame) -> DataFrame:
     """The full logs pipeline in config order (config.yaml:125-132)."""
-    parsed = ottl_parse_body(raw_logs, body_col)
+    parsed = ottl_parse_body(raw_logs)
     filtered = ottl_filter_pipeline_events(parsed)
     promoted = ottl_promote_attrs(filtered)
     return gitlab_enrich(promoted, components_dim)

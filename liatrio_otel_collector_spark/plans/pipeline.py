@@ -31,7 +31,10 @@ Scale notes (the part that matters at 10^12 rows):
   (:func:`flagship_stage`) and the config topology's
   (``confmap.config_stages``), in batch mode and in every streaming
   micro-batch.  It stages each frame once, runs :func:`fan_out` on it and
-  writes the batch's one ``_metrics`` row (:func:`write_metrics`).
+  writes the batch's one ``_metrics`` row (:func:`write_metrics`).  Sinks
+  take ``PipelineConfig.sink_format`` (:data:`SINK_FORMAT`, parquet, unless
+  set, as the Iceberg fan-out does); the staging tables live under
+  :func:`scratch_dir`.
 - aggregates are plain groupBy — Spark's partial (map-side) aggregation is
   the analog of the reference's mutex-merged per-goroutine maps
   (github_scraper.go:105-155) and makes the skewed count safe; the salted
@@ -47,7 +50,7 @@ import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager, nullcontext
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, ContextManager, Iterable, Iterator
 from urllib.parse import urlparse
 
@@ -90,29 +93,31 @@ def resolve_salt_buckets(spark: "SparkSession") -> int:
     return max(SALT_BUCKETS, 16 * spark.sparkContext.defaultParallelism)
 
 
-def sink_defaults() -> tuple[str, str | None]:
-    """(sink format, scratch dir): the one place both are resolved.  The
-    format is :class:`PipelineConfig`'s default and a config exporter's when
-    it sets no ``format:``; the scratch dir holds the ephemeral staging
-    tables and the output of a batch run without an output dir.  Order
-    matters (VERDICT r2 item: an inherited disk TMPDIR silently displacing
-    tmpfs caused the r1 bench gap):
+# the sink format of a flagship batch and of a config exporter that sets no
+# ``format:``
+SINK_FORMAT = "parquet"
+
+
+def scratch_dir() -> str | None:
+    """Where the ephemeral staging tables and the output of a batch run
+    without an output dir go.  Order matters (VERDICT r2 item: an inherited
+    disk TMPDIR silently displacing tmpfs caused the r1 bench gap):
     SPARK_GRAFT_SCRATCH > tmpfs when present > TMPDIR > system tmp."""
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH") or (
+    return os.environ.get("SPARK_GRAFT_SCRATCH") or (
         "/dev/shm" if os.path.isdir("/dev/shm") else os.environ.get("TMPDIR")
     )
-    return os.environ.get("SPARK_GRAFT_SINK_FORMAT", "parquet"), scratch
 
 
 @dataclass
 class PipelineConfig:
     """How the flagship DAG parses and where it writes.  It gates no sink:
     every batch builds and writes all five, ``logs``, ``traces``,
-    ``metrics``, ``logs_agg`` and ``traces_agg``."""
+    ``metrics``, ``logs_agg`` and ``traces_agg``, in ``sink_format``
+    (:data:`SINK_FORMAT` unless set, e.g. ``"iceberg"``)."""
 
     use_udf_parse: bool = True
     output_dir: str | None = None
-    sink_format: str = field(default_factory=lambda: sink_defaults()[0])
+    sink_format: str = SINK_FORMAT
 
 
 def parse_stage(df: DataFrame, use_udf: bool = True) -> DataFrame:
@@ -194,7 +199,6 @@ def build_pipeline(
     spark: SparkSession,
     n_rows: int,
     cfg: PipelineConfig | None = None,
-    source_df: DataFrame | None = None,
     enriched: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """The full lazy DAG over ``enriched`` (:func:`build_enriched` when not
@@ -207,7 +211,7 @@ def build_pipeline(
     the groupBy rollups (SURVEY §2.4): map-side partial → shuffle → final."""
     cfg = cfg or PipelineConfig()
     if enriched is None:
-        enriched = build_enriched(spark, n_rows, cfg, source_df)
+        enriched = build_enriched(spark, n_rows, cfg)
     preds = route_predicates()
     logs = enriched.filter(preds["logs"])
     traces = (
@@ -236,8 +240,8 @@ def batch_dir(root: str, name: str, batch_id: int) -> str:
 
 @contextmanager
 def scratch(prefix: str) -> Iterator[str]:
-    """A new directory under :func:`sink_defaults`' scratch dir, removed on exit."""
-    path = tempfile.mkdtemp(prefix=prefix, dir=sink_defaults()[1])
+    """A new directory under :func:`scratch_dir`, removed on exit."""
+    path = tempfile.mkdtemp(prefix=prefix, dir=scratch_dir())
     try:
         yield path
     finally:

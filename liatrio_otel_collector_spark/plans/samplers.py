@@ -19,27 +19,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def sample_key(trace_id: Column, buckets: int = 10_000) -> Column:
-    """Deterministic sampling bucket in [0, buckets): md5-hex prefix as int."""
-    return F.conv(F.substring(F.md5(trace_id), 1, 8), 16, 10).cast("bigint") % buckets
+def sample_key(trace_id: Column) -> Column:
+    """Deterministic sampling bucket in [0, 10 000): md5-hex prefix as int."""
+    return F.conv(F.substring(F.md5(trace_id), 1, 8), 16, 10).cast("bigint") % 10_000
 
 
-def probabilistic_sample(
-    spans: DataFrame, percent: float = 25.0, trace_col: str = "trace_id"
-) -> DataFrame:
+def probabilistic_sample(spans: DataFrame, percent: float = 25.0) -> DataFrame:
     """Keep spans whose trace falls in the sampled fraction (consistent:
     whole traces survive or drop together)."""
     threshold = int(percent * 100)  # buckets = 10_000 => basis points
-    return spans.filter(sample_key(F.col(trace_col)) < threshold)
+    return spans.filter(sample_key(F.col("trace_id")) < threshold)
 
 
-def tail_sample_errors(
-    spans: DataFrame, trace_col: str = "trace_id", status_col: str = "status_code"
-) -> DataFrame:
-    """Keep every span of traces containing >= 1 ERROR (status 2) span."""
+def tail_sample_errors(spans: DataFrame) -> DataFrame:
+    """Keep every span of traces containing >= 1 ERROR (status_code 2) span."""
     bad = (
-        spans.filter(F.col(status_col) == 2)
-        .select(F.col(trace_col).alias("_t"))
+        spans.filter(F.col("status_code") == 2)
+        .select(F.col("trace_id").alias("_t"))
         .distinct()
     )
-    return spans.join(bad, spans[trace_col] == F.col("_t"), "left_semi")
+    return spans.join(bad, spans["trace_id"] == F.col("_t"), "left_semi")

@@ -16,7 +16,10 @@ the reference's quirks:
   expected_happy_path.yaml's vcs.change.duration datapoint);
 - resource attrs stamped at emit (:256-262): organization.name +
   vcs.vendor.name;
-- per-metric enable flags (metadata.yaml defaults: contributor.count OFF).
+- metadata.yaml's default metric set: the github scraper never emits
+  vcs.contributor.count (default OFF; driver query a10 computes A10 with
+  operators/aggregates.contributor_count), the ADO scraper takes its
+  enabled set.
 """
 
 from __future__ import annotations
@@ -70,7 +73,6 @@ def github_scrape_metrics(
     cve_alerts: DataFrame,
     org: str,
     now: str,
-    enable_contributor_count: bool = False,
 ) -> DataFrame:
     """One scrape() snapshot → long-format metric datapoints.
 
@@ -80,7 +82,7 @@ def github_scrape_metrics(
     - branches.base_ref = the repo default branch (F1 upstream-filtered).
     """
     now_ts = F.to_timestamp(F.lit(now))
-    repo_attrs = lambda extra=(): _attrs(  # noqa: E731
+    repo_attrs = lambda extra: _attrs(  # noqa: E731
         *extra,
         ("vcs.repository.name", F.col("repo_name")),
         ("vcs.repository.url.full", F.col("url")),
@@ -210,19 +212,6 @@ def github_scrape_metrics(
             repo_attrs(head_attrs),
         )
     )
-
-    # A10 vcs.contributor.count — metadata.yaml default OFF (config gate)
-    if enable_contributor_count:
-        parts.append(
-            _emit(
-                commits.groupBy("repo_name", "url").agg(
-                    F.countDistinct("author_id").alias("n")
-                ),
-                "vcs.contributor.count",
-                F.col("n"),
-                repo_attrs(),
-            )
-        )
 
     # A11 vcs.cve.count (U1 union upstream, severity map X5, :213-221)
     cves = (

@@ -339,11 +339,10 @@ coverage AS (
 # ---------------------------------------------------------------------------
 
 
-def ci_lines(t: dict[str, DataFrame], spark=None) -> DataFrame:
+def ci_lines(t: dict[str, DataFrame]) -> DataFrame:
     from pyspark.sql import SparkSession
 
-    s = spark or SparkSession.getActiveSession()
-    base = s.range(200)
+    base = SparkSession.getActiveSession().range(200)
     comp = base.selectExpr(
         "concat('group/proj-', id) AS project_path",
         "concat('  - component: gitlab.com/comps/name-', id % 7, '/tmpl@1.', id % 3) AS line",

@@ -78,11 +78,11 @@ END
 """
 
 
-def sequences(spark: SparkSession, n_rows: int, partitions: int | None = None) -> DataFrame:
+def sequences(spark: SparkSession, n_rows: int) -> DataFrame:
     """Materialize the sequences table as a lazy DataFrame of `n_rows` rows."""
-    df = spark.range(0, n_rows, numPartitions=partitions) if partitions else spark.range(n_rows)
     return (
-        df.withColumn("n_tok", F.expr("CAST(8 + id % 57 AS INT)"))
+        spark.range(n_rows)
+        .withColumn("n_tok", F.expr("CAST(8 + id % 57 AS INT)"))
         .withColumn("tokens", F.expr(_TOKENS_EXPR))
         .withColumn("source", F.expr(_SOURCE_EXPR))
         .withColumn("doc_id", F.col("id").cast("string"))
@@ -90,10 +90,10 @@ def sequences(spark: SparkSession, n_rows: int, partitions: int | None = None) -
     )
 
 
-def duckdb_sequences_cte(n_rows: int, name: str = "sequences") -> str:
+def duckdb_sequences_cte(n_rows: int) -> str:
     """DuckDB CTE computing the identical table (oracle side)."""
     return f"""
-{name} AS (
+sequences AS (
   SELECT
     CAST(r AS VARCHAR) AS doc_id,
     list_transform(
@@ -129,9 +129,9 @@ def enrich_dim(spark: SparkSession) -> DataFrame:
     )
 
 
-def duckdb_enrich_dim_cte(name: str = "enrich_dim") -> str:
-    return f"""
-{name} AS (
+def duckdb_enrich_dim_cte() -> str:
+    return """
+enrich_dim AS (
   SELECT
     'svc-' || CAST(r AS VARCHAR) AS resource,
     'team-' || CAST(r % 5 AS VARCHAR) AS team,

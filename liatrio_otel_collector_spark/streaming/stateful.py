@@ -121,17 +121,11 @@ def group_traces_stream(stream: DataFrame, wait_duration_ms: int = 60_000) -> Da
     )
 
 
-def interval_last_stream(
-    stream: DataFrame,
-    identity: tuple[str, ...] = ("user_id", "event_type"),
-    ts_col: str = "event_ts",
-    value_col: str = "value",
-    watermark: str = "10 minutes",
-    interval: str = "60 seconds",
-) -> DataFrame:
+def interval_last_stream(stream: DataFrame) -> DataFrame:
     """Streaming twin of plans/grouping.py::interval_last (the
-    intervalprocessor): the LAST datapoint per metric identity per tumbling
-    interval, emitted when the watermark closes the window.  ``max_by``
+    intervalprocessor): the LAST ``value`` per metric identity
+    ``(user_id, event_type)`` per 60-second tumbling window of ``event_ts``,
+    emitted when the 10-minute watermark closes the window.  ``max_by``
     keeps the latest value without any row_number (unsupported in
     streaming); state is one (ts, value) pair per open (identity, window) —
     bounded by the watermark, exactly the processor's interval buffer.
@@ -141,12 +135,13 @@ def interval_last_stream(
     ``last_ts`` always come from the same row even under timestamp ties,
     matching the batch twin interval_last's explicit tiebreak (advice r3:
     separate max_by(value, ts) + max(ts) could mix rows on equal ts)."""
+    identity = ("user_id", "event_type")
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), interval).alias("w"), *identity)
+        stream.withWatermark("event_ts", "10 minutes")
+        .groupBy(F.window(F.col("event_ts"), "60 seconds").alias("w"), *identity)
         .agg(
             F.max(
-                F.struct(F.col(ts_col).alias("ts"), F.col(value_col).alias("v"))
+                F.struct(F.col("event_ts").alias("ts"), F.col("value").alias("v"))
             ).alias("_last")
         )
         .select(

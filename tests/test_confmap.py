@@ -216,6 +216,59 @@ service:
         assemble(spark, cfg, AssembleContext(sf_dir=SF))
 
 
+@pytest.mark.parametrize(
+    "rtype, scraper", [("github", "scraper"), ("gitlab", "gitlab"), ("azuredevops", "azuredevops")]
+)
+def test_null_scrapers_read_as_absent(spark, rtype, scraper):
+    """A scraper receiver whose `scrapers:` (or scraper) is null assembles
+    like one that leaves it out: the org falls back to its default."""
+    cfg = load_config(
+        f"""
+receivers:
+  {rtype}:
+    scrapers:
+  {rtype}/named:
+    scrapers:
+      {scraper}:
+exporters:
+  debug: {{}}
+service:
+  pipelines:
+    metrics:
+      receivers: [{rtype}, {rtype}/named]
+      processors: []
+      exporters: [debug]
+"""
+    )
+    assert cfg.receivers[rtype]["scrapers"] == {}
+    df = assemble(spark, cfg, AssembleContext(sf_dir=SF))["metrics"]
+    orgs = {r[0] for r in df.select(df["resource"]["organization.name"]).distinct().collect()}
+    assert orgs == {"org"}
+
+
+def test_groupbyattrs_needs_fallback(spark):
+    cfg = load_config(
+        """
+receivers:
+  webhookevent: {}
+processors:
+  groupbyattrs:
+    keys: [k]
+exporters:
+  debug: {}
+service:
+  pipelines:
+    logs:
+      receivers: [webhookevent]
+      processors: [groupbyattrs]
+      exporters: [debug]
+"""
+    )
+    frame = spark.createDataFrame([("a",)], "k string")
+    with pytest.raises(ConfigError, match="groupbyattrs.*fallback"):
+        assemble(spark, cfg, AssembleContext(frames={"webhookevent": frame}))
+
+
 def test_logs_pipeline_output_matches_direct_plan(spark):
     cfg = load_config(REFERENCE_TOPOLOGY)
     ctx, raw_logs, dim = _ctx(spark)

@@ -231,8 +231,7 @@ def test_interval_last_single_shuffle(spark):
 
     events = load_table(spark, SF, "events")
     df = interval_last(
-        events, identity=("user_id", "event_type"), ts_col="ts",
-        order_tiebreak="event_id", interval_sec=60,
+        events, identity=("user_id", "event_type"), order_tiebreak="event_id"
     )
     plan = _plan(df)
     assert plan.count("Exchange hashpartitioning") == 1, plan
